@@ -98,12 +98,12 @@ object Catalog {
       * reads it natively as TimestampNTZType.
       */
     case object Native extends TsUnit
-    /** INT64 TIMESTAMP(MICROS|MILLIS, isAdjustedToUTC=true) — Spark 4
-      * refuses to read an adjusted-UTC column under a requested NTZ
-      * schema, so this variant is read as TimestampType directly (no
-      * NTZ read + cast). No fixture has shipped adjusted yet; the
-      * branch exists so a regeneration that flips the flag loads
-      * instead of failing.
+    /** INT64 TIMESTAMP(MICROS|MILLIS, isAdjustedToUTC=true), or INT96
+      * (Spark's default `outputTimestampType`) — Spark 4 refuses to
+      * read either under a requested NTZ schema, so this variant is read
+      * as TimestampType directly (no NTZ read + cast). No fixture has
+      * shipped adjusted yet; the branch exists so a regeneration that
+      * flips the flag or the encoding loads instead of failing.
       */
     case object NativeAdjusted extends TsUnit
     /** INT64 TIMESTAMP(NANOS) or unannotated INT64 nano-epoch — Spark 4's
@@ -148,6 +148,7 @@ object Catalog {
       import org.apache.parquet.hadoop.ParquetFileReader
       import org.apache.parquet.hadoop.util.HadoopInputFile
       import org.apache.parquet.schema.LogicalTypeAnnotation
+      import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
       val conf = spark.sessionState.newHadoopConf()
       val file = firstEventsDataFile(spark, dir)
       val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
@@ -155,6 +156,11 @@ object Catalog {
         val schema = reader.getFooter.getFileMetaData.getSchema
         val tsField = schema.getType(schema.getFieldIndex("ts"))
         tsField.getLogicalTypeAnnotation match {
+          // INT96 (Spark's default timestamp encoding) carries no
+          // annotation; Spark reads it natively as TimestampType
+          case _ if tsField.isPrimitive && tsField.asPrimitiveType
+              .getPrimitiveTypeName == PrimitiveTypeName.INT96 =>
+            TsUnit.NativeAdjusted
           case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
               if t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS =>
             TsUnit.Nanos

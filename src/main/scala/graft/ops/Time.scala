@@ -126,6 +126,23 @@ object Time {
     */
   private[graft] var VectorFillMaxBuckets: Long = 1L << 22
 
+  /** Aggregate one series' bucketed values into its dense filled grid
+    * of `nBuckets` slots starting at `start` (the codegen'd
+    * [[graft.functions.FillGrid]] over the sorted (pos, value) entries).
+    * Shared by the resample core (one grid for the whole range) and
+    * [[graft.pipeline.Flagship.runDailyExport]] (one grid per day, so
+    * `start` is a column). Pos arithmetic is exact: buckets are
+    * start-aligned step multiples and the double division is exact
+    * below 2^53.
+    */
+  private[graft] def fillVector(bucket: Column, start: Column, step: Long,
+                                nBuckets: Long, value: Column,
+                                backward: Boolean = false): Column =
+    call_function("fill_grid",
+      array_sort(collect_list(struct(
+        ((bucket - start) / step).cast("int").as("p"), value.as("v")))),
+      lit(nBuckets.toInt), lit(backward))
+
   /** The shared resample body behind [[resampleFfill]] (epoch-second
     * buckets) and [[resampleFfillMs]] (epoch-milli buckets): tick
     * filter, bucket aggregate, gap fill — parameterized by the
@@ -199,19 +216,15 @@ object Time {
     cachedPanels.add(bucketed)
     val filled = if (nBuckets <= VectorFillMaxBuckets) {
       // in-array fill: one per-series aggregation, no grid join, no
-      // window sort. pos arithmetic is exact (bucket is a start-aligned
-      // step multiple; the double division is exact below 2^53).
-      val entries = array_sort(collect_list(struct(
-        ((col("bucket") - start) / step).cast("int").as("p"),
-        col(valueCol).as("v"))))
+      // window sort.
       // cache the k VECTOR rows, not the k×B exploded cells: the cache
       // build (columnar materialization) then scales with the series
       // count, and each consumer pays only a codegen'd posexplode per
       // scan — measured another ~0.3 s off the a3c panel build at
       // sf0.1 vs caching the exploded rows
       val vecs = sized(bucketed.groupBy(col(keyCol))
-        .agg(call_function("fill_grid", entries, lit(nBuckets.toInt),
-          lit(backward)).as("vs")), 4000000L)
+        .agg(fillVector(col("bucket"), lit(start), step, nBuckets,
+          col(valueCol), backward).as("vs")), 4000000L)
         .cache()
       cachedPanels.add(vecs)
       vecs.select(col(keyCol), posexplode(col("vs")))

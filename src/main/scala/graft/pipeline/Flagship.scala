@@ -72,70 +72,122 @@ object Flagship {
   def chunksDropTail[T](xs: Seq[T], n: Int): Seq[Seq[T]] =
     xs.grouped(n).filter(_.size == n).toSeq
 
-  /** The reference's daily resample-export loop (taq_chunks.py:112-147):
-    * each listed day's panel is resampled + forward-filled INDEPENDENTLY
-    * (no value carries across days; a day's buckets before its first
-    * tick stay empty — exactly the per-day query the reference issues
-    * per iteration) and written as ONE gzip CSV at the reference's
+  /** The reference's daily resample-export loop (taq_chunks.py:112-147)
+    * as ONE span-wide pass. Each listed day's panel is resampled and
+    * forward-filled INDEPENDENTLY — no value carries across days, a
+    * day's buckets before its first tick stay empty, and a day's key set
+    * is only the series that ticked that day, exactly the per-day query
+    * the reference issues per iteration — and written as ONE gzip CSV
+    * (header, rows ordered by (bucket, user_id)) at the reference's
     * literal artifact path, `outDir/{year}/{month:02d}/
-    * taq_resampled_{yyyy-MM-dd}.csv.gz` (taq_chunks.py:136-142). Days
-    * with no ticks are skipped (`ok = true, rows = 0`, no file —
-    * taq_chunks.py:131-134's skip-empty), failures recorded per day
-    * under the same never-throw contract as [[run]].
+    * taq_resampled_{yyyy-MM-dd}.csv.gz` (taq_chunks.py:136-142).
     *
-    * Single-file-per-day is the downstream consumer contract (as with
-    * [[Sinks.writeWindowCsv]]); the at-scale form of this computation is
-    * one span-wide job with the day as a derived column and one
-    * partitioned write (e1_flagship's shape) — FlagshipSpec grades this
-    * loop's files byte-for-byte against exactly that single query.
+    * Shape: the events table is scanned once for the whole span
+    * (`user_id < maxUsers`, ticks on listed days only), bucket-averaged
+    * ([[Exact.davg]]), and grouped by (day, user_id) into one filled
+    * vector per series-day over that day's own grid
+    * ([[Time.fillVector]]). Those vector rows are cached; each day's row
+    * count (series × buckets) comes from them. One write job then
+    * range-partitions the rows by day — one day per task — sorts each
+    * task by (day, bucket, user_id) and writes gzip CSV partitioned by
+    * day into a staging dir under `outDir`; each day's single part file
+    * is then moved to its artifact path. FlagshipSpec grades the files
+    * byte-for-byte against a span-wide window query.
+    *
+    * Failure contract (never throws, like [[run]]):
+    *  - a grid step that does not divide a day fails every day up front;
+    *  - a failure of the shared pass (missing source, bad schema, write
+    *    failure) fails every day;
+    *  - a failed move fails only its own day;
+    *  - a day with no ticks is `ok = true, rows = 0` and writes no file
+    *    (taq_chunks.py:131-134's skip-empty);
+    *  - the staging dir is removed on every path, so no debris is left
+    *    in the artifact tree a consumer globs recursively.
     */
   def runDailyExport(spark: SparkSession, sfDir: String, outDir: String,
                      days: Seq[LocalDate], freqSec: Long,
                      maxUsers: Int): Seq[WindowResult] = {
-    import java.nio.file.{Files, Paths}
-    days.map { day =>
-      val ws = day.atStartOfDay.toEpochSecond(java.time.ZoneOffset.UTC)
-      val we = ws + 86400L
-      Try {
-        val ticks = Catalog.load(spark, sfDir, "events")
-          .where(col("user_id") < maxUsers)
-        val filled = Time.resampleFfill(spark, ticks, "user_id", "ts",
-          "value", ws, we, freqSec, Exact.davg(col("value")))
-        try {
-          val monthDir = f"$outDir/${day.getYear}/${day.getMonthValue}%02d"
-          val target = s"$monthDir/taq_resampled_$day.csv.gz"
-          val tmp = s"$outDir/_tmp_$day"
-          val n = filled.count()
-          if (n == 0) WindowResult(ws, we, ok = true, 0, "", "")
-          else try {
-            filled.orderBy("bucket", "user_id").coalesce(1)
-              .write.mode("overwrite").option("header", "true")
-              .option("compression", "gzip").csv(tmp)
-            Files.createDirectories(Paths.get(monthDir))
-            val part = new java.io.File(tmp).listFiles()
-              .filter(_.getName.endsWith(".csv.gz")).head
-            Files.move(part.toPath, Paths.get(target),
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-            WindowResult(ws, we, ok = true, n, target, "")
-          } finally {
-            // failed/partial staging (including Spark's nested
-            // _temporary dirs) must not leave debris inside the
-            // artifact tree a consumer globs recursively; swallow
-            // cleanup errors so they can never mask the real failure
-            try {
-              val t = Paths.get(tmp)
-              if (Files.exists(t))
-                Files.walk(t)
-                  .sorted(java.util.Comparator.reverseOrder())
-                  .forEach(f => { Files.deleteIfExists(f); () })
-            } catch { case _: Throwable => () }
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    def result(day: LocalDate, ok: Boolean, rows: Long, path: String,
+               error: String) = {
+      val ws = day.toEpochDay * 86400L
+      WindowResult(ws, ws + 86400L, ok, rows, path, error)
+    }
+    def failedAll(error: String) =
+      days.map(d => result(d, ok = false, 0, "", error))
+    if (freqSec <= 0 || 86400L % freqSec != 0)
+      return failedAll(s"grid step ${freqSec}s does not divide a day " +
+        "(86400 s): each day's grid must start at its midnight")
+    if (days.isEmpty) return Nil
+    val epochDays = days.map(_.toEpochDay).distinct.sorted
+    val nBuckets = 86400L / freqSec
+    val staging = Paths.get(s"$outDir/_tmp_daily_export")
+    val pass = Try {
+      val bucketed = Catalog.load(spark, sfDir, "events")
+        .where(col("user_id") < maxUsers &&
+          col("ts") >= timestamp_seconds(lit(epochDays.head * 86400L)) &&
+          col("ts") < timestamp_seconds(lit((epochDays.last + 1) * 86400L)))
+        .groupBy(Time.bucketSec(col("ts"), freqSec).as("bucket"),
+          col("user_id"))
+        .agg(Exact.davg(col("value")).as("value"))
+        .withColumn("day", floor(col("bucket") / 86400L))
+        .where(col("day").isInCollection(epochDays))
+      val vecs = bucketed.groupBy("day", "user_id")
+        .agg(Time.fillVector(col("bucket"), col("day") * 86400L, freqSec,
+          nBuckets, col("value")).as("vs"))
+        .cache()
+      try {
+        val series = vecs.groupBy("day").count().collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+        if (series.nonEmpty)
+          vecs.repartitionByRange(series.size, col("day"))
+            .select(col("day"), col("user_id"), posexplode(col("vs")))
+            .select((col("day") * 86400L + col("pos") * freqSec).as("bucket"),
+              col("user_id"), col("col").as("value"), col("day"))
+            .sortWithinPartitions("day", "bucket", "user_id")
+            .write.mode("overwrite").partitionBy("day")
+            .option("header", "true").option("compression", "gzip")
+            .csv(staging.toString)
+        series
+      } finally vecs.unpersist()
+    }
+    try pass match {
+      case Failure(e) => failedAll(String.valueOf(e.getMessage))
+      case Success(series) =>
+        // per distinct day: a day listed twice moves its file once
+        val byDay = days.distinct.map { day =>
+          day -> series.get(day.toEpochDay).fold(
+            result(day, ok = true, 0, "", "")) { k =>
+            Try {
+              val monthDir = f"$outDir/${day.getYear}/${day.getMonthValue}%02d"
+              val target = s"$monthDir/taq_resampled_$day.csv.gz"
+              val part = Option(staging.resolve(s"day=${day.toEpochDay}")
+                  .toFile.listFiles())
+                .flatMap(_.find(_.getName.endsWith(".csv.gz")))
+                .getOrElse(throw new java.io.FileNotFoundException(
+                  s"no staged part file for $day"))
+              Files.createDirectories(Paths.get(monthDir))
+              Files.move(part.toPath, Paths.get(target),
+                StandardCopyOption.REPLACE_EXISTING)
+              result(day, ok = true, k * nBuckets, target, "")
+            } match {
+              case Success(r) => r
+              case Failure(e) =>
+                result(day, ok = false, 0, "", String.valueOf(e.getMessage))
+            }
           }
-        } finally Time.unpersistPanels()
-      } match {
-        case Success(r) => r
-        case Failure(e) =>
-          WindowResult(ws, we, ok = false, 0, "", String.valueOf(e.getMessage))
-      }
+        }.toMap
+        days.map(byDay)
+    } finally {
+      // failed/partial staging (including Spark's nested _temporary
+      // dirs) must not leave debris inside the artifact tree; swallow
+      // cleanup errors so they can never mask the real outcome
+      try {
+        if (Files.exists(staging))
+          Files.walk(staging)
+            .sorted(java.util.Comparator.reverseOrder())
+            .forEach(f => { Files.deleteIfExists(f); () })
+      } catch { case _: Throwable => () }
     }
   }
 

@@ -135,6 +135,34 @@ class CatalogSpec extends SparkTestBase {
     } finally { src.unpersist(); () }
   }
 
+  test("INT96 fixture classifies NativeAdjusted and round-trips values") {
+    // Spark's default outputTimestampType: an unannotated INT96 `ts`.
+    // Classified by its primitive type, not sent to the raw-nanos
+    // branch (whose INT64 read schema fails every scan with
+    // PARQUET_COLUMN_DATA_TYPE_MISMATCH).
+    val fx = scratchDir("graft_int96_fx_")
+    val src = Catalog.load(spark, sfDir, "events").limit(1000).cache()
+    val key = "spark.sql.parquet.outputTimestampType"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "INT96")
+    try src.write.mode("overwrite").parquet(s"$fx/events.parquet")
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    try {
+      assert(Catalog.eventsTsUnit(spark, fx) ==
+        Catalog.TsUnit.NativeAdjusted)
+      def rows(df: org.apache.spark.sql.DataFrame) = df
+        .select(col("event_id"), unix_micros(col("ts")))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+      val expected = rows(src)
+      val got = rows(Catalog.load(spark, fx, "events"))
+      assert(got.nonEmpty && got == expected,
+        s"INT96 decode drift: ${got.size} rows, first diff " +
+          got.zip(expected).find(p => p._1 != p._2))
+      assert(Catalog.load(spark, fx, "events").schema("ts").dataType ==
+        org.apache.spark.sql.types.TimestampType)
+    } finally { src.unpersist(); () }
+  }
+
   test("ts is exposed as TimestampType to every consumer") {
     val dt = Catalog.load(spark, sfDir, "events").schema("ts").dataType
     assert(dt == org.apache.spark.sql.types.TimestampType)

@@ -238,6 +238,143 @@ class FlagshipSpec extends SparkTestBase {
       v.isEmpty && b >= days(1).toEpochDay * 86400L })
   }
 
+  /** Every file and dir under `dir`, relative to it. */
+  private def tree(dir: String): Set[String] = {
+    val root = java.nio.file.Paths.get(dir)
+    if (!java.nio.file.Files.exists(root)) Set.empty
+    else {
+      val s = java.nio.file.Files.walk(root)
+      try s.toArray.map(p => root.relativize(
+          p.asInstanceOf[java.nio.file.Path]).toString)
+        .filter(_.nonEmpty).toSet
+      finally s.close()
+    }
+  }
+
+  private def gunzip(path: String): String = {
+    val in = new java.util.zip.GZIPInputStream(
+      java.nio.file.Files.newInputStream(java.nio.file.Paths.get(path)))
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
+  }
+
+  /** sf0.001's events (ticks on 2024-01-01..30) shifted 7 days later so
+    * the ticks cross into February, with every 2024-01-31 tick removed:
+    * a business day with no ticks between two that have them.
+    */
+  private lazy val shiftedFixture: String = {
+    val fx = scratchDir("graft_daily_fx_")
+    graft.Catalog.load(spark, "/root/testdata/sf0.001", "events")
+      .withColumn("ts", col("ts") + expr("INTERVAL 7 DAYS"))
+      .where(to_date(col("ts")) =!= lit("2024-01-31").cast("date"))
+      .withColumn("ts", col("ts").cast("timestamp_ntz"))
+      .write.mode("overwrite").parquet(s"$fx/events.parquet")
+    fx
+  }
+
+  private val crossMonthDays = Flagship.businessDays(
+    LocalDate.of(2024, 1, 30), LocalDate.of(2024, 2, 2))
+
+  test("daily export: a no-tick business day mid-list is ok with 0 rows " +
+    "and writes no file") {
+    val out = scratchDir("graft_daily_gap_")
+    val res = Flagship.runDailyExport(spark, shiftedFixture, out,
+      crossMonthDays, 600, 5)
+    assert(res.map(_.winStart) ==
+      crossMonthDays.map(_.toEpochDay * 86400L))
+    assert(res.forall(_.ok), res.filterNot(_.ok).map(_.error).mkString(";"))
+    val gap = res(1)
+    assert(gap.rows == 0 && gap.path == "")
+    assert(Seq(res(0), res(2), res(3)).forall(r =>
+      r.rows > 0 && r.rows % 144 == 0 && new java.io.File(r.path).isFile))
+    assert(!tree(out).exists(_.contains("2024-01-31")))
+  }
+
+  test("daily export: days crossing a month boundary land in two " +
+    "{year}/{month} dirs, rows ordered by (bucket, user_id)") {
+    val out = scratchDir("graft_daily_month_")
+    val res = Flagship.runDailyExport(spark, shiftedFixture, out,
+      crossMonthDays, 600, 5)
+    assert(res.forall(_.ok), res.filterNot(_.ok).map(_.error).mkString(";"))
+    assert(tree(out) == Set("2024", "2024/01", "2024/02",
+      "2024/01/taq_resampled_2024-01-30.csv.gz",
+      "2024/02/taq_resampled_2024-02-01.csv.gz",
+      "2024/02/taq_resampled_2024-02-02.csv.gz"))
+    res.filter(_.rows > 0).foreach { r =>
+      val lines = gunzip(r.path).linesIterator.toVector
+      assert(lines.head == "bucket,user_id,value")
+      val keys = lines.tail.map { l =>
+        val f = l.split(",", -1); (f(0).toLong, f(1).toLong)
+      }
+      assert(keys.size == r.rows)
+      assert(keys.forall { case (b, _) => b >= r.winStart && b < r.winEnd })
+      assert(keys.zip(keys.tail).forall { case ((b0, u0), (b1, u1)) =>
+        b0 < b1 || (b0 == b1 && u0 < u1) }, s"${r.path} is not ordered")
+    }
+  }
+
+  test("daily export rejects a grid step that does not divide a day") {
+    val out = scratchDir("graft_daily_step_")
+    val days = Flagship.businessDays(LocalDate.of(2024, 1, 2),
+      LocalDate.of(2024, 1, 12))
+    // a 7 s grid: some day starts are multiples of 7, most are not — the
+    // step is rejected up front for every day, never per day by accident
+    Seq(7L, 0L, -600L).foreach { step =>
+      val res = Flagship.runDailyExport(spark, "/root/testdata/sf0.001",
+        out, days, step, 5)
+      assert(res.size == days.size)
+      assert(res.forall(r => !r.ok && r.rows == 0 &&
+        r.error.contains("does not divide a day")), res.map(_.error))
+    }
+    assert(tree(out).isEmpty)
+  }
+
+  test("daily export records a missing fixture as every day failed") {
+    val out = scratchDir("graft_daily_missing_")
+    val days = Flagship.businessDays(LocalDate.of(2024, 1, 2),
+      LocalDate.of(2024, 1, 5))
+    val res = Flagship.runDailyExport(spark, "/nonexistent_fixture_dir",
+      out, days, 600, 5)
+    assert(res.size == days.size)
+    assert(res.forall(r => !r.ok && r.error.nonEmpty && r.rows == 0))
+    assert(tree(out).isEmpty)
+  }
+
+  test("daily export leaves no staging entries in outDir") {
+    val out = scratchDir("graft_daily_staging_")
+    val days = Flagship.businessDays(LocalDate.of(2024, 1, 25),
+      LocalDate.of(2024, 2, 1))
+    val res = Flagship.runDailyExport(spark, "/root/testdata/sf0.001",
+      out, days, 600, 5)
+    assert(res.forall(_.ok), res.filterNot(_.ok).map(_.error).mkString(";"))
+    assert(res.count(_.rows > 0) == 4) // ticks end on 2024-01-30
+    val entries = tree(out)
+    assert(entries.nonEmpty && !entries.exists(e =>
+      e.split('/').exists(p => p.startsWith("_") || p.startsWith("."))),
+      entries.toSeq.sorted.mkString(", "))
+  }
+
+  test("daily export files are byte-identical at 1 and 8 shuffle " +
+    "partitions") {
+    val days = Flagship.businessDays(LocalDate.of(2024, 1, 2),
+      LocalDate.of(2024, 1, 19))
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.getOption(key)
+    def exportAt(parts: Int): Map[String, String] = {
+      val out = scratchDir(s"graft_daily_p${parts}_")
+      spark.conf.set(key, parts.toString)
+      val res = try Flagship.runDailyExport(spark, "/root/testdata/sf0.001",
+        out, days, 300, 8)
+      finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      assert(res.forall(r => r.ok && r.rows > 0),
+        res.filterNot(_.ok).map(_.error).mkString(";"))
+      res.map(r => r.path.stripPrefix(out) -> gunzip(r.path)).toMap
+    }
+    val one = exportAt(1)
+    val eight = exportAt(8)
+    assert(one.size == days.size)
+    assert(one == eight)
+  }
+
   test("run records failures per window and never throws (§2.11)") {
     val out = scratchDir("graft_flagf_")
     val open = graft.SparkEntry.sec("2024-01-02T09:30:00")
