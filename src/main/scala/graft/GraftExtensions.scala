@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Add, BloomFilterMightContain, Cast, Divide, Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType}
 import graft.functions.WinnowFingerprint
 
 /** The engine's SQL surface extension, installed via
@@ -120,10 +120,18 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (args: Seq[Expression]) => {
         require(args.length == 2,
           "bpe_tokens(word, merges) takes 2 arguments")
-        require(args(1).foldable,
+        val isMergeList = args(1).dataType match {
+          case ArrayType(ArrayType(StringType, _), _) => true
+          case _ => false
+        }
+        // type first, then the value: a NULL literal or a typed NULL
+        // must fail here, not as an NPE/ClassCastException in the cast
+        val value = if (args(1).foldable && isMergeList) args(1).eval()
+                    else null
+        require(value != null,
           "bpe_tokens: merges must be a literal array<array<string>> " +
-            "of [l, r] pairs")
-        val ad = args(1).eval()
+            s"of [l, r] pairs, got ${args(1).sql}")
+        val ad = value
           .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
         val merges = (0 until ad.numElements()).map { i =>
           val p = ad.getArray(i)
@@ -131,8 +139,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
             "bpe_tokens: each merge must be a 2-element [l, r] array")
           require(!p.isNullAt(0) && !p.isNullAt(1),
             "bpe_tokens: merge halves must be non-null")
-          Array(p.getUTF8String(0).toString, p.getUTF8String(1).toString)
-        }.toArray
+          (p.getUTF8String(0).toString, p.getUTF8String(1).toString)
+        }
         graft.functions.BpeTokens(args(0), merges)
       }))
     ext.injectFunction((

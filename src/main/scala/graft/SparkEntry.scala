@@ -1450,7 +1450,8 @@ object SparkEntry {
     *     is acceptable (an unthresholded full matrix at that width is
     *     the pair-join tier, a deliberate non-goal of this entry
     *     point). The emitted pair set is the LSH candidates (recall
-    *     governed by bands/bits), each with its exact Pearson.
+    *     governed by the band geometry below), each with its exact
+    *     Pearson.
     *
     * `roundThenFilter = Some((scale, t))` applies
     * `round(rho, scale) >= t` INSIDE the selector, in exactly that
@@ -1473,24 +1474,23 @@ object SparkEntry {
     * expressions over the dimension-sized sorted id seq), so the g4
     * plan gate — no Inner join anywhere — holds through the selector.
     *
-    * LSH geometry note for the pruned tier: `bits` must SCALE WITH k.
-    * Random (uncorrelated) pairs collide in a band with probability
-    * 2^-bits, so expected noise candidates ≈ bands·k²/2^(bits+1) — at
-    * the default 8×5 (32 buckets) that is ~k²/8, which is fine at the
-    * fixture k=300 (the a3d/a3e/a3f-pinned geometry) but would feed the
-    * verify ~500k junk pairs at k=2000. Callers at width pass
-    * bits ≈ log₂(k·bands) so noise stays O(k) and the verify cost stays
-    * proportional to TRUE near-duplicate structure
-    * (tools/Stress drives this at k=2000, bits=11 — SCALE.md).
+    * LSH geometry of the pruned tier: pinned to the fixture geometry,
+    * `A3dBands` × `A3dBits` = 8 bands × 5 bits (32 buckets), the one
+    * a3e's oracle regenerates. Random (uncorrelated) pairs collide in
+    * a band with probability 2^-bits, so expected noise candidates ≈
+    * bands·k²/2^(bits+1) ≈ k²/8 here — fine at the fixture k=300, but
+    * ~500k junk pairs for the verify at k=2000. At width `bits` must
+    * scale to ≈ log₂(k·bands) so noise stays O(k) and the verify cost
+    * tracks TRUE structure; SCALE.md's r16 vector-tier run
+    * (Correlation matrices) records the k=2000, bits=11 setting and
+    * its numbers.
     */
   private[graft] def panelRho(s: SparkSession, d: String, nUsers: Int,
       a: Long, b: Long, step: Long,
       roundThenFilter: Option[(Int, Double)] = None,
       onePassMaxK: Int = OnePassMaxK,
       broadcastVerifyMaxCells: Long =
-        graft.ops.CorrPrune.BroadcastVerifyMaxCells,
-      bands: Int = 8, bits: Int = 5,
-      barrier: String = graft.ops.CorrPrune.DefaultBarrier)
+        graft.ops.CorrPrune.BroadcastVerifyMaxCells)
       : (Seq[Long], DataFrame) = {
     val nBuckets = (b - a) / step
     val (users, panel) = widePanel(s, d, nUsers, a, b, step)
@@ -1526,11 +1526,11 @@ object SparkEntry {
         val rho =
           if (k.toLong * nBuckets <= broadcastVerifyMaxCells)
             graft.ops.CorrPrune.candidateRho(p, "user_id", "pos", "value",
-              dims = nBuckets.toInt, bands = bands, bits = bits)
+              dims = nBuckets.toInt, bands = A3dBands, bits = A3dBits)
           else
             graft.ops.CorrPrune.candidateRhoVectors(p, "user_id", "pos",
-              "value", dims = nBuckets.toInt, bands = bands, bits = bits,
-              barrier = barrier)
+              "value", dims = nBuckets.toInt, bands = A3dBands,
+              bits = A3dBits)
         // round-then-filter BELOW the vid map, then a registered cache
         // on the handful of survivors: the candidate plan's band-bucket
         // self-join re-reads shared subtrees, which the cache pays for

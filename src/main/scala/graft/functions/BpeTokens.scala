@@ -21,17 +21,23 @@ import org.apache.spark.unsafe.types.UTF8String
   * and each merge (l, r) walks left to right replacing the first
   * non-overlapping (l, r) adjacencies — in a run of consecutive matches
   * only the even-indexed ones merge, exactly the relational rule's
-  * "keep rn2 odd within each (word, grp) run" (BpeSpec pins the
+  * "keep rn2 odd within each (word, grp) run" (BpeTokensSpec pins the
   * equivalence against the retained relational fold on adversarial
   * overlap shapes).
   *
   * The merge list rides the expression as a literal (the
   * DenseFromSortedEntries pattern): BPE merge tables are
   * vocabulary-growth-bounded by construction (a few k rounds at
-  * production scale), so the reference object stays KB-sized.
+  * production scale), so the reference object stays KB-sized. It is
+  * held as a `Seq` of pairs so two expressions over equal merge lists
+  * are equal (subexpression elimination can share them); the array
+  * form the scan reads is derived once.
   */
-case class BpeTokens(child: Expression, merges: Array[Array[String]])
+case class BpeTokens(child: Expression, merges: Seq[(String, String)])
     extends UnaryExpression {
+
+  @transient private lazy val mergeArrays: Array[Array[String]] =
+    merges.map { case (l, r) => Array(l, r) }.toArray
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case StringType => TypeCheckResult.TypeCheckSuccess
@@ -44,11 +50,12 @@ case class BpeTokens(child: Expression, merges: Array[Array[String]])
   override def prettyName: String = "bpe_tokens"
 
   override protected def nullSafeEval(input: Any): Any =
-    BpeTokens.tokens(input.asInstanceOf[UTF8String], merges)
+    BpeTokens.tokens(input.asInstanceOf[UTF8String], mergeArrays)
 
   override protected def doGenCode(ctx: CodegenContext,
                                    ev: ExprCode): ExprCode = {
-    val m = ctx.addReferenceObj("merges", merges, "java.lang.String[][]")
+    val m = ctx.addReferenceObj("merges", mergeArrays,
+      "java.lang.String[][]")
     nullSafeCodeGen(ctx, ev, c => {
       s"""
          |${ev.value} = graft.functions.BpeTokens.tokens($c, $m);

@@ -264,12 +264,12 @@ object CorrPrune {
       // width the re-evaluation CPU cost is ~5% (k=1700 × 10,080:
       // none 75.9 s vs fence 72.0 s, identical shuffle and edges) —
       // the fence's value is a MEMORY cliff: at k=2000 the unfenced
-      // plan OOMs an 8 GiB heap (tools/Stress barrier=none, three
-      // runs) while the fenced run completes in ~98 s, because the
-      // fenced Project computes rho once and immediately drops the
-      // ~80 KB vector payloads, where the unfenced plan re-derives
-      // rho downstream and keeps both arrays alive across more of
-      // the pipeline.
+      // plan OOMs an 8 GiB heap (three runs; SCALE.md's r17 unfenced
+      // control, Correlation matrices) while the fenced run completes
+      // in ~98 s, because the fenced Project computes rho once and
+      // immediately drops the ~80 KB vector payloads, where the
+      // unfenced plan re-derives rho downstream and keeps both arrays
+      // alive across more of the pipeline.
       case "none" => rho
       case "cache" => graft.ops.Time.registerCached(rho.cache())
       case "checkpoint" => rho.localCheckpoint(eager = false)

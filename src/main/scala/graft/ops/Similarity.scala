@@ -90,17 +90,17 @@ object Similarity {
   /** The full banded-LSH ANN probe — candidates from the bucket
     * relation ([[annCandidates]]), exact integer-cosine re-score,
     * top-k per probe ([[topK]]). The ONE probe body behind e2's graded
-    * query, the width harness (`tools/Stress ann`) and the CI-scale
-    * spec, so the measured geometry cannot drift from the graded one
-    * (the DedupFixture pattern).
+    * query, the round-19 width runs (SCALE.md, Dedup / similarity) and
+    * the CI-scale spec, so the measured geometry cannot drift from the
+    * graded one (the DedupFixture pattern).
     *
     * Re-score shape (width-measured, round 19): the first cut re-used
     * [[cosineOf]], whose two equi-joins against the full (vec_id, q,
     * sq) relation sort-merge-shuffled the CORPUS per probe batch —
-    * `tools/Stress ann` measured 141 → 420 MB probe shuffle across a
-    * 5× width step (corpus-bound, 3.0×) against a candidate volume
-    * that grew only 1.7×. Structurally fixed the way the dedup tier's
-    * delta probe was: the probe side's vectors are a |probes|-sized
+    * the round-19 width run measured 141 → 420 MB probe shuffle
+    * across a 5× width step (corpus-bound, 3.0×) against a candidate
+    * volume that grew only 1.7×. Structurally fixed the way the dedup
+    * tier's delta probe was: the probe side's vectors are a |probes|-sized
     * relation fetched map-side and BROADCAST; the target side joins
     * candidates (the only relation that shuffles — delta-sized) against
     * `q` on vec_id, so when `q` is the persisted vector lake BUCKETED

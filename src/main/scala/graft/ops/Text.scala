@@ -110,12 +110,12 @@ object Text {
     * whose shared text puts thousands of docs into ONE `(band, bkey)`
     * bucket; the candidate self-join's OUTPUT is then quadratic in the
     * bucket size while its INPUT partition stays small — a skew class
-    * AQE's skew-join split does not dissolve, measured in
-    * `tools/Stress dedupskew`: with the thresholds floored to 64 KB,
-    * factor 1, and even `forceOptimizeSkewedJoin=true`, the hot
-    * bucket's task still carries the full ~2M-pair output. Two
-    * structural reasons, both visible in the harness: skew detection
-    * keys on input partition bytes (the hot key's input is ~160 KB —
+    * AQE's skew-join split does not dissolve, measured at width
+    * (SCALE.md's round-18 band-join skew section): with the
+    * thresholds floored to 64 KB, factor 1, and even
+    * `forceOptimizeSkewedJoin=true`, the hot bucket's task still
+    * carries the full ~2M-pair output. Two structural reasons, both
+    * visible in that run: skew detection keys on input partition bytes (the hot key's input is ~160 KB —
     * quadratic output is invisible to it), and the band join is a
     * SELF-join whose final adaptive plan reuses ONE exchange for both
     * sides (`ReusedExchange` under the right `ShuffleQueryStage`),

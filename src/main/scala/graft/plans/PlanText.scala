@@ -1,10 +1,9 @@
 package graft.plans
 
 /** Text-level physical-plan checks shared by the exactly-once gates
-  * (PlanGuardSpec), the barrier A/B (tools/Profile), and the width
-  * stress harness (tools/Stress) — one definition so the counting
-  * method cannot drift between the test gate and the tools that
-  * originally established it.
+  * (PlanGuardSpec) and the barrier A/B (tools/Profile) — one
+  * definition so the counting method cannot drift between the test
+  * gate and the tool that originally established it.
   */
 object PlanText {
 

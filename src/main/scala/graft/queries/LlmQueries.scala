@@ -96,8 +96,8 @@ object LlmQueries {
     * [[graft.ops.Text.capBandKeys]]'s boilerplate-bucket guard applied
     * at band-table build time, so a lake built with the cap never
     * stores the quadratic-output hot keys at all — the measured
-    * AQE-invisible straggler (`tools/Stress dedupskew`) becomes a
-    * build parameter instead of a query-code edit.
+    * AQE-invisible straggler (SCALE.md's round-18 band-join skew
+    * section) becomes a build parameter instead of a query-code edit.
     */
   private[graft] def signatureTables(sh: DataFrame,
       maxDf: Option[Int] = None): (DataFrame, DataFrame) = {
@@ -693,8 +693,8 @@ object LlmQueries {
     * but for an external delta that shape needs `corpus ∪ delta`
     * relations, and the union DESTROYS the lake's bucketing: the
     * set-attachment join then shuffles the CORPUS-sized set table on
-    * every ingest batch — measured at width (`tools/Stress
-    * dedupdelta`, 110k-doc corpus, 2k-doc delta): 174 MB probe
+    * every ingest batch — measured at width (SCALE.md's round-19
+    * delta-probe run, 110k-doc corpus, 2k-doc delta): 174 MB probe
     * shuffle (the set table's size) for the union shape vs
     * delta-sized for this one.
     *
@@ -765,9 +765,9 @@ object LlmQueries {
   // d8b (round 19): the EXTERNAL-delta probe shape on the oracle gate
   // — [[deltaVerdictsSplit]], the form the streaming ingest gate runs
   // per micro-batch (corpus relations un-unioned so the probe's
-  // shuffle stays delta-sized at width; `tools/Stress dedupdelta`
-  // measured the union shape at 45× this one). Same delta (top
-  // doc_id decile), same verdicts as d8 by the decomposition proof
+  // shuffle stays delta-sized at width; SCALE.md's round-19
+  // delta-probe run measured the union shape at 45× this one). Same
+  // delta (top doc_id decile), same verdicts as d8 by the decomposition proof
   // (CapPlumbSpec pins split == single at suite scale), so d8's
   // DuckDB oracle grades this plan verbatim — what the gate checks
   // here is that the split PLAN, with corpus and delta relations
@@ -1217,58 +1217,6 @@ object LlmQueries {
   private val BpeRounds = 3
   private val BpeSample = 200
 
-  /** Character-token table (word, freq, pos, tok) of a (word, freq)
-    * vocabulary — BPE's working relation, vocabulary-sized. The
-    * empty-word guard matters: `split` emits "" for consecutive
-    * spaces, and an unguarded `sequence(0, -1)` counts DOWNWARD to
-    * [0, -1] (two bogus rows) where the oracle's `range(strlen)` has
-    * zero — the same hazard [[graft.ops.Text.shingles]] guards.
-    */
-  private[graft] def charToks(wc: DataFrame): DataFrame =
-    wc.select(col("word"), col("freq"),
-        explode(when(length(col("word")) > 0,
-            sequence(lit(0), length(col("word")) - 1))
-          .otherwise(typedLit(Seq.empty[Int]))).as("pos"))
-      .withColumn("tok", expr("substr(word, pos + 1, 1)"))
-
-  /** The (word, freq, pos, tok, nxt) relation [[bpeApplyMerge]]
-    * consumes: each token paired with its right neighbor. Built once
-    * per round and shared with the learn loop's best-pair search so
-    * the lead window is never computed twice over the same generation.
-    */
-  private[graft] def bpeWithNext(toks: DataFrame): DataFrame =
-    toks.withColumn("nxt",
-      lead(col("tok"), 1).over(Window.partitionBy("word").orderBy("pos")))
-
-  /** Apply ONE merge (l, r) to a [[bpeWithNext]] relation — the classic
-    * greedy left-to-right overlap rule (in "aaa", merge "a a" once, at
-    * the left), relationally: within each run of consecutive matching
-    * positions keep the even-indexed ones, drop each merge's right
-    * half, renumber. Since round 22 the shipped t9/t10 paths tokenize
-    * through the [[graft.functions.BpeTokens]] expression; this
-    * relational form is retained as the independent reference
-    * implementation BpeSpec pins the expression against, so the merge
-    * rule can never silently drift.
-    */
-  private[graft] def bpeApplyMerge(p: DataFrame, l: String,
-                                   r: String): DataFrame = {
-    val w = Window.partitionBy("word").orderBy("pos")
-    val mm = p.where(col("tok") === l && col("nxt") === r)
-      .select(col("word"), col("pos"))
-      .withColumn("grp", col("pos") - row_number().over(w))
-      .withColumn("rn2", row_number().over(
-        Window.partitionBy("word", "grp").orderBy("pos")))
-      .where((col("rn2") - 1) % 2 === 0)
-      .select(col("word"), col("pos"), lit(1).as("mg"))
-    p.join(mm, Seq("word", "pos"), "left")
-      .withColumn("pm", lag(col("mg"), 1).over(w))
-      .where(col("pm").isNull) // drop the right half of each merge
-      .select(col("word"), col("freq"), col("pos"),
-        when(col("mg") === 1, concat(col("tok"), col("nxt")))
-          .otherwise(col("tok")).as("tok"))
-      .withColumn("pos", row_number().over(w) - 1)
-  }
-
   /** [[graft.functions.BpeTokens]] as a column: the word's token array
     * after applying `merges` in order (merge table rides as a literal).
     */
@@ -1452,10 +1400,10 @@ object LlmQueries {
       // round-21 lazy-checkpoint A/B only ever traded WHERE those jobs
       // ran) is replaced by one projection over the corpus vocabulary
       // that applies every merge in a linear per-word scan, proven
-      // identical to the relational fold in BpeSpec. The n_toks > 0
-      // guard keeps the join semantics of the token-relation form: an
-      // empty word produced no token rows there, so its occurrences
-      // never joined — bpe_tokens maps it to an empty array and only
+      // identical to the relational fold in BpeTokensSpec. The
+      // n_toks > 0 guard keeps the join semantics of the token-relation
+      // form: an empty word produced no token rows there, so its
+      // occurrences never joined — bpe_tokens maps it to an empty array and only
       // the empty word can be empty-tokened.
       val perWord = docWords.select("word").distinct()
         .select(col("word"),
@@ -1696,11 +1644,12 @@ object LlmQueries {
   // relation as plain parquet (the probe side broadcasts into it —
   // scanned, never shuffled) and the quantized-vector relation
   // BUCKETED by vec_id (Materialize.bucketedTable), so the re-score's
-  // target fetch — the join the width harness caught corpus-shuffling
-  // in the naive shape (141 → 420 MB, `tools/Stress ann`) — rides the
-  // on-disk layout: only the slim candidate relation exchanges, the
-  // vector lake plans zero exchanges (PlanGuardSpec pins it in the
-  // cluster shape). Same geometry, same arithmetic, same answer as e2.
+  // target fetch — the join the round-19 width run caught
+  // corpus-shuffling in the naive shape (141 → 420 MB, SCALE.md) —
+  // rides the on-disk layout: only the slim candidate relation
+  // exchanges, the vector lake plans zero exchanges (PlanGuardSpec
+  // pins it in the cluster shape). Same geometry, same arithmetic,
+  // same answer as e2.
   private val qE2b = Q("e2b_lsh_lake",
     (s, d) => {
       val bkL = Materialize.table(s, d, "lsh_bands") {
@@ -2642,9 +2591,10 @@ object LlmQueries {
   // a plain equi-join against the full vector relation: fine at
   // fixture scale where the candidate side broadcasts, corpus-shuffled
   // at width — the round-19 LSH finding's IVF sibling, priced in
-  // `Stress ann trained`). Candidates (assigned cell ∩ probed cells,
-  // self excluded) and ranking arithmetic are identical to e7, so the
-  // recall output grades against e7's oracle verbatim.
+  // SCALE.md's round-20 trained-tier run). Candidates (assigned cell
+  // ∩ probed cells, self excluded) and ranking arithmetic are
+  // identical to e7, so the recall output grades against e7's oracle
+  // verbatim.
   private val qE7b = Q("e7b_trained_ivf_lake",
     (s, d) => {
       val q = embQ(s, d)

@@ -406,9 +406,9 @@ object Streams {
           // state relations go in un-unioned, so at width the
           // set-attachment join never shuffles the corpus set table
           // per batch — the union shape measured 174 MB (corpus-sized)
-          // per 2k-doc batch against a 110k-doc lake in
-          // `tools/Stress dedupdelta`; verdicts are provably identical
-          // (the harness asserts split == union on every width run)
+          // per 2k-doc batch against a 110k-doc lake (SCALE.md's
+          // round-19 delta-probe width run); verdicts are provably
+          // identical (CapPlumbSpec pins split == single)
           idempotentWrite(graft.queries.LlmQueries.deltaVerdictsSplit(
               cBands, cSets, dBands, dSets, batch.select("doc_id"), th,
               maxDf),

@@ -1,10 +1,17 @@
-// Dev tool: dump explain("formatted") for the headline queries so the
-// physical plans (pushdown, broadcast choices, shuffle count, codegen
-// spans) can be audited and diffed between rounds.
-// Run: sbt "runMain graft.tools.PlanAudit /root/testdata/sf0.001 PLANS.md"
+// Dev tool: dump explain("formatted") so the physical plans (pushdown,
+// broadcast choices, shuffle count, codegen spans) can be audited and
+// diffed between rounds. Two forms, one session and one normalization:
+//
+//   sbt "runMain graft.tools.PlanAudit [sfDir [out.md]]"  (out.md: PLANS.md)
+//     — the headline queries into one consolidated audit document;
+//   sbt "runMain graft.tools.PlanAudit <sfDir> <outDir> <suffix> <q> [q...]"
+//     — NAMED queries, one file each (<outDir>/<q>_<suffix>.txt): the
+//     optimization rounds' before/after plan evidence (plans/r<N>/).
 package graft.tools
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
 import graft.{Sessions, SparkEntry}
 
 object PlanAudit {
@@ -41,9 +48,23 @@ object PlanAudit {
     "e11b_ivfpq_lake")
 
   def main(args: Array[String]): Unit = {
+    require(args.length != 3, "usage: PlanAudit [sfDir [out.md]] | " +
+      "PlanAudit <sfDir> <outDir> <suffix> <query> [query...]")
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val out = args.lift(1).getOrElse("PLANS.md")
+    val named = args.drop(3).toSeq
+    val unknown = named.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val spark = Sessions.build("graft-plan-audit")
+    try {
+      if (named.isEmpty)
+        consolidated(spark, sfDir, args.lift(1).getOrElse("PLANS.md"))
+      else perQuery(spark, sfDir, Paths.get(args(1)), args(2), named)
+    } finally spark.stop()
+  }
+
+  /** The headline queries into one audit document (PLANS.md). */
+  private def consolidated(spark: SparkSession, sfDir: String,
+                           out: String): Unit = {
     val sb = new StringBuilder
     sb.append("# PLANS — physical plans of the headline queries\n\n")
     sb.append(s"Generated by `graft.tools.PlanAudit` at $sfDir, ")
@@ -51,17 +72,30 @@ object PlanAudit {
     sb.append("operator change; the point is to keep the plan you'd want ")
     sb.append("at 100 TB, not just one that passes.\n")
     headline.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
       sb.append(s"\n## $name\n\n```\n")
-      // normalize the per-process scratch root so Location lines are
-      // stable across regenerations and real plan deltas diff cleanly
-      sb.append(df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        .replace(graft.sources.Materialize.root, "<scratch>"))
+      sb.append(formatted(SparkEntry.queries(name)(spark, sfDir)))
       sb.append("```\n")
     }
     Files.writeString(Paths.get(out), sb.toString)
     println(s"[plan-audit] wrote ${headline.size} plans to $out")
-    spark.stop()
   }
+
+  /** Named queries, one `<name>_<suffix>.txt` file each in `outDir`. */
+  private def perQuery(spark: SparkSession, sfDir: String, outDir: Path,
+                       suffix: String, names: Seq[String]): Unit = {
+    Files.createDirectories(outDir)
+    names.foreach { name =>
+      Files.writeString(outDir.resolve(s"${name}_$suffix.txt"),
+        formatted(SparkEntry.queries(name)(spark, sfDir)))
+      println(s"[plan-audit] wrote ${name}_$suffix.txt")
+    }
+  }
+
+  /** explain("formatted") with the per-process scratch root normalized,
+    * so Location lines are stable across regenerations and real plan
+    * deltas diff cleanly.
+    */
+  private def formatted(df: DataFrame): String =
+    df.queryExecution.explainString(FormattedMode)
+      .replace(graft.sources.Materialize.root, "<scratch>")
 }

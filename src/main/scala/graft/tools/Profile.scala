@@ -247,7 +247,6 @@ object Profile {
       clear(s)
       // DISTINCT normalized kernel sites, not raw substring hits —
       // graft.plans.PlanText.distinctSites, shared with PlanGuardSpec
-      // and Stress
       val sites = graft.plans.PlanText.distinctSites(
         a3fWith(b).queryExecution.executedPlan.toString, "pearson_arrays")
       println(s"[p] a3f barrier=$b kernel sites in plan: ${sites.size}")

@@ -2,12 +2,13 @@ package graft.functions
 
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
-import graft.queries.LlmQueries
+import BpeRelationalFold._
 
 /** Pins [[BpeTokens]] (the r22 in-array BPE apply) against the retained
-  * RELATIONAL merge machinery (charToks → bpeWithNext → bpeApplyMerge
-  * fold) — two independent implementations of the greedy left-to-right
-  * overlap rule, compared word-for-word on adversarial shapes.
+  * RELATIONAL merge machinery ([[BpeRelationalFold]]: charToks →
+  * bpeWithNext → bpeApplyMerge fold) — two independent implementations
+  * of the greedy left-to-right overlap rule, compared word-for-word on
+  * adversarial shapes.
   */
 class BpeTokensSpec extends SparkTestBase {
 
@@ -21,9 +22,8 @@ class BpeTokensSpec extends SparkTestBase {
                          merges: Seq[(String, String)]) = {
     import spark.implicits._
     val wc = words.toDF("word").withColumn("freq", lit(1L))
-    val toks = merges.foldLeft(LlmQueries.charToks(wc)) {
-      case (t, (l, r)) =>
-        LlmQueries.bpeApplyMerge(LlmQueries.bpeWithNext(t), l, r)
+    val toks = merges.foldLeft(charToks(wc)) {
+      case (t, (l, r)) => bpeApplyMerge(bpeWithNext(t), l, r)
     }
     toks.select("word", "pos", "tok").collect()
       .map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSet
@@ -85,5 +85,39 @@ class BpeTokensSpec extends SparkTestBase {
       .select(size(bpe(col("word"), Seq(("a", "a")))).as("n"))
       .collect().map(_.getInt(0)).toSeq
     assert(out === Seq(0, 1))
+  }
+
+  test("merges that are NULL or not array<array<string>> fail with the " +
+      "descriptive error, not an NPE or ClassCastException") {
+    import spark.implicits._
+    val words = Seq("ab").toDF("word")
+    val bad = Seq(
+      lit(null),                                  // NULL literal
+      lit(null).cast("array<array<string>>"),     // typed NULL
+      typedLit(Seq("a", "b")),                    // array<string>
+      lit("ab"),                                  // string
+      typedLit(Seq(Seq(1, 2))))                   // array<array<int>>
+    for (m <- bad) {
+      val e = intercept[IllegalArgumentException] {
+        words.select(call_function("bpe_tokens", col("word"), m))
+          .collect()
+      }
+      assert(e.getMessage.contains("bpe_tokens: merges must be a " +
+        "literal array<array<string>>"), s"$m: ${e.getMessage}")
+    }
+  }
+
+  test("equal merge lists give semantically equal expressions") {
+    import spark.implicits._
+    val m = Seq(("a", "b"), ("ab", "c"))
+    val plan = Seq("abc").toDF("word")
+      .select(bpe(col("word"), m).as("x"), bpe(col("word"), m).as("y"),
+        bpe(col("word"), m.reverse).as("z"))
+      .queryExecution.analyzed
+    val exprs = plan.expressions.flatMap(_.collect { case b: BpeTokens => b })
+    assert(exprs.size == 3)
+    val Seq(x, y, z) = exprs
+    assert(x.semanticEquals(y))
+    assert(!x.semanticEquals(z))
   }
 }

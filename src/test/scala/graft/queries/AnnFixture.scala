@@ -1,10 +1,10 @@
 // The ONE synthetic embedding-corpus generator behind the ANN scale
-// evidence: tools/Stress's width runs and the CI-scale suite gates
-// (AnnStressSpec) build through these functions, so the planted-
-// neighbor geometry the gates assert recall against cannot drift from
-// the one the width harness measured (the DedupFixture pattern,
-// transposed to vectors).
-package graft.tools
+// gates: AnnStressSpec builds through these functions, on the same
+// planted-neighbor geometry as the width runs recorded in SCALE.md
+// (Dedup / similarity, rounds 19-20: 200k and 1M vectors), so the
+// recall the gates assert cannot drift from the measured one (the
+// DedupFixture pattern, transposed to vectors).
+package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._

@@ -4,16 +4,15 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
 import graft.ops.Similarity
-import graft.tools.AnnFixture
 
-/** The ANN-tier width gates (`tools/Stress ann`) at CI scale, in
-  * `sbt test` — the same promotion DedupStressSpec/DeltaStressSpec did
-  * for the dedup tier: a planted-neighbor corpus is generated at TWO
-  * widths through the shared generator ([[AnnFixture]] — the width
-  * harness's own, so the suite geometry cannot drift from the measured
-  * one), indexed through the production bucket build
-  * ([[Similarity.bandBucketsFromSigns]] with the bitsFor/bandsFor
-  * ladder), and probed through the ONE shared probe body
+/** The ANN-tier width gates (SCALE.md, Dedup / similarity: the round-19
+  * and round-20 width runs) at CI scale, in `sbt test` — the same
+  * promotion DedupStressSpec/DeltaStressSpec did for the dedup tier: a
+  * planted-neighbor corpus is generated at TWO widths through the
+  * shared generator ([[AnnFixture]] — the width runs' geometry, so the
+  * suite cannot drift from the measured one), indexed through the
+  * production bucket build ([[Similarity.bandBucketsFromSigns]] with
+  * the bitsFor/bandsFor ladder), and probed through the ONE shared probe body
   * ([[Similarity.annTopK]] — e2's graded path). Gates: planted recall
   * ≥ 0.95 at both widths, the bits ladder steps across the width
   * ratio, candidates/probe grow ≤ 2× across it (per-probe work

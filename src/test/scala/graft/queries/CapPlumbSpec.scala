@@ -6,12 +6,12 @@ import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 import graft.ops.Text
 import graft.plans.PlanText
-import graft.tools.DedupFixture
 
 /** Pins the `maxDf` plumbing (VERDICT r19 task 3): the measured
-  * boilerplate-straggler mitigation (`Text.capBandKeys`, established
-  * by `tools/Stress dedupskew`) is now a PARAMETER on the production
-  * signature/pair build, and this spec proves both directions —
+  * boilerplate-straggler mitigation (`Text.capBandKeys`, measured at
+  * width in SCALE.md's round-18 band-join skew section) is now a
+  * PARAMETER on the production signature/pair build, and this spec
+  * proves both directions —
   * (a) the default (None) leaves the graded d2/d6/d8 pair shape
   * byte-identical to the pre-parameter plan (normalized compare
   * against an inline replica of the r18 body), so plumbing the knob

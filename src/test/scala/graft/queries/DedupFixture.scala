@@ -1,10 +1,11 @@
 // The ONE synthetic near-dup corpus generator behind the dedup scale
-// evidence: tools/Stress's width runs (110k docs, 22-50x fixture) and
-// the CI-scale suite gates (DedupStressSpec, CapPlumbSpec) build
-// through these functions, so the planted-clique geometry the gates
-// assert recall/fp against cannot drift from the one the width
-// harness measured (the StreamRecipes pattern, transposed to dedup).
-package graft.tools
+// gates: DedupStressSpec, DeltaStressSpec and CapPlumbSpec build
+// through these functions, on the same planted-clique geometry as the
+// width runs recorded in SCALE.md (Dedup / similarity: 110k and 250k
+// docs, 22-50x fixture), so the recall/fp the gates assert cannot
+// drift from the measured one (the StreamRecipes pattern, transposed
+// to dedup).
+package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -12,8 +13,8 @@ import org.apache.spark.sql.functions._
 object DedupFixture {
 
   /** Synthetic document corpus with PLANTED near-dup cliques and
-    * realistic shingle overlap (the corr harness's smooth-signal lesson
-    * transposed to text: background docs share a small common
+    * realistic shingle overlap (the smooth-signal lesson of SCALE.md's r16
+    * corr panel, transposed to text: background docs share a small common
     * vocabulary — partial overlap everywhere, never hash-white
     * disjointness — while planted cluster members are 1-2 token
     * substitutions on a 200-token base, so pairwise Jaccard lands in
@@ -21,9 +22,9 @@ object DedupFixture {
     * Layout: doc_ids [0, nClusters*cSize) are cluster members (cluster
     * cid = id div cSize), then nBackground background docs, then
     * nBoiler BOILERPLATE docs sharing one identical text (the hot
-    * LSH bucket of the skew evidence; 0 in the recall modes).
+    * LSH bucket of the skew evidence; 0 in the recall gates).
     *
-    * `idOffset` shifts every doc_id — the delta-probe mode plants
+    * `idOffset` shifts every doc_id — the delta-probe gate plants
     * DELTA members into existing cliques by generating a second,
     * offset corpus slice whose planted texts still key off the same
     * cluster id (see [[deltaMembers]]).

@@ -6,20 +6,20 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
-import graft.tools.DedupFixture
 
 /** The organic dedup-tier stress gates, promoted into `sbt test`
-  * (VERDICT r19 task 1): `tools/Stress dedup` established the five
-  * width-scale gates — planted-clique recall ≥ 0.90, zero false
-  * positives, pointer-jump convergence ≤ 6 rounds, edge-sized (never
-  * corpus²) candidates, corpus-LINEAR shuffle — at 110k/250k docs,
-  * but until this spec a regression in banding geometry, shingle
-  * hashing, or the verify threshold failed no automated gate. This
-  * runs the SAME pipeline (hashedShingles → signatureTables →
-  * verifiedPairs → connectedComponents, through scratch lake parquet
-  * like the harness) on the SAME generator ([[DedupFixture]] — shared
-  * with Stress so the suite's geometry cannot drift from the measured
-  * one) at a suite-tolerable width, and asserts all five gates.
+  * (VERDICT r19 task 1): the round-18 width runs (SCALE.md, Dedup /
+  * similarity) established the five width-scale gates — planted-clique
+  * recall ≥ 0.90, zero false positives, pointer-jump convergence ≤ 6
+  * rounds, edge-sized (never corpus²) candidates, corpus-LINEAR
+  * shuffle — at 110k/250k docs, but until this spec a regression in
+  * banding geometry, shingle hashing, or the verify threshold failed
+  * no automated gate. This runs the SAME pipeline (hashedShingles →
+  * signatureTables → verifiedPairs → connectedComponents, through
+  * scratch lake parquet like the width runs) on the SAME generator
+  * ([[DedupFixture]] — the width runs' geometry, so the suite cannot
+  * drift from the measured one) at a suite-tolerable width, and
+  * asserts all five gates.
   */
 class DedupStressSpec extends SparkTestBase {
 
@@ -53,7 +53,7 @@ class DedupStressSpec extends SparkTestBase {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      // the real pipeline, through scratch lake parquet like Stress
+      // the real pipeline, through scratch lake parquet
       val sh = LlmQueries.hashedShingles(docs).cache()
       val (sets, bands) =
         try {
@@ -91,7 +91,7 @@ class DedupStressSpec extends SparkTestBase {
             .where((col("id") / cSize).cast("long") =!=
               (col("component") / cSize).cast("long")).count()
 
-          // gates 1-3 (same requires as Stress.dedupMain)
+          // gates 1-3
           assert(fp == 0, s"$fp false-positive pairs")
           assert(crossed == 0,
             s"$crossed docs in cross-cluster components")

@@ -3,16 +3,16 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
-import graft.tools.DedupFixture
 
-/** The delta-probe width gates (`tools/Stress dedupdelta`) at CI
-  * scale, in `sbt test` — the same promotion [[DedupStressSpec]] did
-  * for the self-dedup gates: a corpus of planted cliques is probed by
-  * a delta of (a) one NEW member per existing clique and (b) novel
-  * docs nothing resembles, through the SAME split probe the streaming
-  * ingest gate and `d8b_external_delta` run
+/** The delta-probe width gates (SCALE.md, Dedup / similarity: the
+  * round-19 delta-probe width run) at CI scale, in `sbt test` — the
+  * same promotion [[DedupStressSpec]] did for the self-dedup gates: a
+  * corpus of planted cliques is probed by a delta of (a) one NEW member
+  * per existing clique and (b) novel docs nothing resembles, through
+  * the SAME split probe the streaming ingest gate and
+  * `d8b_external_delta` run
   * ([[LlmQueries.deltaVerdictsSplit]], generator shared with the
-  * width harness via [[DedupFixture]]). Gates: delta recall ≥ 0.90
+  * other dedup gates via [[DedupFixture]]). Gates: delta recall ≥ 0.90
   * with every match inside its planted clique, every novel doc
   * verdicts `new`, zero `dup_of_delta`. (The shuffle-size gates stay
   * width-only — at this scale broadcasts change the plan shape; the

@@ -461,8 +461,8 @@ class PlanGuardSpec extends SparkTestBase {
     // plan lines, not raw substring hits — a cached plan prints the
     // same Project twice (live node + the InMemoryRelation's stored
     // copy); the shared graft.plans.PlanText.distinctSites (also used
-    // by tools/Profile and tools/Stress). If a
-    // Spark upgrade or new Catalyst rule starts substituting
+    // by tools/Profile). If a Spark upgrade or new Catalyst rule
+    // starts substituting
     // non-deterministic aliases, the "fence" case here goes red
     // LOUDLY instead of CORRECTNESS staying green at triple the cost.
     import org.apache.spark.sql.functions._
