@@ -136,12 +136,14 @@ object SparkEntry {
   // from 'F' orders; 'O' orders are the dated facts falling inside them.
   private val qJ1 = Q("j1_interval_join",
     (s, d) => {
-      val orders = T(s, d, "orders")
-      val dim = orders.where(col("o_orderstatus") === "F")
+      // dim loads `orders` on its own: a second scan gets its own
+      // attributes, so joinValid's fact(key) === dim(key) compares two
+      // relations' keys, not one attribute with itself
+      val dim = T(s, d, "orders").where(col("o_orderstatus") === "F")
         .groupBy("o_custkey")
         .agg(min("o_orderdate").as("start_dt"),
              max("o_orderdate").as("end_dt"))
-      val fact = orders.where(col("o_orderstatus") === "O")
+      val fact = T(s, d, "orders").where(col("o_orderstatus") === "O")
       Relational.joinValid(fact, dim, "o_custkey",
           "o_orderdate", "start_dt", "end_dt")
         .groupBy(fact("o_custkey").as("o_custkey"))
@@ -602,8 +604,9 @@ object SparkEntry {
   // slice (through Jan 30) drives the watermark a comfortable 5 days
   // past the last graded span's end (Jan 25), so every graded span has
   // finalized deterministically; rho is rounded at 4 dp on both sides
-  // (the UDAF's Chan-merge partials are order-sensitive at ~1e-12,
-  // eight orders inside the rounding slack). Pairs with undefined rho
+  // (the UDAF correlates 1e-6-quantized values with exact integer
+  // co-moments, DuckDB's corr the raw doubles; they differ far inside
+  // the rounding slack). Pairs with undefined rho
   // (fewer than two co-observed buckets, or a constant side) are
   // emitted as null by the UDAF and reinstated in the oracle by a
   // universe cross join — row sets match exactly.
@@ -655,8 +658,8 @@ object SparkEntry {
   // flagship corresponds to (ffill, then per-window corr), continuously.
   // The oracle is the batch ffill CTE (w1/w16's, verbatim) feeding a
   // per-span DuckDB corr, with a universe cross join reinstating
-  // undefined pairs; 4-dp rounding absorbs the UDAF's ~1e-12 Chan-merge
-  // order sensitivity. Cells end AT the grid end, so the corr stream's
+  // undefined pairs; 4-dp rounding absorbs the UDAF's 1e-6 input
+  // quantization. Cells end AT the grid end, so the corr stream's
   // watermark (maxCellTs − 5 min) finalizes every 4-hour span except
   // the last; grading stops at the 16:00 span on both sides.
   private val qW18 = Q("w18_streaming_corr_filled",
@@ -1413,8 +1416,9 @@ object SparkEntry {
   }
 
   /** The one-pass co-moment tier off an assembled wide panel: every
-    * pair's exact rho from ONE aggregate ([[graft.functions
-    * .CorrMatrixAgg]]), ids and 0-based vids mapped join-free via
+    * pair's rho from ONE exact integer co-moment aggregate
+    * ([[graft.functions.CorrMatrixAgg]] — any merge order, same bits),
+    * ids and 0-based vids mapped join-free via
     * `typedLit` over the sorted id seq. `maxParts` bounds the partial
     * buffers the final merge sees (merge cost scales with partitions,
     * not rows).
@@ -1432,7 +1436,7 @@ object SparkEntry {
         col("c.rho").as("rho"))
 
   /** Width ceiling for the one-pass co-moment tier: the UDAF's partial
-    * buffer is k(k-1)/2 × 10 doubles (~10 MB at k=500, ~90 MB at
+    * buffer is ~6k² longs (~12 MB at k=500, ~110 MB at
     * k=1500); past that the buffer serialization/merge dominates and
     * the LSH pair-pruned tier wins (SCALE.md's corr tier table).
     */
@@ -1552,8 +1556,8 @@ object SparkEntry {
   }
 
   // A3 tier iii (SURVEY §2.9/§7): the one-pass pairwise-complete co-moment
-  // UDAF — co-moment state crosses the shuffle instead of k² rows per
-  // bucket (see [[graft.functions.CorrMatrixAgg]]).
+  // UDAF — exact integer co-moment state crosses the shuffle instead of
+  // k² rows per bucket (see [[graft.functions.CorrMatrixAgg]]).
   private val qA3b = Q("a3b_corr_onepass",
     (s, d) => {
       val (users, panel) = widePanel(s, d, 10, jan1, jan8, 300)
@@ -1571,9 +1575,9 @@ object SparkEntry {
   // A3 at the reference's true panel width (it correlates k≈500 symbols,
   // correlation_matrix_exporter.py README): every fixture user (150 at
   // sf0.01; k=500 of sf0.1's 1,500) through the one-pass aggregator —
-  // k(k-1)/2 ≈ 125k pairs from ONE shuffle + a ~10 MB co-moment buffer,
+  // k(k-1)/2 ≈ 125k pairs from ONE shuffle + a ~12 MB co-moment buffer,
   // where the pair-join tier would shuffle k² rows per bucket. The
-  // buffer is O(k²) doubles, which caps this tier near k≈1-2k series;
+  // buffer is O(k²) longs, which caps this tier near k≈1-2k series;
   // beyond that the pair-join tier with pair-pruning wins again — both
   // stay exposed.
   // Goes through the automatic tier selector [[panelRho]]: at fixture

@@ -14,292 +14,190 @@ case class CorrCell(i: Int, j: Int, rho: Option[Double])
 /** One-pass pairwise-complete Pearson correlation matrix aggregate — the
   * engine's replacement for the O(k²)-shuffle self-join tier of the
   * flagship query (reference `data.corr()`,
-  * TAQpipeline/correlation_matrix_exporter.py:163,209).
+  * TAQpipeline/correlation_matrix_exporter.py:163,209), and the matrix
+  * twin of the [[PearsonArrays]] kernel.
   *
-  * Input: one `Array[Double]` per time bucket — the k-wide panel row (a
-  * primitive array: the O(k²) inner loop indexes it 13M+ times per input
-  * row at k=300, so a boxed or non-array-backed Seq dominated the whole
-  * query before this was primitive), with
-  * NaN marking missing observations. For every unordered pair (i, j) the
-  * buffer keeps ten slots — n, Σx, Σy, Σx², Σy², Σxy, min/max of each
-  * side — accumulated ONLY over rows where both sides are present:
-  * exactly pandas' pairwise-complete semantics, which row-complete
-  * one-pass methods (assembling vectors and dropping any row with a NaN)
-  * get wrong.
+  * Input: one k-wide `Array[Double]` panel row per time bucket, NaN =
+  * missing (a primitive array: the O(k²) loop indexes it millions of
+  * times per row). Each pair (i, j) correlates over exactly the rows
+  * where BOTH sides are present — pandas' pairwise-complete semantics,
+  * which row-complete methods (dropping any row with a NaN) get wrong.
   *
-  * Numerics: the buffer holds Welford/Chan state — running means plus
-  * CENTERED second moments (M2x, M2y, Cxy) — not raw power sums. The
-  * raw-sum form finishes with n·Σx²−(Σx)², whose catastrophic
-  * cancellation at magnitude |x| wipes out all variance signal below
-  * ~|x|²·n²·1e-16: a 6-dp-quantized price series hovering one
-  * quantization step around 100 (exactly what forward-fill produces)
-  * has true variance ~1e-10 against ~1e-7 of cancellation noise — a
-  * sign-random vx and garbage ρ. The centered update pays one divide
-  * per accumulate and is exact to the scale of the deviations
-  * themselves. Exactly-constant detection additionally uses the min/max
-  * slots (exact on quantized inputs): those pairs are None, matching
-  * the NULL/NaN SQL engines emit.
+  * Numerics: values are quantized with the kernel's `round(x·1e6)`
+  * ([[PearsonArrays.quantize]]) and the co-moments n, Σx, Σy, Σx², Σy²,
+  * Σxy are exact 128-bit integers. So merge is bit-for-bit associative
+  * and commutative (ANY partial-aggregation order gives the same
+  * buffer), n·Σx²−(Σx)² has no cancellation error (a series one
+  * quantization step around 100 — what forward-fill produces — keeps
+  * its variance), and the finish is [[PearsonArrays.finishRhoSlots]]'s
+  * deterministic double chain, which an oracle mirroring the integers
+  * (DuckDB HUGEINT sums, e1b) reproduces bit-identically. Undefined
+  * cells (n < 2, or a side constant in the quantized domain: vx = 0
+  * exactly) are None. Envelope: a non-finite value or |x| > ~9×10⁹
+  * throws in `quantize`; a 128-bit overflow traps in `add128`
+  * (reachable only at ≳2×10⁶ maximal-magnitude rows).
   *
-  * Scale shape: the panel is shuffled once (groupBy bucket to form rows);
-  * the aggregate then runs as map-side partials + a merge of
-  * k(k-1)/2 × 10 doubles per partition — co-moment state, not data,
-  * crosses the wire. At k=500 the buffer is ~10 MB; compare the
-  * self-join tier, which shuffles k² rows per bucket. The O(k²) buffer
-  * caps this tier near k≈1-2000 series; beyond that the pair-join tier
-  * wins again. The Chan merge is commutative and associative up to fp
-  * rounding (~1e-12 — property-checked merge/commute laws with
-  * tolerance in the test suite), so partial aggregation order cannot
-  * change any 4-6-dp-rounded result.
+  * State, factored so no per-row sweep costs more than
+  * present × min(present, missing) ≤ k²/4 slot updates (besides Σxy):
+  *   - per pair p = (i, j), i < j, Σx_i·x_j over the rows where both
+  *     are present — one 128-bit add per present pair of a row;
+  *   - per series s, [N, Σx, Σx²] over the FULL rows where s is present
+  *     (a row is full when at most half of it is missing, sparse
+  *     otherwise);
+  *   - the k×k correction matrix: entry (m, a) holds a signed
+  *     [c, Σx_a, Σx_a²]. A full row SUBTRACTS a present a's terms from
+  *     every entry (m, a) of a missing m (missing × present updates); a
+  *     sparse row ADDS them to every entry (m, a) of a present m
+  *     (present × present), and touches no series sum.
+  * So series a plus correction (m, a) is exactly [n, Σx_a, Σx_a²] over
+  * the rows where both a and m are present: `finish` rebuilds each
+  * pairwise-complete sum that way in 128-bit integers, and every output
+  * bit equals the direct five-sums-per-pair form.
+  * Pair p = i*k - i*(i+1)/2 + (j-i-1).
+  *
+  * Scale shape: the panel is shuffled once (groupBy bucket to form
+  * rows); map-side partials of ~12 longs per pair (~12 MB at k=500)
+  * cross the merge — co-moment state, not the k² rows per bucket of
+  * the self-join tier. The O(k²) buffer caps this tier near k≈1-2000;
+  * beyond that the LSH pair-pruned tier wins.
   */
 class CorrMatrixAgg(k: Int)
-    extends Aggregator[Array[Double], Array[Double], Seq[CorrCell]] {
-
-  private val nPairs = k * (k - 1) / 2
-  private val S = 10 // slots per pair
-  // layout per pair p=(i,j), i<j, p = i*k - i*(i+1)/2 + (j-i-1):
-  // [n, meanx, meany, M2x, M2y, Cxy, minx, maxx, miny, maxy]
-  override def zero: Array[Double] = {
-    val b = new Array[Double](S * nPairs)
-    var p = 0
-    while (p < nPairs) {
-      b(S * p + 6) = Double.PositiveInfinity
-      b(S * p + 7) = Double.NegativeInfinity
-      b(S * p + 8) = Double.PositiveInfinity
-      b(S * p + 9) = Double.NegativeInfinity
-      p += 1
-    }
-    b
-  }
-
-  override def reduce(buf: Array[Double], row: Array[Double]): Array[Double] = {
-    var i = 0
-    var p = 0
-    while (i < k) {
-      val x = row(i)
-      val xOk = !x.isNaN
-      var j = i + 1
-      while (j < k) {
-        if (xOk) {
-          val y = row(j)
-          if (!y.isNaN) {
-            val b = S * p
-            val n1 = buf(b) + 1
-            buf(b) = n1
-            val dx = x - buf(b + 1)
-            buf(b + 1) += dx / n1
-            val dx2 = x - buf(b + 1)
-            val dy = y - buf(b + 2)
-            buf(b + 2) += dy / n1
-            val dy2 = y - buf(b + 2)
-            buf(b + 3) += dx * dx2
-            buf(b + 4) += dy * dy2
-            buf(b + 5) += dx * dy2
-            if (x < buf(b + 6)) buf(b + 6) = x
-            if (x > buf(b + 7)) buf(b + 7) = x
-            if (y < buf(b + 8)) buf(b + 8) = y
-            if (y > buf(b + 9)) buf(b + 9) = y
-          }
-        }
-        j += 1
-        p += 1
-      }
-      i += 1
-    }
-    buf
-  }
-
-  override def merge(a: Array[Double], b: Array[Double]): Array[Double] = {
-    var p = 0
-    while (p < nPairs) {
-      val o = S * p
-      val na = a(o)
-      val nb = b(o)
-      if (nb > 0) {
-        if (na == 0) {
-          var t = 0
-          while (t < 6) { a(o + t) = b(o + t); t += 1 }
-        } else {
-          // Chan's parallel combine of centered moments
-          val n = na + nb
-          val dX = b(o + 1) - a(o + 1)
-          val dY = b(o + 2) - a(o + 2)
-          val f = na * nb / n
-          a(o + 3) += b(o + 3) + dX * dX * f
-          a(o + 4) += b(o + 4) + dY * dY * f
-          a(o + 5) += b(o + 5) + dX * dY * f
-          a(o + 1) += dX * nb / n
-          a(o + 2) += dY * nb / n
-          a(o) = n
-        }
-      }
-      if (b(o + 6) < a(o + 6)) a(o + 6) = b(o + 6)
-      if (b(o + 7) > a(o + 7)) a(o + 7) = b(o + 7)
-      if (b(o + 8) < a(o + 8)) a(o + 8) = b(o + 8)
-      if (b(o + 9) > a(o + 9)) a(o + 9) = b(o + 9)
-      p += 1
-    }
-    a
-  }
-
-  override def finish(buf: Array[Double]): Seq[CorrCell] = {
-    val out = new Array[CorrCell](nPairs)
-    var i = 0
-    var p = 0
-    while (i < k) {
-      var j = i + 1
-      while (j < k) {
-        val b = S * p
-        val n = buf(b)
-        val rho =
-          if (n < 2 || buf(b + 6) == buf(b + 7) || buf(b + 8) == buf(b + 9))
-            None // too few obs, or exactly-constant side: undefined
-          else {
-            val vx = buf(b + 3)
-            val vy = buf(b + 4)
-            val cov = buf(b + 5)
-            if (vx <= 0 || vy <= 0) None
-            else Some(cov / math.sqrt(vx * vy))
-          }
-        out(p) = CorrCell(i, j, rho)
-        j += 1
-        p += 1
-      }
-      i += 1
-    }
-    out.toSeq
-  }
-
-  override def bufferEncoder: Encoder[Array[Double]] =
-    ExpressionEncoder[Array[Double]]()
-  override def outputEncoder: Encoder[Seq[CorrCell]] =
-    ExpressionEncoder[Seq[CorrCell]]()
-}
-
-/** [[CorrMatrixAgg]] with EXACT integer co-moments — the matrix twin of
-  * the [[PearsonArrays]] kernel and of [[graft.ops.Stats.pearson]]'s
-  * decimal aggregate, for consumers whose output is graded at full
-  * float precision against an exact-arithmetic oracle (e1b).
-  *
-  * Why it exists: the double-state [[CorrMatrixAgg]] is correct to
-  * ~1e-12, but its Chan merges are order-sensitive at the last ulp — and
-  * the task scheduler picks the merge order. A cell whose EXACT rho sits
-  * on a decimal rounding boundary (e1b's known 31/32 = 0.96875 cell at
-  * sf0.1) then rounds to a different side run to run, on EITHER engine
-  * (the DuckDB oracle's own parallel `corr` has the same property). This
-  * aggregate removes the class instead of the instance: inputs are
-  * quantized with the kernel's exact `round(x·1e6)` semantics, the five
-  * co-moments accumulate as exact 128-bit integers (so merge is
-  * bit-for-bit associative and commutative — ANY partial-aggregation
-  * order yields the same buffer), and the finish is
-  * [[PearsonArrays.finishRho]]'s deterministic double chain. An oracle
-  * that mirrors the integer co-moments (DuckDB HUGEINT sums) reproduces
-  * the rho DOUBLES bit-identically — no rounding step is needed at all,
-  * and with no rounding there is no boundary.
-  *
-  * Envelope: identical to the kernel's — |x·1e6| ≤ 2^53 per value
-  * (quantize traps loudly past it), 128-bit co-moment overflow traps in
-  * `add128` (reachable only at ≳2×10⁶ maximal-magnitude slots per pair,
-  * far past any per-window bucket count). Undefined cells (n < 2, or a
-  * side exactly constant in the quantized domain — vx = 0 EXACTLY, no
-  * min/max slots needed) are None, as the double form.
-  *
-  * Cost: ~11 longs/pair buffer (vs 10 doubles); the per-pair-slot update
-  * is 3 multiplies + 3 multiplyHigh + five 128-bit adds — no divides
-  * (the double form pays two per slot). Per-row quantization is hoisted
-  * to k calls (not k²). Measured at e1b's shape (k=500, 288 buckets):
-  * within noise of the double form — see SCALE.md's e1b determinism
-  * note.
-  */
-class CorrMatrixExactAgg(k: Int)
     extends Aggregator[Array[Double], Array[Long], Seq[CorrCell]] {
 
   private val nPairs = k * (k - 1) / 2
-  private val S = 11 // slots per pair:
-  // [n, sxHi, sxLo, syHi, syLo, sxxHi, sxxLo, syyHi, syyLo, sxyHi, sxyLo]
-  override def zero: Array[Long] = new Array[Long](S * nPairs)
+  private val Xy = 5 * k                // pair Σxy, 2 longs per pair
+  private val Corr = Xy + 2 * nPairs    // entry (m, a) at Corr + 5*(k*m + a)
+  private val Size = Corr + 5 * k * k
+
+  override def zero: Array[Long] = new Array[Long](Size)
 
   override def reduce(buf: Array[Long], row: Array[Double]): Array[Long] = {
-    // hoisted per-series work: k quantize calls (each a BigDecimal
-    // round — µs-scale) AND each series' square/sign, computed once per
-    // row — the O(k²) inner loop then pays only the cross product and
-    // five 128-bit adds per pair
+    // per-series work once per row: quantize and square each present
+    // value, and list the present and the missing series
     val q = new Array[Long](k)
-    val ok = new Array[Boolean](k)
     val sqHi = new Array[Long](k)
     val sqLo = new Array[Long](k)
+    val present = new Array[Int](k)
+    val missing = new Array[Int](k)
+    var np = 0
+    var nm = 0
     var i = 0
     while (i < k) {
       val x = row(i)
-      if (!x.isNaN) {
+      if (x.isNaN) { missing(nm) = i; nm += 1 }
+      else {
         val v = PearsonArrays.quantize(x)
-        ok(i) = true
         q(i) = v
         sqHi(i) = Math.multiplyHigh(v, v)
         sqLo(i) = v * v
+        present(np) = i
+        np += 1
       }
       i += 1
     }
-    i = 0
-    var p = 0
-    while (i < k) {
-      if (ok(i)) {
-        val xq = q(i)
-        val xh = xq >> 63
-        val xxH = sqHi(i)
-        val xxL = sqLo(i)
-        var j = i + 1
-        while (j < k) {
-          if (ok(j)) {
-            val yq = q(j)
-            val b = S * p
-            buf(b) += 1
-            PearsonArrays.add128(buf, b + 1, xh, xq)
-            PearsonArrays.add128(buf, b + 3, yq >> 63, yq)
-            PearsonArrays.add128(buf, b + 5, xxH, xxL)
-            PearsonArrays.add128(buf, b + 7, sqHi(j), sqLo(j))
-            PearsonArrays.add128(buf, b + 9, Math.multiplyHigh(xq, yq), xq * yq)
-          }
-          j += 1
-          p += 1
-        }
-      } else p += k - i - 1
-      i += 1
+    var b = 0
+    while (b < np) {
+      i = present(b)
+      val xq = q(i)
+      val base = Xy + 2 * (i * k - i * (i + 1) / 2 - i - 1)
+      var c = b + 1
+      while (c < np) {
+        val j = present(c)
+        val yq = q(j)
+        PearsonArrays.add128(buf, base + 2 * j,
+          Math.multiplyHigh(xq, yq), xq * yq)
+        c += 1
+      }
+      b += 1
+    }
+    val full = nm <= np
+    if (full) {
+      // series sums, then negate the terms: a full row subtracts them
+      b = 0
+      while (b < np) {
+        val a = present(b)
+        val v = q(a)
+        buf(5 * a) += 1
+        PearsonArrays.add128(buf, 5 * a + 1, v >> 63, v)
+        PearsonArrays.add128(buf, 5 * a + 3, sqHi(a), sqLo(a))
+        q(a) = -v // |v| ≤ 2^53, and −v² in 128 bits below
+        sqHi(a) = ~sqHi(a) + (if (sqLo(a) == 0) 1 else 0)
+        sqLo(a) = -sqLo(a)
+        b += 1
+      }
+    }
+    // full row: −terms at every missing series; sparse row: +terms at
+    // every present one (the diagonal (a, a) included — finish never
+    // reads it)
+    val rows = if (full) missing else present
+    val nRows = if (full) nm else np
+    var c = 0
+    while (c < nRows) {
+      addTerms(buf, Corr + 5 * k * rows(c), if (full) -1 else 1,
+        q, sqHi, sqLo, present, np)
+      c += 1
     }
     buf
+  }
+
+  /** Adds [dc, q(a), q(a)²] to entry (m, a) of the correction row at
+    * `at`, for every present series a.
+    */
+  private def addTerms(buf: Array[Long], at: Int, dc: Long, q: Array[Long],
+                       sqHi: Array[Long], sqLo: Array[Long],
+                       present: Array[Int], np: Int): Unit = {
+    var b = 0
+    while (b < np) {
+      val a = present(b)
+      val l = at + 5 * a
+      val v = q(a)
+      buf(l) += dc
+      PearsonArrays.add128(buf, l + 1, v >> 63, v)
+      PearsonArrays.add128(buf, l + 3, sqHi(a), sqLo(a))
+      b += 1
+    }
   }
 
   override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
     // exact integer adds: bit-for-bit associative AND commutative, so
     // partial-aggregation order can never change any output bit
-    var p = 0
-    while (p < nPairs) {
-      val o = S * p
+    def addCountSums(o: Int): Unit = { // [count, Σx, Σx²]
       a(o) += b(o)
-      var t = 1
-      while (t < S) {
-        PearsonArrays.add128(a, o + t, b(o + t), b(o + t + 1))
-        t += 2
-      }
-      p += 1
+      PearsonArrays.add128(a, o + 1, b(o + 1), b(o + 2))
+      PearsonArrays.add128(a, o + 3, b(o + 3), b(o + 4))
     }
+    var o = 0
+    while (o < Xy) { addCountSums(o); o += 5 }
+    while (o < Corr) { PearsonArrays.add128(a, o, b(o), b(o + 1)); o += 2 }
+    while (o < Size) { addCountSums(o); o += 5 }
     a
   }
 
   override def finish(buf: Array[Long]): Seq[CorrCell] = {
     val out = new Array[CorrCell](nPairs)
+    // (hi, lo) of series sum plus correction, exact in 128 bits
+    def sumLo(s: Int, l: Int): Long = buf(s + 1) + buf(l + 1)
+    def sumHi(s: Int, l: Int): Long = buf(s) + buf(l) +
+      (if (java.lang.Long.compareUnsigned(sumLo(s, l), buf(s + 1)) < 0) 1
+       else 0)
     var i = 0
     var p = 0
     while (i < k) {
+      val si = 5 * i
       var j = i + 1
       while (j < k) {
-        val b = S * p
-        val n = buf(b)
+        val sj = 5 * j
+        val ci = Corr + 5 * (k * j + i) // i over the rows with j present
+        val cj = Corr + 5 * (k * i + j) // j over the rows with i present
+        val n = buf(si) + buf(ci)
         val rho =
           if (n < 2) None
           else Option(PearsonArrays.finishRhoSlots(n,
-            buf(b + 1), buf(b + 2), buf(b + 3), buf(b + 4),
-            buf(b + 5), buf(b + 6), buf(b + 7), buf(b + 8),
-            buf(b + 9), buf(b + 10))).map(_.doubleValue())
+            sumHi(si + 1, ci + 1), sumLo(si + 1, ci + 1),
+            sumHi(sj + 1, cj + 1), sumLo(sj + 1, cj + 1),
+            sumHi(si + 3, ci + 3), sumLo(si + 3, ci + 3),
+            sumHi(sj + 3, cj + 3), sumLo(sj + 3, cj + 3),
+            buf(Xy + 2 * p), buf(Xy + 2 * p + 1))).map(_.doubleValue())
         out(p) = CorrCell(i, j, rho)
         j += 1
         p += 1
@@ -317,13 +215,8 @@ class CorrMatrixExactAgg(k: Int)
 
 object CorrMatrix {
   /** Column form: `corrMatrix(k)(panelRow)` aggregates panel rows (k-wide
-    * Seq[Double], NaN = missing) to the long-form correlation cells.
+    * array<double>, NaN = missing) to the long-form correlation cells.
     */
   def corrMatrix(k: Int): Column => Column =
     udaf(new CorrMatrixAgg(k), ExpressionEncoder[Array[Double]]()).apply(_)
-
-  /** [[corrMatrix]] with exact integer co-moments and a deterministic
-    * bit-reproducible finish — see [[CorrMatrixExactAgg]]. */
-  def corrMatrixExact(k: Int): Column => Column =
-    udaf(new CorrMatrixExactAgg(k), ExpressionEncoder[Array[Double]]()).apply(_)
 }

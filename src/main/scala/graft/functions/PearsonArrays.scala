@@ -33,7 +33,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * cast/sum overflow, while this kernel throws at its own boundaries —
   * non-finite input, a quantized magnitude past 2^53 (where the
   * double round-trip stops being lossless, so exactness would be a
-  * lie), or a 128-bit co-moment overflow (Acc128 traps signed wrap;
+  * lie), or a 128-bit co-moment overflow (add128 traps signed wrap;
   * reachable only at ~10⁶⁺ maximal-magnitude slots, far past where
   * the aggregate already failed). Everything the aggregate's envelope
   * admits at realistic slot counts, this kernel admits and computes
@@ -84,35 +84,8 @@ case class PearsonArrays(left: Expression, right: Expression)
 
 object PearsonArrays {
 
-  /** Exact signed-128-bit accumulator: (hi, lo) two's complement.
-    * Signed overflow TRAPS (same-sign addends, opposite-sign result —
-    * the exact multi-word rule), so the kernel can never wrap
-    * silently: with per-slot magnitudes ≤ 2^53 each product is ≤
-    * 2^106, and only ≳2×10⁶ maximal-magnitude slots could reach the
-    * 2^127 capacity — where this throws instead.
-    */
-  private final class Acc128 {
-    var hi: Long = 0L
-    var lo: Long = 0L
-    /** this += (addHi, addLo), 128-bit two's complement. */
-    def add(addHi: Long, addLo: Long): Unit = {
-      val newLo = lo + addLo
-      // unsigned carry out of the low word
-      val carry = ((lo & addLo) | ((lo | addLo) & ~newLo)) >>> 63
-      val newHi = hi + addHi + carry
-      if ((hi < 0) == (addHi < 0) && (newHi < 0) != (hi < 0))
-        throw new ArithmeticException(
-          "pearson_arrays: 128-bit co-moment overflow — array too long " +
-            "at this magnitude (the aggregate form overflows loudly " +
-            "under ANSI far earlier)")
-      hi = newHi
-      lo = newLo
-    }
-    def toBigInteger: BigInteger = big(hi, lo)
-  }
-
   /** Quantized-magnitude ceiling: 2^53 — the EXACTNESS boundary, not a
-    * wrap-safety margin (Acc128 traps its own overflow). Past 2^53 the
+    * wrap-safety margin (add128 traps its own overflow). Past 2^53 the
     * `doubleValue().toLong` round-trip below is lossy (a double cannot
     * hold every integer), so the kernel could no longer claim the
     * aggregate's exact arithmetic — it rejects loudly instead. This
@@ -124,11 +97,14 @@ object PearsonArrays {
     */
   private val MaxQuantized = 1L << 53
 
-  /** [[Acc128.add]] on an array slot pair — buf(o) = hi, buf(o+1) = lo —
-    * for callers whose 128-bit state lives in a flat buffer rather than
-    * per-accumulator objects (the exact matrix aggregate's per-pair
-    * slots, [[CorrMatrixExactAgg]]). Same two's-complement carry and
-    * the same loud signed-overflow trap.
+  /** Exact signed-128-bit accumulate on a flat-buffer slot pair:
+    * (buf(o), buf(o+1)) = (hi, lo) two's complement += (addHi, addLo) —
+    * the state of [[rho]] and of [[CorrMatrixAgg]]'s series, pair and
+    * correction slots. Signed overflow TRAPS (same-sign addends,
+    * opposite-sign result — the exact multi-word rule), so nothing can
+    * wrap silently: with per-slot magnitudes ≤ 2^53 each product is ≤
+    * 2^106, and only ≳2×10⁶ maximal-magnitude slots could reach the
+    * 2^127 capacity — where this throws instead.
     */
   private[functions] def add128(buf: Array[Long], o: Int,
                                 addHi: Long, addLo: Long): Unit = {
@@ -144,8 +120,7 @@ object PearsonArrays {
     buf(o + 1) = newLo
   }
 
-  /** (hi, lo) two's-complement pair as a BigInteger — [[Acc128
-    * .toBigInteger]] for flat-buffer state. */
+  /** (hi, lo) two's-complement pair as a BigInteger. */
   private[functions] def big(hi: Long, lo: Long): BigInteger = {
     val bytes = new Array[Byte](16)
     var i = 0
@@ -164,7 +139,7 @@ object PearsonArrays {
     * Non-finite input and out-of-envelope magnitudes fail loudly here
     * (the aggregate form fails the same way at its ANSI cast — Spark's
     * `Round` passes NaN/Infinity through for doubles, and the decimal
-    * cast then throws): silent saturation via `toLong`, or an Acc128
+    * cast then throws): silent saturation via `toLong`, or an add128
     * wrap from admitted-but-huge values, can never happen.
     */
   private[functions] def quantize(x: Double): Long = {
@@ -190,25 +165,24 @@ object PearsonArrays {
   def rho(a: ArrayData, b: ArrayData): java.lang.Double = {
     val n = math.min(a.numElements(), b.numElements())
     var cnt = 0L
-    val sx = new Acc128; val sy = new Acc128
-    val sxx = new Acc128; val syy = new Acc128; val sxy = new Acc128
+    val acc = new Array[Long](10) // (hi, lo) of Σx, Σy, Σx², Σy², Σxy
     var i = 0
     while (i < n) {
       if (!a.isNullAt(i) && !b.isNullAt(i)) {
         val xq = quantize(a.getDouble(i))
         val yq = quantize(b.getDouble(i))
         cnt += 1
-        sx.add(xq >> 63, xq)
-        sy.add(yq >> 63, yq)
-        sxx.add(Math.multiplyHigh(xq, xq), xq * xq)
-        syy.add(Math.multiplyHigh(yq, yq), yq * yq)
-        sxy.add(Math.multiplyHigh(xq, yq), xq * yq)
+        add128(acc, 0, xq >> 63, xq)
+        add128(acc, 2, yq >> 63, yq)
+        add128(acc, 4, Math.multiplyHigh(xq, xq), xq * xq)
+        add128(acc, 6, Math.multiplyHigh(yq, yq), yq * yq)
+        add128(acc, 8, Math.multiplyHigh(xq, yq), xq * yq)
       }
       i += 1
     }
     if (cnt < 2) return null
-    finishRhoSlots(cnt, sx.hi, sx.lo, sy.hi, sy.lo,
-      sxx.hi, sxx.lo, syy.hi, syy.lo, sxy.hi, sxy.lo)
+    finishRhoSlots(cnt, acc(0), acc(1), acc(2), acc(3),
+      acc(4), acc(5), acc(6), acc(7), acc(8), acc(9))
   }
 
   // ---------------------------------------------------------------------
@@ -220,7 +194,7 @@ object PearsonArrays {
   // (nearest-even) conversion, which is UNIQUE — so fast path and
   // BigInteger path cannot differ by even one ulp
   // (PearsonArraysSpec property-pins this on adversarial magnitudes).
-  // Motivation: [[CorrMatrixExactAgg]]'s finish runs once per matrix
+  // Motivation: [[CorrMatrixAgg]]'s finish runs once per matrix
   // CELL with parallelism capped at the window count — at e1b's shape
   // (250k cells, 2 windows) the BigInteger finish cost a measured
   // ~0.4 s of the query's 2.6 s; this path is ~50 ns/cell.
@@ -273,8 +247,9 @@ object PearsonArrays {
   /** The co-moment finish over raw 128-bit buffer slots, with the fast
     * long-arithmetic path when the checked envelope holds (every input
     * the quantizer admits at ≤ ~10⁵ slots per pair does) and the
-    * BigInteger [[finishRho]] as the bit-identical fallback. Layout
-    * matches [[CorrMatrixExactAgg]]'s slots: five (hi, lo) pairs.
+    * BigInteger [[finishRho]] as the bit-identical fallback. Arguments:
+    * the pair count and five (hi, lo) co-moments — [[CorrMatrixAgg]]
+    * rebuilds them per pair from its series and correction slots.
     */
   private[functions] def finishRhoSlots(cnt: Long,
       sxHi: Long, sxLo: Long, syHi: Long, syLo: Long,
@@ -341,7 +316,7 @@ object PearsonArrays {
     * conversion `cast(decimal as double)` performs), then
     * `cov / sqrt(vx·vy)` in IEEE doubles. Every consumer of the exact
     * kernel family ([[PearsonArrays.rho]] and
-    * [[CorrMatrixExactAgg]]'s per-pair finish) runs THIS op sequence,
+    * [[CorrMatrixAgg]]'s per-pair finish) runs THIS op sequence,
     * so two engines holding the same integer co-moments produce
     * bit-identical rho — the property the e1b oracle's HUGEINT mirror
     * relies on (its `CAST(CAST(v AS VARCHAR) AS DOUBLE)` is the same

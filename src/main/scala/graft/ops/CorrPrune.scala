@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Pair-pruned correlation tier for panels too wide for the one-pass
-  * co-moment UDAF (its per-partition buffer is O(k²) doubles, which caps
+  * co-moment UDAF (its per-partition buffer is O(k²) longs, which caps
   * it near k ≈ 1-2000 series — see SCALE.md's corr tier table).
   *
   * Identity that makes pruning possible: Pearson(a, b) is exactly the
@@ -42,6 +42,9 @@ object CorrPrune {
   /** Candidate (i, j) series pairs (i < j) whose centered-vector LSH
     * buckets collide in at least one band. `panel` is the aligned long
     * panel (keyCol, posCol: 1-based int grid position ≤ dims, valueCol).
+    * An observed value at a position outside [1, dims] fails the query
+    * (raise_error): it would join no hyperplane and silently drop out of
+    * its series' bucket statistics.
     */
   def corrCandidates(panel: DataFrame, keyCol: String, posCol: String,
                      valueCol: String, dims: Int, bands: Int,
@@ -49,6 +52,11 @@ object CorrPrune {
     val ex = panel.select(col(keyCol), col(posCol).as("pos"),
         round(col(valueCol) * 1e6, 0).cast("long").as("xq"))
       .where(col("xq").isNotNull)
+      .withColumn("pos", when(col("pos").between(1, dims), col("pos"))
+        .otherwise(raise_error(concat(lit("corrCandidates: series "),
+          col(keyCol).cast("string"), lit(" has position "),
+          coalesce(col("pos").cast("string"), lit("NULL")),
+          lit(s" outside [1, $dims]")))))
     // the plane table is bands·bits·dims rows — broadcast it only while
     // that is genuinely dimension-small (a few MB: 8×5 planes at 10⁴
     // positions is 400k rows). At very wide grids (dims ≳ 10⁵) the

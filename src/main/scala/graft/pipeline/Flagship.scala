@@ -194,8 +194,9 @@ object Flagship {
   /** The reference's exact per-window artifact at its REAL width, in the
     * engine's at-scale shape: ONE window-keyed one-pass co-moment UDAF
     * job computes every window's full k×k correlation matrix from a
-    * single resample shuffle (e1b's plan — per-window state is a
-    * k(k−1)/2×10-double co-moment buffer, never k² rows per bucket), the
+    * single resample shuffle (e1b's plan — per-window state is an exact
+    * integer co-moment buffer of ~6k² longs, never k² rows per
+    * bucket), the
     * per-window cell ARRAYS are cached once, and the driver loop only
     * steers the per-window square-CSV writes
     * ([[Sinks.writeWideMatrixCsvDense]]: ids as header + index, unit
@@ -205,7 +206,12 @@ object Flagship {
     * recomputes each window through the toy per-slice pair join.
     *
     * Same never-throw contract as [[run]]: a failing window is recorded
-    * and skipped; a setup failure degrades to every window failed.
+    * and skipped; a setup failure degrades to every window failed. Input
+    * outside the aggregate's exact envelope is a setup failure: one
+    * non-finite value or one |x| > ~9×10⁹ ANYWHERE in the session throws
+    * in the aggregate's 1e-6 quantization inside the single
+    * window-keyed job, so EVERY window of the run is failed, not only
+    * the window holding the value — never filled with garbage rho.
     */
   def runWideAtWidth(spark: SparkSession, sfDir: String, outDir: String,
                      openSec: Long, closeSec: Long, windowSec: Long,

@@ -60,17 +60,17 @@ object PipelineQueries {
   // measure, correlation_matrix_exporter.py:142,188). The
   // one-pass co-moment UDAF keyed BY WINDOW computes every window's
   // full matrix from a single resample shuffle: per window the state is
-  // one k(k-1)/2×11-long buffer (co-moments, not data, cross the
-  // merge — ~11 MB at k=500), where e1's pair-join form would shuffle
+  // one ~6k²-long buffer (co-moments, not data, cross the
+  // merge — ~12 MB at k=500), where e1's pair-join form would shuffle
   // windows·buckets·k²/2 rows. Daily windows over two days; every
   // undefined (NaN) pair is graded too.
   //
-  // EXACT tier, graded at FULL double precision: the co-moments are
-  // exact 128-bit integers (CorrMatrixExactAgg), so the merge is
-  // bit-for-bit order-independent and the rho doubles come from one
-  // deterministic finish chain the HUGEINT oracle below reproduces
-  // bit-identically — which is why there is NO round() on either side.
-  // The double-state form of this query flaked permanently at sf0.1:
+  // Graded at FULL double precision: the aggregate's co-moments are
+  // exact 128-bit integers, so the merge is bit-for-bit
+  // order-independent and the rho doubles come from one deterministic
+  // finish chain the HUGEINT oracle below reproduces bit-identically —
+  // which is why there is NO round() on either side. A double-state
+  // (Chan-merge) form of this query once flaked permanently at sf0.1:
   // one cell's exact rho is 31/32 = 0.96875, a precise HALF_UP boundary
   // at 4 dp, and BOTH engines' order-sensitive double accumulations
   // landed ±1 ulp around it run to run (SCALE.md's r12/r15 analysis).
@@ -84,25 +84,24 @@ object PipelineQueries {
       val winSec = 86400L
       val (users, panel) = SparkEntry.widePanel(s, d, 500, jan1, jan3, 600)
       val k = users.size
-      // Partial-buffer bound, RETUNED for the exact aggregate: each
-      // partition holds windows×~11 MB of integer co-moment state, so
-      // uncoalesced 32 partitions would serialize ~700 MB into the
-      // merge — but unlike the double form's Chan merge, the exact
-      // merge is pure 128-bit adds (no divides), so a handful of extra
-      // partials is near-free while the O(k²·buckets) REDUCE loop
-      // parallelizes with partitions. buckets/64 (4 partitions here,
-      // ~90 MB of transient buffers) instead of the double form's
-      // buckets/256 (which is 1 partition at this fixture — the whole
-      // 36M-pair-slot reduce on one thread); the per-CELL finish cost
-      // is addressed separately (PearsonArrays.finishRhoSlots — the
-      // BigInteger chain measured ~0.4 s of this query before the
-      // allocation-free 128-bit fast path replaced it, SCALE.md).
+      // Partial-buffer bound: each partition holds windows×~12 MB of
+      // integer co-moment state, so uncoalesced 32 partitions would
+      // serialize ~770 MB into the merge — but the merge is pure 128-bit
+      // adds (no divides), so a handful of extra partials is near-free
+      // while the O(k²·buckets) REDUCE loop parallelizes with
+      // partitions: buckets/64 (4 partitions here, ~100 MB of transient
+      // buffers), not the other one-pass tiers' buckets/256 (1
+      // partition at this fixture — the whole 36M-pair-slot reduce on
+      // one thread). The per-CELL finish is
+      // PearsonArrays.finishRhoSlots' allocation-free 128-bit path (the
+      // BigInteger chain it replaced measured ~0.4 s of this query,
+      // SCALE.md).
       val nBuckets = (jan3 - jan1) / 600
       panel
         .coalesce(graft.ops.Relational.boundedPartitions(nBuckets, 64))
         .withColumn("win", ((col("bucket") - jan1) / winSec).cast("long"))
         .groupBy("win")
-        .agg(graft.functions.CorrMatrix.corrMatrixExact(k)(col("vals"))
+        .agg(graft.functions.CorrMatrix.corrMatrix(k)(col("vals"))
           .as("cells"))
         .select(col("win"), explode(col("cells")).as("c"))
         .select(col("win"),
@@ -786,7 +785,7 @@ object PipelineQueries {
   // before aggregating — the exact blowup the one-pass co-moment UDAF
   // exists to avoid. Here the edges come from that tier at every fixture
   // user (k=150 at sf0.01; k=500 at sf0.1): ONE resample shuffle feeds a
-  // k-wide panel row per bucket, the aggregate moves k(k-1)/2×10 doubles
+  // k-wide panel row per bucket, the aggregate moves ~6k² longs
   // of co-moment state (not data) across the merge, and the UDAF's
   // 0-based index into the sorted vertex dimension IS the vid (the
   // reference's tickers.index(src)), so the label→index join costs

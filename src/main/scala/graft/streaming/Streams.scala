@@ -109,8 +109,9 @@ object Streams {
     *      streaming [[graft.SparkEntry.widePanel]] row;
     *   3. tumbling `span` windows over the panel rows: the one-pass
     *      co-moment UDAF ([[graft.functions.CorrMatrixAgg]]) — the SAME
-    *      aggregate the batch tiers run, its Chan-mergeable buffer now
-    *      carried as streaming state.
+    *      aggregate the batch tiers run, its exact integer buffer now
+    *      carried as streaming state (integer merges, so the batch
+    *      order cannot change a bit of the result).
     *
     * ONE deliberate semantic difference from the batch flagship: no
     * forward-fill. The batch panel ffills gaps before correlating
@@ -153,6 +154,15 @@ object Streams {
     * Restart semantics: the checkpoint + the idempotent per-batch sink
     * make a restarted drain emit each newly finalized span exactly
     * once (spec-pinned).
+    *
+    * Envelope: a non-finite value or |x| > ~9×10⁹ throws in the
+    * aggregate's 1e-6 quantization and fails the query. A restart
+    * replays the same input from the checkpoint, so it fails again
+    * every time: the bad value is a poison pill until it is removed
+    * from the source. The co-moment state is an `array<bigint>` buffer;
+    * a checkpoint written while that state was `array<double>` (the
+    * double-state aggregate this one replaced) cannot be resumed —
+    * start such a query from a fresh checkpoint.
     */
   def windowedCorr(spark: SparkSession, srcDir: String, outDir: String,
                    checkpointDir: String, users: Seq[Long],

@@ -8,6 +8,8 @@ import scala.util.Random
   * Aggregator's reduce/merge/finish directly (no Spark session): the
   * partial-aggregation correctness they pin down is exactly what Spark
   * exercises when it splits rows across partitions and merges buffers.
+  * The merge laws are BIT-exact (integer co-moments); the bit-identity
+  * to the PearsonArrays kernel over NaN densities is CorrMatrixExactSpec.
   */
 class CorrMatrixSpec extends AnyFunSuite {
 
@@ -15,14 +17,20 @@ class CorrMatrixSpec extends AnyFunSuite {
   private def agg = new CorrMatrixAgg(k)
   private val trials = 200
 
+  // 6-dp-quantized values (what Exact.davg / ffill hand every corr
+  // consumer), magnitude ~100 — the engine's real input shape
   private def randRows(rnd: Random): List[Seq[Double]] =
     List.fill(rnd.nextInt(31))(Seq.fill(k)(
-      if (rnd.nextInt(5) == 0) Double.NaN else rnd.nextDouble() * 200 - 100))
+      if (rnd.nextInt(5) == 0) Double.NaN
+      else math.round((rnd.nextDouble() * 200 - 100) * 1e6) / 1e6))
 
   private def run(rows: Seq[Seq[Double]]): Seq[CorrCell] = {
     val a = agg
     a.finish(rows.foldLeft(a.zero)((b, r) => a.reduce(b, r.toArray)))
   }
+
+  private def bits(o: Option[Double]): Option[Long] =
+    o.map(java.lang.Double.doubleToLongBits)
 
   private def close(a: Option[Double], b: Option[Double],
                     tol: Double = 1e-9): Boolean = (a, b) match {
@@ -42,7 +50,7 @@ class CorrMatrixSpec extends AnyFunSuite {
         l.foldLeft(a.zero)((b, r) => a.reduce(b, r.toArray)), r.foldLeft(a.zero)((b, r) => a.reduce(b, r.toArray))))
       val single = run(rows)
       assert(merged.zip(single).forall { case (m, s) =>
-        m.i == s.i && m.j == s.j && close(m.rho, s.rho) })
+        m.i == s.i && m.j == s.j && bits(m.rho) == bits(s.rho) })
     }
   }
 
@@ -55,7 +63,7 @@ class CorrMatrixSpec extends AnyFunSuite {
         y.foldLeft(a.zero)((b, r) => a.reduce(b, r.toArray))))
       val yx = a.finish(a.merge(y.foldLeft(a.zero)((b, r) => a.reduce(b, r.toArray)),
         x.foldLeft(a.zero)((b, r) => a.reduce(b, r.toArray))))
-      assert(xy.zip(yx).forall { case (p, q) => close(p.rho, q.rho) })
+      assert(xy.zip(yx).forall { case (p, q) => bits(p.rho) == bits(q.rho) })
     }
   }
 
@@ -106,11 +114,12 @@ class CorrMatrixSpec extends AnyFunSuite {
   test("near-constant series at large magnitude: stable rho, no " +
     "cancellation garbage") {
     // one 6-dp quantization step around magnitude 100 — exactly the
-    // shape forward-fill produces. The raw-power-sum form computes
-    // vx = n·Σx²−(Σx)² here, where the true signal (~3e-10) drowns in
-    // ~1e-7 of cancellation noise at this magnitude: a sign-random vx
-    // and a garbage or spuriously-None rho. Both series move together
-    // only on the last row, so the exact answer is 1.
+    // shape forward-fill produces. A raw-power-sum form in DOUBLES
+    // computes vx = n·Σx²−(Σx)² here, where the true signal (~3e-10)
+    // drowns in ~1e-7 of cancellation noise at this magnitude: a
+    // sign-random vx and a garbage or spuriously-None rho. The integer
+    // sums keep it exact. Both series move together only on the last
+    // row, so the exact answer is 1.
     val rows = (1 to 287).map(_ =>
       Seq(100.000001, 1.0, 0.0, 0.0)) :+ Seq(100.000002, 2.0, 0.0, 0.0)
     val cell = run(rows).find(c => c.i == 0 && c.j == 1).get
@@ -121,8 +130,8 @@ class CorrMatrixSpec extends AnyFunSuite {
     val merged = a.finish(a.merge(
       l.foldLeft(a.zero)((b, x) => a.reduce(b, x.toArray)),
       r.foldLeft(a.zero)((b, x) => a.reduce(b, x.toArray))))
-    assert(close(merged.find(c => c.i == 0 && c.j == 1).get.rho,
-      Some(1.0), 1e-6))
+    assert(bits(merged.find(c => c.i == 0 && c.j == 1).get.rho) ==
+      bits(cell.rho))
   }
 
   test("matches the direct two-pass Pearson computation") {
@@ -146,7 +155,8 @@ class CorrMatrixSpec extends AnyFunSuite {
           }
         val got = cells.find(c => c.i == i && c.j == j).get.rho
         (want, got) match {
-          case (Some(w), Some(g)) => assert(math.abs(w - g) < 1e-6)
+          case (Some(w), Some(g)) => assert(math.abs(w - g) < 1e-7,
+            s"pair ($i,$j): two-pass $w agg $g")
           case (None, None) =>
           case (w, g) => fail(s"pair ($i,$j): want $w got $g")
         }

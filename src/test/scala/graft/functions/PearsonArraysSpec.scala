@@ -210,11 +210,11 @@ class PearsonArraysSpec extends SparkTestBase {
     assert(!inEnv.isNaN)
   }
 
-  test("Acc128 traps a 128-bit co-moment wrap instead of silently " +
+  test("add128 traps a 128-bit co-moment wrap instead of silently " +
     "diverging: ~2.3M maximal-magnitude slots throw") {
     import org.apache.spark.sql.catalyst.util.GenericArrayData
     // each slot quantizes to ~8.9e15 (inside 2^53); its square is
-    // ~2^106, so ~2^21 slots exceed Acc128's 2^127 capacity — the sxx
+    // ~2^106, so ~2^21 slots exceed add128's 2^127 capacity — the sxx
     // accumulator must THROW there, never wrap
     val n = 2300000
     val big = java.lang.Double.valueOf(8.9e9)

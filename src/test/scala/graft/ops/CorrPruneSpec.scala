@@ -70,6 +70,33 @@ class CorrPruneSpec extends SparkTestBase {
     assert(n < 8L * 7 / 2, s"2 bands × 16 buckets over 8 series must drop some of the 28 pairs (got $n)")
   }
 
+  test("corrCandidates refuses a position outside [1, dims] loudly") {
+    // such a row joins no hyperplane: silently truncated bucket stats
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Seq.empty
+      else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    for (bad <- Seq(0, 49)) {
+      val shifted = panel.withColumn("pos",
+        when(col("key") === 3L && col("pos") === 7, lit(bad))
+          .otherwise(col("pos")))
+      val e = intercept[Exception] {
+        CorrPrune.corrCandidates(shifted, "key", "pos", "value",
+          dims = 48, bands = 2, bits = 4).collect()
+      }
+      assert(messages(e).exists(_.contains(
+        s"series 3 has position $bad outside [1, 48]")),
+        messages(e).mkString(" | "))
+    }
+    // a null value at an out-of-range position carries no statistics
+    // and is dropped as before
+    val nullOut = panel.union(Seq((3L, 49, Option.empty[Double]))
+      .toDF("key", "pos", "value"))
+    assert(CorrPrune.corrCandidates(nullOut, "key", "pos", "value",
+        dims = 48, bands = 2, bits = 4).count() ==
+      CorrPrune.corrCandidates(panel, "key", "pos", "value",
+        dims = 48, bands = 2, bits = 4).count())
+  }
+
   test("candidateRhoVectors ≡ candidateRho: same pairs, same rho, " +
     "including null grid slots") {
     // leading-null slots (pre-first-observation ffill output) must keep

@@ -267,9 +267,9 @@ class PlanGuardSpec extends SparkTestBase {
 
   test("e1b's per-window wide matrices share the same join-free shape") {
     val p = plan("e1b_flagship_wide")
-    // the EXACT integer co-moment aggregate (r16): bit-deterministic
-    // merge, same join-free per-window shape as the double form
-    assert(p.toLowerCase.contains("corrmatrixexactagg"), p)
+    // the exact integer co-moment aggregate: bit-deterministic merge,
+    // the same join-free per-window shape as g3 and g4
+    assert(p.toLowerCase.contains("corrmatrixagg"), p)
     assert(!p.contains("Inner"), p)
     assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"),
       p)

@@ -333,19 +333,17 @@ trait StreamRecipes extends SparkTestBase {
     // nothing streamed — prefix or not — is absent from the batch set
     assert(all.join(batchAll.select("window_start", "i", "j"),
       Seq("window_start", "i", "j"), "left_anti").count() == 0)
-    // rho equal up to the Chan-merge fp tolerance (stream and batch
-    // accumulate partials in different orders); undefined (null) cells
-    // must agree exactly, and defined rhos must actually be compared
+    // rho BIT-equal: the co-moments merge as exact integers, so the
+    // different partial orders of stream and batch cannot move a bit;
+    // undefined (null) cells agree too, and defined rhos must actually
+    // be compared
     val j = streamed.join(batch
         .select(col("window_start"), col("i"), col("j"),
           col("rho").as("brho")),
       Seq("window_start", "i", "j"), "full_outer")
-    assert(j.where(col("rho").isNull =!= col("brho").isNull).count() == 0)
+    assert(j.where(!(col("rho") <=> col("brho"))).count() == 0)
     val defined = j.where(col("rho").isNotNull && col("brho").isNotNull)
     assert(defined.count() > 0, "no defined rho pair in the compare")
-    val maxDiff = defined
-      .agg(max(abs(col("rho") - col("brho")))).head().getDouble(0)
-    assert(maxDiff < 1e-9, s"max rho diff $maxDiff")
   }
 
   /** w18: ffill stream chained into windowedCorrFromCells equals the
@@ -402,12 +400,10 @@ trait StreamRecipes extends SparkTestBase {
         .select(col("window_start"), col("i"), col("j"),
           col("rho").as("brho")),
       Seq("window_start", "i", "j"), "full_outer")
-    assert(j.where(col("rho").isNull =!= col("brho").isNull).count() == 0)
+    // bit-equal, nulls included: integer co-moment merges
+    assert(j.where(!(col("rho") <=> col("brho"))).count() == 0)
     val defined = j.where(col("rho").isNotNull)
     assert(defined.count() > 0)
-    val maxDiff = defined.agg(max(abs(col("rho") - col("brho"))))
-      .head().getDouble(0)
-    assert(maxDiff < 1e-9, s"max rho diff $maxDiff")
     // non-vacuity: the fill is load-bearing — the UNFILLED chain over
     // the same ticks disagrees with the filled one on this fixture
     val unfilled = Streams.windowedCorrPlan(ev, users,
@@ -550,14 +546,12 @@ trait StreamRecipes extends SparkTestBase {
     assert(a.count() == b.count(),
       s"restart drain ${a.count()} rows vs single drain ${b.count()}")
     val j = a.join(b, Seq("window_start", "i", "j"), "full_outer")
-    assert(j.where(col("rho").isNull =!= col("brho").isNull).count() == 0,
-      "null-rho pattern diverged across the restart")
+    // bit-equal, nulls included: the batch orders differ across the
+    // restart, but the co-moments merge as exact integers
+    assert(j.where(!(col("rho") <=> col("brho"))).count() == 0,
+      "rho diverged across the restart")
     val defined = j.where(col("rho").isNotNull)
     assert(defined.count() > 0, "rho compare is vacuous")
-    val maxDiff = defined.agg(max(abs(col("rho") - col("brho"))))
-      .head().getDouble(0)
-    // Chan-merge partials may accumulate in different batch orders
-    assert(maxDiff < 1e-9, s"max rho diff across restart $maxDiff")
     // day 1 crossed the restart and was emitted by the second drain
     val day1 = a.where(col("window_start") === base + 86400L)
     assert(day1.count() == 1, "day-1 span missing after restart")
