@@ -1455,7 +1455,8 @@ object SparkEntry {
     *     the pair-join tier, a deliberate non-goal of this entry
     *     point). The emitted pair set is the LSH candidates (recall
     *     governed by the band geometry below), each with its exact
-    *     Pearson.
+    *     Pearson from the vector verify
+    *     ([[graft.ops.CorrPrune.candidateRhoVectors]]).
     *
     * `roundThenFilter = Some((scale, t))` applies
     * `round(rho, scale) >= t` INSIDE the selector, in exactly that
@@ -1492,10 +1493,7 @@ object SparkEntry {
   private[graft] def panelRho(s: SparkSession, d: String, nUsers: Int,
       a: Long, b: Long, step: Long,
       roundThenFilter: Option[(Int, Double)] = None,
-      onePassMaxK: Int = OnePassMaxK,
-      broadcastVerifyMaxCells: Long =
-        graft.ops.CorrPrune.BroadcastVerifyMaxCells)
-      : (Seq[Long], DataFrame) = {
+      onePassMaxK: Int = OnePassMaxK): (Seq[Long], DataFrame) = {
     val nBuckets = (b - a) / step
     val (users, panel) = widePanel(s, d, nUsers, a, b, step)
     val k = users.size
@@ -1517,24 +1515,14 @@ object SparkEntry {
         // derivation reuses the same in-memory relation widePanel built
         val p = resampled(s, d, nUsers, a, b, step)
           .withColumn("pos", ((col("bucket") - a) / step + 1).cast("int"))
-        // verify-path selection by panel size: the broadcast verify
-        // ships each executor the whole panel (right up to ~128 MB =
-        // BroadcastVerifyMaxCells grid cells); past that the vector
-        // verify contracts the panel to one compact row per series and
-        // joins candidates against it — no panel broadcast in the
-        // cluster shape, where size-based broadcasts are gone and only
-        // hints remain (PlanGuardSpec pins both shapes at
-        // autoBroadcastJoinThreshold=-1; at fixture scale the planner
-        // may still broadcast the small bucketed cell panel into the
-        // shared grid join, which is size adaptivity, not a hint)
-        val rho =
-          if (k.toLong * nBuckets <= broadcastVerifyMaxCells)
-            graft.ops.CorrPrune.candidateRho(p, "user_id", "pos", "value",
-              dims = nBuckets.toInt, bands = A3dBands, bits = A3dBits)
-          else
-            graft.ops.CorrPrune.candidateRhoVectors(p, "user_id", "pos",
-              "value", dims = nBuckets.toInt, bands = A3dBands,
-              bits = A3dBits)
+        // the vector verify contracts the panel to one compact row per
+        // series and joins candidates against it — no panel broadcast
+        // in the cluster shape, where size-based broadcasts are gone
+        // and only hints remain (PlanGuardSpec pins it at
+        // autoBroadcastJoinThreshold=-1)
+        val rho = graft.ops.CorrPrune.candidateRhoVectors(p, "user_id",
+          "pos", "value", dims = nBuckets.toInt, bands = A3dBands,
+          bits = A3dBits)
         // round-then-filter BELOW the vid map, then a registered cache
         // on the handful of survivors: the candidate plan's band-bucket
         // self-join re-reads shared subtrees, which the cache pays for
@@ -1609,21 +1597,23 @@ object SparkEntry {
   // from banded hyperplane buckets over the integer-exact CENTERED
   // series (Pearson = cosine of centered vectors; the sign test
   // n·Σs·xq − S·Σs is pure long arithmetic, so the DuckDB oracle
-  // regenerates identical buckets), then exact Pearson verification and
-  // the ρ ≥ 0.5 keep. 4-dp rounding before the threshold for the same
-  // boundary-density reason as a3c.
+  // regenerates identical buckets), then the exact Pearson vector verify
+  // (CorrPrune.candidateRhoVectors: one pos-ordered vector per series,
+  // the pearson_arrays kernel per candidate pair, no panel broadcast)
+  // and the ρ ≥ 0.5 keep. 4-dp rounding before the threshold for the
+  // same boundary-density reason as a3c.
   private val A3dBands = 8
   private val A3dBits = 5
   private val qA3d = Q("a3d_corr_pruned",
     (s, d) => {
       // resampleFfill caches the filled panel; the pos projection on top
-      // is trivial, so the three consumers (bucketing ex/stats + both
-      // verify sides) all read the cache
+      // is trivial, so both consumers (bucketing + the per-series
+      // vectors) read the cache
       val panel = resampled(s, d, 300, jan1, jan2, 600)
         .withColumn("pos",
           ((col("bucket") - jan1) / 600 + 1).cast("int"))
       graft.ops.CorrPrune
-        .candidateRho(panel, "user_id", "pos", "value",
+        .candidateRhoVectors(panel, "user_id", "pos", "value",
           dims = 144, bands = A3dBands, bits = A3dBits)
         .select(col("i"), col("j"), round(col("rho"), 4).as("rho"))
         .where(col("rho") >= 0.5)
@@ -1631,10 +1621,11 @@ object SparkEntry {
     },
     a3dOracleSql)
 
-  /** a3d's DuckDB mirror — shared with [[qA3e]]: the auto-selector's
-    * forced wide branch passes identical geometry (300 series, 144
-    * positions, 8 bands × 5 bits, ρ ≥ 0.5 post-4-dp-round) through the
-    * same CorrPrune machinery, so one oracle grades both routes.
+  /** a3d's DuckDB mirror — shared with [[qA3e]] and [[qA3f]]: the
+    * auto-selector's forced wide branch passes identical geometry (300
+    * series, 144 positions, 8 bands × 5 bits, ρ ≥ 0.5 post-4-dp-round)
+    * through the same CorrPrune machinery, so one oracle grades every
+    * route.
     */
   private lazy val a3dOracleSql: Option[String] =
     Some(ffillSqlCte(300, jan1, jan2, 600) + s""",
@@ -1677,8 +1668,8 @@ object SparkEntry {
 
   // A3 tier switch, wide side ON THE ORACLE GATE: the same pruned
   // search as a3d, reached through the automatic selector with the
-  // ceiling forced below k — so the driver's correctness gate grades
-  // panelRho's wide branch end to end, not just its spec. The oracle
+  // one-pass ceiling forced below k — so the driver's correctness gate
+  // grades panelRho's wide branch end to end, not just its spec. The oracle
   // is a3d's verbatim (the selector hands identical geometry to
   // CorrPrune: 300 series, 144 grid positions, 8 bands × 5 bits, and
   // the round(rho,4) >= 0.5 keep now rides INSIDE the selector in the
@@ -1694,30 +1685,9 @@ object SparkEntry {
     },
     a3dOracleSql)
 
-  // A3 tier iv at the POST-BROADCAST regime, forced: the same pruned
-  // search as a3d through CorrPrune.candidateRhoVectors — the verify
-  // path panelRho selects once k·dims exceeds BroadcastVerifyMaxCells
-  // (~128 MB of panel, k ≳ 2000 at 10⁴ positions), where shipping every
-  // executor a panel copy stops scaling. The panel contracts to one
-  // compact vector row per series; candidate pairs join the vectors and
-  // the identical Stats.pearson verifies map-side-partially — no panel
-  // broadcast anywhere (PlanGuardSpec pins it in the cluster shape).
-  // Identical geometry and output to a3d, so the oracle is a3d's
-  // verbatim — the driver's gate grades that the two physical verify
-  // strategies agree bit-for-bit after the 4-dp round.
-  private val qA3f = Q("a3f_corr_pruned_unbroadcast",
-    (s, d) => {
-      val panel = resampled(s, d, 300, jan1, jan2, 600)
-        .withColumn("pos",
-          ((col("bucket") - jan1) / 600 + 1).cast("int"))
-      graft.ops.CorrPrune
-        .candidateRhoVectors(panel, "user_id", "pos", "value",
-          dims = 144, bands = A3dBands, bits = A3dBits)
-        .select(col("i"), col("j"), round(col("rho"), 4).as("rho"))
-        .where(col("rho") >= 0.5)
-        .transform(Q.sortedSmall(_, "i", "j"))
-    },
-    a3dOracleSql)
+  // a3f is a3d (the pruned tier has one verify); the name stays because
+  // the 138-query registry is the contract.
+  private val qA3f = Q("a3f_corr_pruned_unbroadcast", qA3d.fn, a3dOracleSql)
 
   // --------------------------------------------------------------- wiring
 

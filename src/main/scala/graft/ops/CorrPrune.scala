@@ -12,8 +12,10 @@ import org.apache.spark.sql.functions._
   * rescales each vector, and cosine is scale-invariant). So "find pairs
   * with ρ ≥ t" is an angular similarity search — the same problem d5/e2
   * solve with banded random-hyperplane LSH. Candidate pairs share a
-  * (band, bucket); they are then verified with the exact
-  * [[Stats.pearson]] aggregate, so emitted pairs are exact and only
+  * (band, bucket); [[candidateRhoVectors]] then verifies each with the
+  * exact pairwise-complete Pearson of the
+  * [[graft.functions.PearsonArrays]] kernel (bit-identical to the
+  * [[Stats.pearson]] aggregate), so emitted pairs are exact and only
   * recall is probabilistic (1 − (1 − p^bits)^bands with p = 1 − θ/π — at
   * ρ ≥ 0.9, θ ≤ 26° and a handful of bands already give ≥ 0.99; choose
   * bands/bits for the target threshold).
@@ -120,93 +122,40 @@ object CorrPrune {
       .distinct()
   }
 
-  /** Exact Pearson (via [[Stats.pearson]], pairwise-complete) for every
-    * LSH candidate pair — unrounded and unfiltered, so callers control
-    * the threshold/rounding (and their oracle mirrors it). Output rows
-    * are a subset of the exact all-pairs answer; recall is governed by
-    * bands/bits. A candidate pair with zero pairwise-complete slots
-    * emits no row (see the null-slot filter below) — undefined rho is
-    * not a result; [[candidateRhoVectors]] drops the same pairs, so the
-    * two verify paths agree ROW-FOR-ROW on any panel, threshold or not.
-    */
-  def candidateRho(panel: DataFrame, keyCol: String, posCol: String,
-                   valueCol: String, dims: Int, bands: Int,
-                   bits: Int): DataFrame = {
-    val cand = corrCandidates(panel, keyCol, posCol, valueCol, dims,
-      bands, bits)
-    // null-valued cells never reach the aggregate: pearson's when-guard
-    // would null them out anyway (bit-identical sums), but on a sparse
-    // panel they are the bulk of the candidate×dims expansion, and each
-    // would still pay the aggregate's full per-row CASE/round/decimal
-    // machinery — measured ~3 µs/row, 30× the whole verify on a
-    // mostly-null grid
-    val nn = panel.where(col(valueCol).isNotNull)
-    val a = nn.select(col(keyCol).as("i"), col(posCol).as("pos"),
-      col(valueCol).as("va"))
-    val b = nn.select(col(keyCol).as("j"), col(posCol).as("pos"),
-      col(valueCol).as("vb"))
-    // Broadcast the panel sides: the candidate×dims expansion (pairs ·
-    // positions) stays map-side and the only shuffle is the final
-    // per-pair partial-aggregated pearson — without the hints both joins
-    // shuffle the expanded relation (measured 2× the whole query's cost
-    // at sf0.1). The panel is dimension-sized (k·dims), broadcastable by
-    // construction for any k this tier serves; at cluster scale the same
-    // shape holds (a 2000×10⁴ panel is ~160 MB, the ceiling's scale —
-    // past it the vector verify takes over).
-    cand.join(broadcast(a), Seq("i")).join(broadcast(b), Seq("j", "pos"))
-      .groupBy("i", "j")
-      .agg(Stats.pearson(col("va"), col("vb")).as("rho"))
-      // a pair with fewer than two complete slots never forms a group
-      // here (the inner join produced no rows), but a CONSTANT-side
-      // pair with overlap does — as a null-rho row. Undefined rho is
-      // not a result either way: dropping it keeps this path and
-      // [[candidateRhoVectors]] row-for-row identical, threshold or not
-      .where(col("rho").isNotNull)
-  }
-
-  /** Panel-cell ceiling for [[candidateRho]]'s broadcast verify: k·dims
-    * grid cells ≈ 8 bytes each, so 1.6×10⁷ cells is the ~128 MB panel
-    * the broadcast comment bounds. Past it, [[candidateRhoVectors]] is
-    * the verify path — [[graft.SparkEntry.panelRho]] switches on this.
-    * (PanelRhoSpec drives the flip organically at a 134-series ×
-    * 135000-bucket grid = 1.81×10⁷ cells, no forced ceiling.)
-    */
-  val BroadcastVerifyMaxCells: Long = 16000000L
-
-  /** [[candidateRho]] without broadcasting the panel: the verify path
-    * for panels past [[BroadcastVerifyMaxCells]] (k ≳ 2000 at 10⁴
-    * positions), where shipping every executor a full panel copy stops
-    * scaling. The panel is first contracted to ONE COMPACT VECTOR ROW
-    * per series (pos-ordered value array — k rows instead of k·dims),
-    * which is the only panel-sized shuffle in the plan; each candidate
-    * pair then joins its two vectors (shuffles move candidate-sized
-    * relations and k vector rows, never the cell-level panel), and the
-    * pair's exact rho comes from ONE call of the
-    * [[graft.functions.PearsonArrays]] kernel — bit-identical to the
-    * [[Stats.pearson]] aggregate the broadcast path runs, null slots
-    * skipped pairwise, with no slot ever inflated into a row (every
-    * explode/HOF shape measured µs-scale per slot; the kernel is a
-    * JIT-compiled primitive loop). Same output as [[candidateRho]] on any
-    * GRID-COMPLETE panel — every series carries a row for every pos
-    * 1..dims, values possibly null (the shape [[graft.ops.Time]]'s
-    * resample core emits by construction) — ROW-FOR-ROW: a candidate
-    * pair with ZERO pairwise-complete slots (the kernel returns null
-    * rho) is dropped here exactly as the broadcast path's per-pos
-    * inner join drops it there. That precondition is what
-    * lets the zip align by array index; it is ENFORCED loudly (a series
-    * whose row count differs from dims raises, instead of silently
-    * shifting every later slot and verifying the wrong pairs —
-    * CorrPruneSpec pins both the equality and the guard; a duplicated
-    * pos exactly compensated by a missing one would evade the count,
-    * but no grid producer emits that shape). Null VALUES
-    * are fine anywhere: they ride the vectors as null slots and
-    * [[Stats.pearson]] skips a position whenever either side is null,
-    * exactly the rows the per-pos inner join never produces.
+  /** Exact Pearson (pairwise-complete) for every LSH candidate pair —
+    * the pruned tier's one verify. Unrounded and unfiltered, so callers
+    * control the threshold/rounding (and their oracle mirrors it).
+    * Output rows are a subset of the exact all-pairs answer; recall is
+    * governed by bands/bits. The panel is first contracted to ONE
+    * COMPACT VECTOR ROW per series (pos-ordered value array — k rows
+    * instead of k·dims), which is the only panel-sized shuffle in the
+    * plan; each candidate pair then joins its two vectors (shuffles move
+    * candidate-sized relations and k vector rows, never the cell-level
+    * panel, and nothing panel-sized is broadcast), and the pair's exact
+    * rho comes from ONE call of the [[graft.functions.PearsonArrays]]
+    * kernel — bit-identical to the [[Stats.pearson]] aggregate over the
+    * position join, null slots skipped pairwise, with no slot ever
+    * inflated into a row (every explode/HOF shape measured µs-scale per
+    * slot; the kernel is a JIT-compiled primitive loop).
+    *
+    * Precondition: a GRID-COMPLETE panel — every series carries a row
+    * for every pos 1..dims, values possibly null (the shape
+    * [[graft.ops.Time]]'s resample core emits by construction). That is
+    * what lets the zip align by array index; it is ENFORCED loudly (a
+    * series whose row count differs from dims raises, instead of
+    * silently shifting every later slot and verifying the wrong pairs;
+    * a duplicated pos exactly compensated by a missing one would evade
+    * the count, but no grid producer emits that shape). Null VALUES are
+    * fine anywhere: they ride the vectors as null slots. A candidate
+    * pair with undefined rho (zero pairwise-complete slots, or a
+    * constant side) emits no row.
+    *
+    * `fenced = false` drops the optimizer fence around the kernel (see
+    * below); it exists only as PlanGuardSpec's red baseline.
     */
   def candidateRhoVectors(panel: DataFrame, keyCol: String, posCol: String,
                           valueCol: String, dims: Int, bands: Int,
-                          bits: Int,
-                          barrier: String = DefaultBarrier): DataFrame = {
+                          bits: Int, fenced: Boolean = true): DataFrame = {
     val cand = corrCandidates(panel, keyCol, posCol, valueCol, dims,
       bands, bits)
     // array_sort orders the structs by pos (first struct field), so on
@@ -234,12 +183,15 @@ object CorrPrune {
     // CONDITION, re-running the O(dims) kernel up to three times per
     // pair (observed in the r15 plan audit: isnotnull(pearson_arrays),
     // round(pearson_arrays) ≥ t in the join, pearson_arrays again in
-    // the project). Aggregates give candidateRho this barrier for
-    // free. The default here is the [[graft.functions.OptimizerFence]]
-    // wrapper — exactly-once at ZERO materialization cost (the r15
-    // cache barrier achieved the same plan but paid block
-    // materialization: +0.3–0.6 s on the a3 family; SCALE.md's barrier
-    // A/B prices all three). The alternatives stay exposed for that A/B.
+    // the project). The [[graft.functions.OptimizerFence]] wrapper pins
+    // it exactly once at ZERO materialization cost (an earlier cache
+    // barrier achieved the same plan but paid block materialization:
+    // +0.3–0.6 s on the a3 family; SCALE.md's barrier A/B). Without the
+    // fence the re-evaluation CPU cost is small (~5% at k=1700 ×
+    // 10,080), but at k=2000 the unfenced plan OOMs an 8 GiB heap where
+    // the fenced one completes (SCALE.md's r17 unfenced control): the
+    // fenced Project computes rho once and drops the ~80 KB vector
+    // payloads at once.
     // Fence side effect callers must know: pushdown-through-Project
     // requires every project field deterministic, so NO predicate — not
     // even one on the sibling i/j keys — pushes below this select.
@@ -256,42 +208,11 @@ object CorrPrune {
       // every explode shape tried), where the fold is one lambda step
       // per slot
       .select(col("i"), col("j"),
-        (if (barrier == "fence") Stats.fenced(kernel) else kernel)
-          .as("rho"))
-    val fencedRho = barrier match {
-      case "fence" => rho
-      // "none" = NO barrier at all — the red baseline for the fence's
-      // exactly-once guarantee (PlanGuardSpec diffs its plan against
-      // the fenced one: downstream predicates alias-inline the bare
-      // kernel into the join condition, multiplying its plan sites).
-      // Never the shipped default; exists so the regression gate and
-      // the barrier A/B have an honest control. Priced both ways
-      // (SCALE.md): at FIXTURE dims the control is actually ~0.2 s
-      // faster (the inlined threshold filters pairs inside the join,
-      // and a 144-slot kernel re-evaluation is noise), and even at
-      // width the re-evaluation CPU cost is ~5% (k=1700 × 10,080:
-      // none 75.9 s vs fence 72.0 s, identical shuffle and edges) —
-      // the fence's value is a MEMORY cliff: at k=2000 the unfenced
-      // plan OOMs an 8 GiB heap (three runs; SCALE.md's r17 unfenced
-      // control, Correlation matrices) while the fenced run completes
-      // in ~98 s, because the fenced Project computes rho once and
-      // immediately drops the ~80 KB vector payloads, where the
-      // unfenced plan re-derives rho downstream and keeps both arrays
-      // alive across more of the pipeline.
-      case "none" => rho
-      case "cache" => graft.ops.Time.registerCached(rho.cache())
-      case "checkpoint" => rho.localCheckpoint(eager = false)
-      case other => sys.error(s"unknown corr barrier '$other'")
-    }
-    // undefined rho (zero pairwise-complete slots, or a constant
-    // side) is not a result: dropping it here makes this path agree
-    // row-for-row with candidateRho, whose per-pos inner join never
-    // forms a group for such pairs — no threshold needed for the two
-    // physical strategies to be interchangeable
-    fencedRho.where(col("rho").isNotNull)
+        (if (fenced) Stats.fenced(kernel) else kernel).as("rho"))
+    // undefined rho (zero pairwise-complete slots, or a constant side)
+    // is not a result — the position-join Pearson forms no group (or a
+    // null one) for such pairs, so no threshold is needed for the
+    // output to be a subset of the exact matrix
+    rho.where(col("rho").isNotNull)
   }
-
-  /** The shipped barrier for [[candidateRhoVectors]]'s kernel Project —
-    * see the A/B note above and SCALE.md's pricing. */
-  val DefaultBarrier: String = "fence"
 }

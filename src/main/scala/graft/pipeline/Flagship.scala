@@ -202,8 +202,8 @@ object Flagship {
     * ([[Sinks.writeWideMatrixCsvDense]]: ids as header + index, unit
     * diagonal, empty cells for undefined pairs — exporter:163,227-235 —
     * assembled straight off each window's cells row, no explode/regroup
-    * in the loop). Contrast with [[run]]'s layout="wide", which
-    * recomputes each window through the toy per-slice pair join.
+    * in the loop). Contrast with [[run]], which recomputes each window
+    * through the per-slice pair join and writes the long pair form.
     *
     * Same never-throw contract as [[run]]: a failing window is recorded
     * and skipped; a setup failure degrades to every window failed. Input
@@ -288,19 +288,13 @@ object Flagship {
   /** Run the per-window correlation export over one trading session.
     * Every window is wrapped in Try: a failing window is recorded and
     * skipped, never failing the run (§2.11 of the survey — the
-    * reference's lenient per-window contract).
-    *
-    * `layout` selects the sink: "long" writes the (i, j, rho) pair form
-    * per window; "wide" writes the reference's square matrix CSV — ids
-    * as header and index, unit diagonal ([[Sinks.writeWideMatrixCsv]],
-    * exporter:163,227-235).
+    * reference's lenient per-window contract). Each window is written
+    * in the (i, j, rho) pair form; the reference's square matrix CSV
+    * comes from [[runWideAtWidth]].
     */
   def run(spark: SparkSession, sfDir: String, outDir: String,
           openSec: Long, closeSec: Long, windowSec: Long,
-          freqSec: Long, maxUsers: Int,
-          layout: String = "long"): Seq[WindowResult] = {
-    require(layout == "long" || layout == "wide",
-      s"unknown layout '$layout' (want long | wide)")
+          freqSec: Long, maxUsers: Int): Seq[WindowResult] = {
     val windows = sessionWindows(openSec, closeSec, windowSec)
     // setup failure (missing source, bad schema) degrades to "every
     // window failed", preserving the never-throw contract
@@ -334,11 +328,8 @@ object Flagship {
             .agg(round(graft.ops.Stats.pearson(col("va"), col("vb")), 6).as("rho"))
             .orderBy("i", "j")
           val path = s"$outDir/corr_${ws}_$we"
-          val n =
-            if (layout == "wide")
-              Sinks.writeWideMatrixCsv(m, "i", "j", "rho", path).size.toLong
-            else Sinks.writeWindowCsv(m, path)
-          WindowResult(ws, we, ok = true, n, path, "")
+          WindowResult(ws, we, ok = true, Sinks.writeWindowCsv(m, path),
+            path, "")
         } match {
           case Success(r) => r
           case Failure(e) =>

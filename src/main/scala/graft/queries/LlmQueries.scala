@@ -1275,7 +1275,12 @@ object LlmQueries {
           if (r.isNullAt(1)) null else r.getString(1), r.getLong(2)))
     var merges = Vector.empty[(String, String)]
     var grouped = pairStats(Nil)
-    val rows = (1 to BpeRounds).map { i =>
+    // a generation with no adjacent token pair (every sampled word is
+    // one token) has no best pair, and no later one can either: learning
+    // stops there, as the oracle's best_i is empty from that round on.
+    // The iterator checks that after the previous round's merge.
+    val rows = (1 to BpeRounds).iterator
+      .takeWhile(_ => grouped.exists(_._2 != null)).map { i =>
       // best pair of THIS generation: max cnt, ties broken ascending on
       // (tok, nxt) in engine (UTF8 binary) order — the orderBy(cnt desc,
       // tok, nxt).limit(1) the relational loop ran
@@ -1292,7 +1297,7 @@ object LlmQueries {
       val nt = grouped.map(_._3).sum
       val nv = grouped.map(_._1).distinct.length.toLong
       (i, l, r, cnt, nt, nv)
-    }
+    }.toVector
     w0.unpersist()
     rows
   }

@@ -9,7 +9,8 @@
 // 3x with caches cleared, so a bench line can be attributed to its
 // dominant stage:
 //   sbt "runMain graft.tools.Profile <sfDir> --phases <set>"
-// Sets: see phaseSets below (panel | a3d | a3e | d4 | s6b | s15 | cc);
+// Sets: see phaseSets below (panel | a3d | a3e | d4 | s6b | s15 | cc |
+// a3dab, or ab:<query>);
 // an unknown set errors with the current list.
 package graft.tools
 
@@ -99,7 +100,7 @@ object Profile {
     }
   }
 
-  /** a3d's pruned-corr core: panel, LSH candidates, exact verify. */
+  /** a3d's pruned-corr core: panel, LSH candidates, vector verify. */
   private def phasesA3d(s: SparkSession, d: String): Unit = {
     val jan1 = SparkEntry.jan1
     val jan3 = SparkEntry.sec("2024-01-03T00:00:00")
@@ -111,7 +112,7 @@ object Profile {
         "value", 288, 8, 5).count()
     }
     phase(s, "candidates+verify") {
-      graft.ops.CorrPrune.candidateRho(panel, "user_id", "pos",
+      graft.ops.CorrPrune.candidateRhoVectors(panel, "user_id", "pos",
         "value", 288, 8, 5)
     }
   }
@@ -221,59 +222,15 @@ object Profile {
     phase(s, "d6 full")(SparkEntry.queries("d6_dup_clusters")(s, d))
   }
 
-  /** The kernel-barrier A/B (VERDICT r15 task 1): a3f's exact query
-    * shape under each [[graft.ops.CorrPrune.candidateRhoVectors]]
-    * barrier — cache (the r15 fix), fence (zero-cost optimizer fence),
-    * localCheckpoint, plus the "none" control (NO barrier: the r15 bug
-    * shape, kernel alias-inlined into the pushed predicates — its
-    * sites count reads ≥ 2 and its wall time prices the multiplied
-    * re-evaluation the barrier exists to prevent) — with the kernel's
-    * occurrence count in the physical plan printed per variant (must
-    * be 1 for every real barrier: the exactly-once property is the
-    * point, whatever its cost).
-    */
-  private def phasesBarrier(s: SparkSession, d: String): Unit = {
-    val jan1 = SparkEntry.jan1
-    val jan2 = SparkEntry.jan2
-    def panel = SparkEntry.resampled(s, d, 300, jan1, jan2, 600)
-      .withColumn("pos", ((col("bucket") - jan1) / 600 + 1).cast("int"))
-    def a3fWith(b: String): DataFrame =
-      graft.ops.CorrPrune.candidateRhoVectors(panel, "user_id", "pos",
-          "value", dims = 144, bands = 8, bits = 5, barrier = b)
-        .select(col("i"), col("j"), round(col("rho"), 4).as("rho"))
-        .where(col("rho") >= 0.5)
-        .transform(graft.queries.Q.sortedSmall(_, "i", "j"))
-    Seq("cache", "fence", "checkpoint", "none").foreach { b =>
-      clear(s)
-      // DISTINCT normalized kernel sites, not raw substring hits —
-      // graft.plans.PlanText.distinctSites, shared with PlanGuardSpec
-      val sites = graft.plans.PlanText.distinctSites(
-        a3fWith(b).queryExecution.executedPlan.toString, "pearson_arrays")
-      println(s"[p] a3f barrier=$b kernel sites in plan: ${sites.size}")
-      phase(s, s"a3f barrier=$b")(a3fWith(b))
-    }
-  }
-
-  /** a3f bimodality adjudication (VERDICT r19 task 4): the r18
-    * intra-pair compare read 1.29 vs 2.18 s MIN on identical final
-    * code — the largest same-code scatter ≥ 1 s — explained only by
-    * analogy to a3d's r16 GC story. This runs the graded query 8× in
-    * ONE JVM (the only trustworthy delta domain on this host), each
-    * run bracketed by a whole-JVM GC-time read and carrying a
-    * stage-level listener, and prints per run: wall, GC delta, summed
-    * task time, and the top stages by task time (tasks / sum / max /
-    * stage GC) — so a slow mode names its stalling stage (broadcast
-    * build? fat-array GC? ambient) with numbers instead of analogy.
-    */
-  private def phasesA3fAb(s: SparkSession, d: String): Unit =
-    abProtocol("a3f_corr_pruned_unbroadcast")(s, d)
-
-  /** The same 8-run one-JVM adjudication protocol for a3d — the repo's
-    * largest ambient-load multiplier after round 19's loaded driver
-    * sweep (idle min 1.55 s, 13.24 s under load_avg 8.86; anchor
-    * scatter 1.55→2.61 the largest same-code intra-pair ratio). Run it
-    * on an idle box so the next loaded sweep is adjudicated by lookup
-    * (SCALE.md's a3d paragraph) instead of re-derivation.
+  /** The 8-run one-JVM adjudication protocol for a3d (a3f is the same
+    * query) — the repo's largest ambient-load multiplier after round
+    * 19's loaded driver sweep (idle min 1.55 s, 13.24 s under load_avg
+    * 8.86). Runs the graded query 8× in ONE JVM (the only trustworthy
+    * delta domain on a shared host), each run bracketed by a whole-JVM
+    * GC-time read and carrying a stage-level listener, and prints per
+    * run: wall, GC delta, summed task time, and the top stages by task
+    * time (tasks / sum / max / stage GC) — so a slow mode names its
+    * stalling stage with numbers instead of analogy.
     */
   private def phasesA3dAb(s: SparkSession, d: String): Unit =
     abProtocol("a3d_corr_pruned")(s, d)
@@ -334,8 +291,7 @@ object Profile {
   private val phaseSets: Map[String, (SparkSession, String) => Unit] =
     Map("panel" -> phasesPanel, "a3d" -> phasesA3d, "a3e" -> phasesA3e,
       "d4" -> phasesD4, "s6b" -> phasesS6b, "s15" -> phasesS15,
-      "cc" -> phasesCC, "barrier" -> phasesBarrier,
-      "a3fab" -> phasesA3fAb, "a3dab" -> phasesA3dAb)
+      "cc" -> phasesCC, "a3dab" -> phasesA3dAb)
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
@@ -343,8 +299,8 @@ object Profile {
     val spark = Sessions.build("profile")
     rest match {
       // generic stage-attribution: --phases ab:<query> runs the 8-run
-      // one-JVM listener protocol on ANY named query (the a3dab/a3fab
-      // sets are the pre-wired instances)
+      // one-JVM listener protocol on ANY named query (the a3dab set is
+      // the pre-wired instance)
       case Seq("--phases", set) if set.startsWith("ab:") =>
         abProtocol(set.stripPrefix("ab:"))(spark, sfDir)
       case Seq("--phases", set) =>

@@ -97,64 +97,34 @@ class PanelRhoSpec extends SparkTestBase {
     assert(got == want)
   }
 
-  test("past the broadcast-verify cell ceiling the selector switches " +
-    "to the vector verify, value-identically") {
-    val sf01 = "/root/testdata/sf0.01"
-    def run(maxCells: Long) = SparkEntry.panelRho(spark, sf01, 100, jan1,
-      jan2, 600, roundThenFilter = Some((4, 0.5)), onePassMaxK = 1,
-      broadcastVerifyMaxCells = maxCells)
-    val (_, bc) = run(Long.MaxValue) // broadcast verify
-    val (_, vec) = run(1L)           // forced past the cell ceiling
-    // the strategies differ: the broadcast plan carries the hinted
-    // panel-side joins (pinned here), and the vector plan ships no
-    // panel broadcast in the cluster shape — that structural half is
-    // pinned where the walk-and-classify machinery lives, PlanGuardSpec
-    // "a3f's vector verify ships no panel broadcast in the CLUSTER
-    // shape"; value equality across the flip is THIS test's claim
-    assert(planOf(bc).contains("BroadcastHashJoin"), planOf(bc))
-    // ...but the emitted edge sets are identical to the last bit
-    val b = bc.collect().map(_.toString).sorted.toSeq
-    val v = vec.collect().map(_.toString).sorted.toSeq
-    assert(b.nonEmpty, "no edges — vacuous")
-    assert(v == b)
-  }
-
-  test("the UNFORCED selector crosses the cell ceiling organically at " +
-    "a wide grid, and the two verify strategies agree bit-for-bit") {
+  test("a wide mostly-null grid (1.81e7 cells): the pruned tier's " +
+    "edges are a value-identical subset of the exact one-pass matrix") {
     // grid [2023-12-08, 2024-01-02) at 16 s: 135000 buckets × the 134
-    // series with data in range = 1.81e7 cells — past the 1.6e7 default
-    // ceiling with NOTHING forced (the forced-flip test above pins the
-    // same equality with maxCells = 1; this one proves the selector's
-    // own arithmetic takes the vector path on a genuinely-wide panel).
-    // Most of the grid precedes the data (the fill starts at the first
-    // January observation), which is exactly the kind of panel where
-    // the null-slot handling of both verifies has to agree
+    // series with data in range = 1.81e7 cells. Most of the grid
+    // precedes the data (the fill starts at the first January
+    // observation), which is exactly the kind of panel where the vector
+    // verify's null-slot handling has to agree with the one-pass
+    // aggregate's pairwise-complete sums
     val sf01 = "/root/testdata/sf0.01"
     val dec8 = 1701993600L
-    def run(maxCells: Option[Long]) = maxCells match {
-      case None => SparkEntry.panelRho(spark, sf01, 150, dec8, jan2, 16L,
+    val (users, exact) =
+      SparkEntry.panelRho(spark, sf01, 150, dec8, jan2, 16L,
+        roundThenFilter = Some((4, 0.5)))
+    val (usersP, pruned) =
+      SparkEntry.panelRho(spark, sf01, 150, dec8, jan2, 16L,
         roundThenFilter = Some((4, 0.5)), onePassMaxK = 1)
-      case Some(m) => SparkEntry.panelRho(spark, sf01, 150, dec8, jan2,
-        16L, roundThenFilter = Some((4, 0.5)), onePassMaxK = 1,
-        broadcastVerifyMaxCells = m)
-    }
-    val (users, vecDf) = run(None) // DEFAULT ceiling — nothing forced
-    val cells = users.size.toLong * ((jan2 - dec8) / 16L)
-    assert(cells > graft.ops.CorrPrune.BroadcastVerifyMaxCells,
-      s"fixture geometry no longer exceeds the ceiling ($cells) — " +
-        "the organic-flip claim would be vacuous")
-    // the selector's own arithmetic must have picked the vector verify:
-    // the kernel expression appears, the per-pos broadcast verify's
-    // (j, pos) join does not
-    val p = planOf(vecDf)
+    assert(users == usersP)
+    assert(planOf(exact).toLowerCase.contains("corrmatrixagg"))
+    val p = planOf(pruned)
     assert(p.contains("pearson_arrays"), p.take(4000))
-    assert(!"BroadcastHashJoin \\[j#\\d+L?, pos#".r.findFirstIn(p).isDefined,
-      p.take(4000))
-    val vec = vecDf.collect().map(_.toString).sorted.toSeq
-    val (_, bcDf) = run(Some(Long.MaxValue)) // broadcast verify, same grid
-    val bc = bcDf.collect().map(_.toString).sorted.toSeq
-    assert(vec.nonEmpty, "no edges — vacuous")
-    assert(vec == bc)
+    val want = exact.collect().map(_.toString).toSet
+    val got = pruned.collect().map(_.toString).toSeq
+    assert(got.nonEmpty, "no edges — vacuous")
+    // every pruned edge — ids, vids and rounded rho — is a row of the
+    // exact matrix under the same round-then-filter
+    val extra = got.filterNot(want.contains)
+    assert(extra.isEmpty, s"pruned edges not in the exact matrix: " +
+      extra.take(5).mkString(", "))
   }
 
   test("above the ceiling without a threshold refuses loudly") {

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkTestBase
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class CorrPruneSpec extends SparkTestBase {
@@ -43,8 +44,26 @@ class CorrPruneSpec extends SparkTestBase {
       .select("i", "j").as[(Long, Long)].collect().toSet
   }
 
-  test("candidateRho: exact verification — output is a subset of all-pairs") {
-    val got = CorrPrune.candidateRho(panel, "key", "pos", "value",
+  // The position-join reference for the vector verify: the exact
+  // Stats.pearson aggregate over the per-pos inner join of the two
+  // series, restricted to corrCandidates. Undefined rho is not a
+  // result: a zero-overlap pair forms no group, a constant-side pair a
+  // null-rho one, and both emit no row.
+  private def positionJoinRho(p: DataFrame, dims: Int, bands: Int,
+                              bits: Int): DataFrame = {
+    val nn = p.where(col("value").isNotNull)
+    val a = nn.select(col("key").as("i"), col("pos"), col("value").as("va"))
+    val b = nn.select(col("key").as("j"), col("pos"), col("value").as("vb"))
+    CorrPrune.corrCandidates(p, "key", "pos", "value", dims, bands, bits)
+      .join(a, Seq("i")).join(b, Seq("j", "pos"))
+      .groupBy("i", "j")
+      .agg(Stats.pearson(col("va"), col("vb")).as("rho"))
+      .where(col("rho").isNotNull)
+  }
+
+  test("candidateRhoVectors: exact verification — output is a subset " +
+    "of all-pairs") {
+    val got = CorrPrune.candidateRhoVectors(panel, "key", "pos", "value",
         dims = 48, bands = 6, bits = 4)
       .where(col("rho") >= 0.9)
       .select("i", "j").as[(Long, Long)].collect().toSet
@@ -52,8 +71,9 @@ class CorrPruneSpec extends SparkTestBase {
     assert(got.subsetOf(want), s"pruned output $got must never exceed exact $want")
   }
 
-  test("candidateRho finds the high-rho pair and rejects the mirror pair") {
-    val got = CorrPrune.candidateRho(panel, "key", "pos", "value",
+  test("candidateRhoVectors finds the high-rho pair and rejects the " +
+    "mirror pair") {
+    val got = CorrPrune.candidateRhoVectors(panel, "key", "pos", "value",
         dims = 48, bands = 6, bits = 4)
       .where(col("rho") >= 0.9)
       .select("i", "j").as[(Long, Long)].collect().toSet
@@ -97,8 +117,8 @@ class CorrPruneSpec extends SparkTestBase {
         dims = 48, bands = 2, bits = 4).count())
   }
 
-  test("candidateRhoVectors ≡ candidateRho: same pairs, same rho, " +
-    "including null grid slots") {
+  test("candidateRhoVectors ≡ the position-join reference: same pairs, " +
+    "same rho, including null grid slots") {
     // leading-null slots (pre-first-observation ffill output) must keep
     // the pairwise-complete semantics through the vector zip exactly as
     // the position-join does
@@ -106,23 +126,23 @@ class CorrPruneSpec extends SparkTestBase {
       when(col("key") === 1L && col("pos") <= 5, lit(null))
         .otherwise(col("value")))
     for (p <- Seq(panel, withNulls)) {
-      val bc = CorrPrune.candidateRho(p, "key", "pos", "value",
-          dims = 48, bands = 6, bits = 4)
+      val ref = positionJoinRho(p, dims = 48, bands = 6, bits = 4)
         .select("i", "j", "rho").as[(Long, Long, Double)]
         .collect().map(t => (t._1, t._2) -> t._3).toMap
       val vec = CorrPrune.candidateRhoVectors(p, "key", "pos", "value",
           dims = 48, bands = 6, bits = 4)
         .select("i", "j", "rho").as[(Long, Long, Double)]
         .collect().map(t => (t._1, t._2) -> t._3).toMap
-      assert(vec.keySet == bc.keySet)
+      assert(vec.keySet == ref.keySet)
       vec.foreach { case (k, r) =>
-        assert(math.abs(r - bc(k)) < 1e-12, s"pair $k: $r vs ${bc(k)}")
+        assert(math.abs(r - ref(k)) < 1e-12, s"pair $k: $r vs ${ref(k)}")
       }
     }
   }
 
   test("undefined rho is dropped by BOTH verify paths: zero-overlap and " +
     "constant-side candidate pairs emit no row, with no threshold") {
+    // the two paths: the vector verify and the position-join reference
     // Two degenerate series, both CONSTANT on their support — a constant
     // series has an all-zero centered vector, so every band projection is
     // 0, the sign test is false for every bit, and the series lands
@@ -131,8 +151,9 @@ class CorrPruneSpec extends SparkTestBase {
     //   8: constant on pos 1..24, null after  } disjoint support ⇒ the
     //   9: constant on pos 25..48, null before} (8,9) overlap is empty
     //  10: constant on all 48 positions ⇒ (8,10) and (9,10) are
-    //      constant-side pairs WITH overlap (the broadcast path forms a
-    //      group for them and the aggregate yields null rho)
+    //      constant-side pairs WITH overlap (the position-join
+    //      reference forms a group for them and the aggregate yields
+    //      null rho)
     val degen = (1 to 48).flatMap { p =>
       Seq((8L, p, if (p <= 24) Some(5.0) else None),
         (9L, p, if (p > 24) Some(7.0) else None),
@@ -145,24 +166,24 @@ class CorrPruneSpec extends SparkTestBase {
       .as[(Long, Long)].collect().toSet
     assert(Set((8L, 9L), (8L, 10L), (9L, 10L)).subsetOf(cand),
       s"constant series must collide in bucket 0 of every band: $cand")
-    val bc = CorrPrune.candidateRho(full, "key", "pos", "value",
-        dims = 48, bands = 6, bits = 4)
+    val ref = positionJoinRho(full, dims = 48, bands = 6, bits = 4)
       .select("i", "j", "rho").as[(Long, Long, Double)]
       .collect().map(t => (t._1, t._2) -> t._3).toMap
     val vec = CorrPrune.candidateRhoVectors(full, "key", "pos", "value",
         dims = 48, bands = 6, bits = 4)
       .select("i", "j", "rho").as[(Long, Long, Double)]
       .collect().map(t => (t._1, t._2) -> t._3).toMap
-    // row-for-row: identical pair sets, no nulls anywhere (the Double
-    // decode above would have thrown on one), and every degenerate
-    // candidate — zero overlap (8,9) AND constant-side overlaps — gone
-    assert(vec.keySet == bc.keySet,
-      s"paths diverge: vec-only ${vec.keySet -- bc.keySet}, " +
-        s"bc-only ${bc.keySet -- vec.keySet}")
-    assert(bc.keys.forall(p => p._1 < 8L && p._2 < 8L),
-      s"degenerate pairs must emit no row: ${bc.keySet.filter(_._2 >= 8)}")
+    // row-for-row with the reference: identical pair sets, no nulls
+    // anywhere (the Double decode above would have thrown on one), and
+    // every degenerate candidate — zero overlap (8,9) AND constant-side
+    // overlaps — gone
+    assert(vec.keySet == ref.keySet,
+      s"paths diverge: vec-only ${vec.keySet -- ref.keySet}, " +
+        s"ref-only ${ref.keySet -- vec.keySet}")
+    assert(vec.keys.forall(p => p._1 < 8L && p._2 < 8L),
+      s"degenerate pairs must emit no row: ${vec.keySet.filter(_._2 >= 8)}")
     vec.foreach { case (k, r) =>
-      assert(math.abs(r - bc(k)) < 1e-12, s"pair $k: $r vs ${bc(k)}")
+      assert(math.abs(r - ref(k)) < 1e-12, s"pair $k: $r vs ${ref(k)}")
     }
   }
 
@@ -221,6 +242,35 @@ class CorrPruneSpec extends SparkTestBase {
       assert(off.isEmpty,
         s"plane relation broadcast past the ceiling:\n${off.mkString("\n")}")
     } finally spark.conf.set(key, prev)
+  }
+
+  test("candidateRhoVectors rows are identical at 1 and 7 input " +
+    "partitions × 1 and 8 shuffle partitions") {
+    // null grid slots ride along so the pairwise-complete skip is
+    // exercised under every partitioning too
+    val withNulls = panel.withColumn("value",
+      when(col("key") === 1L && col("pos") <= 5, lit(null))
+        .otherwise(col("value")))
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    val runs = try {
+      for (inParts <- Seq(1, 7); shuffleParts <- Seq(1, 8)) yield {
+        spark.conf.set(key, shuffleParts.toString)
+        val rows = CorrPrune.candidateRhoVectors(
+            withNulls.repartition(inParts), "key", "pos", "value",
+            dims = 48, bands = 6, bits = 4)
+          .select("i", "j", "rho").as[(Long, Long, Double)]
+          .collect().sortBy(t => (t._1, t._2)).toSeq
+        (inParts, shuffleParts) -> rows
+      }
+    } finally spark.conf.set(key, prev)
+    val (_, first) = runs.head
+    assert(first.nonEmpty, "no candidate rows — vacuous")
+    runs.tail.foreach { case (setting, rows) =>
+      // bit-for-bit: the kernel folds each pair's vectors in pos order,
+      // so no partitioning may change a single rho
+      assert(rows == first, s"$setting diverged from ${runs.head._1}")
+    }
   }
 
   test("candidateRhoVectors refuses a non-grid-complete panel loudly") {

@@ -57,32 +57,6 @@ class FlagshipSpec extends SparkTestBase {
     assert(res.head.rows > 0)
   }
 
-  test("wide layout writes the reference's square matrix CSV") {
-    val out = scratchDir("graft_flagw_")
-    val open = graft.SparkEntry.sec("2024-01-02T09:30:00")
-    val close = graft.SparkEntry.sec("2024-01-02T16:00:00")
-    // one whole-session window keeps the assertion focused on layout
-    val res = Flagship.run(spark, "/root/testdata/sf0.001", out,
-      open, close, windowSec = 23400, freqSec = 300, maxUsers = 5,
-      layout = "wide")
-    assert(res.length == 1 && res.head.ok, res.head.error)
-    val csv = new java.io.File(res.head.path).listFiles()
-      .filter(_.getName.endsWith(".csv")).head
-    val lines = java.nio.file.Files.readAllLines(csv.toPath)
-    // pandas to_csv shape: empty index-header cell, ids as header row
-    // AND index column, k+1 lines for k ids, unit diagonal
-    val header = lines.get(0).split(",", -1)
-    assert(header.head == "")
-    val ids = header.tail
-    assert(ids.nonEmpty && lines.size == ids.length + 1)
-    (1 until lines.size).foreach { r =>
-      val fields = lines.get(r).split(",", -1)
-      assert(fields.length == ids.length + 1)
-      assert(fields.head == ids(r - 1))       // index column = header ids
-      assert(fields(r).toDouble == 1.0)       // diagonal cell
-    }
-  }
-
   test("wide matrix CSV holds its layout at real width (k=150)") {
     val d = "/root/testdata/sf0.01"
     // s6b writes the square matrix as a side effect of its roundtrip
@@ -149,14 +123,21 @@ class FlagshipSpec extends SparkTestBase {
       .groupBy(_._1)
 
     res.foreach { r =>
-      // layout: square, ids as header and index, unit diagonal
+      // layout (pandas to_csv shape): empty index-header cell, ids as
+      // header row AND index column, k+1 lines for k ids, unit diagonal
+      // on every row
       val csv = new java.io.File(r.path).listFiles()
         .filter(_.getName.endsWith(".csv")).head
       val lines = java.nio.file.Files.readAllLines(csv.toPath)
       val header = lines.get(0).split(",", -1)
       assert(header.head == "" && header.tail.length == r.rows)
       assert(lines.size == r.rows + 1)
-      assert(lines.get(1).split(",", -1)(1).toDouble == 1.0)
+      (1 until lines.size).foreach { row =>
+        val fields = lines.get(row).split(",", -1)
+        assert(fields.length == header.length)
+        assert(fields.head == header(row))        // index column = header id
+        assert(fields(row).toDouble == 1.0)       // diagonal cell
+      }
       // values: read the square file back to long form and compare to
       // the independently computed matrix for this window
       val ids = header.tail.map(_.toLong).toSeq

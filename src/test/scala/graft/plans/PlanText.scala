@@ -1,9 +1,8 @@
 package graft.plans
 
-/** Text-level physical-plan checks shared by the exactly-once gates
-  * (PlanGuardSpec) and the barrier A/B (tools/Profile) — one
-  * definition so the counting method cannot drift between the test
-  * gate and the tool that originally established it.
+/** Text-level physical-plan checks shared by the plan gates: the
+  * exactly-once kernel count (PlanGuardSpec) and the whole-plan
+  * equality compare (CapPlumbSpec).
   */
 object PlanText {
 

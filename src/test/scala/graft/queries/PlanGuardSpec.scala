@@ -275,11 +275,11 @@ class PlanGuardSpec extends SparkTestBase {
       p)
   }
 
-  test("a3f's vector verify ships no panel broadcast in the CLUSTER " +
-    "shape (a3d's hinted panel broadcasts stay pinned as the positive " +
+  test("the pruned tier's vector verify ships no panel broadcast in " +
+    "the CLUSTER shape (a hinted panel-broadcast join is the positive " +
     "control)") {
-    // The claim that matters at 100 TB: above BroadcastVerifyMaxCells,
-    // no broadcast carries panel-sized data. Size-based broadcasts
+    // The claim that matters at 100 TB: the pruned tier's verify
+    // broadcasts nothing panel-sized. Size-based broadcasts
     // vanish past autoBroadcastJoinThreshold by construction, so the
     // cluster shape is pinned the way the s14 test pins its own:
     // threshold -1 with the panel caches rebuilt under it, leaving
@@ -329,13 +329,12 @@ class PlanGuardSpec extends SparkTestBase {
       }
       (p +: into) ++ p.children.flatMap(walk)
     }
-    def broadcastOffenders(name: String): Seq[String] = {
-      val df = SparkEntry.queries(name)(spark, sf)
+    def broadcastOffenders(df: org.apache.spark.sql.DataFrame)
+        : Seq[String] =
       walk(df.queryExecution.executedPlan).collect {
         case e: BroadcastExchangeExec if rawPanel(e.child) =>
           e.child.treeString.linesIterator.take(3).mkString(" | ")
       }
-    }
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val prev = spark.conf.get(key)
     // caches are planned at registration time: drop any registered
@@ -344,19 +343,33 @@ class PlanGuardSpec extends SparkTestBase {
     graft.ops.Time.unpersistPanels()
     spark.conf.set(key, "-1")
     try {
-      // a3d: the small-panel broadcast verify — its HINTED raw-panel
-      // broadcasts survive threshold -1 (that is what a hint means), so
-      // the walk+classifier finding them proves the guard below is
-      // non-vacuous
-      assert(broadcastOffenders("a3d_corr_pruned").nonEmpty,
-        "walk no longer reaches a3d's hinted panel broadcasts — " +
+      // positive control: a3d's candidates joined to a HINTED
+      // broadcast of the same cached panel (the shape of a broadcast
+      // verify) — the hint survives threshold -1 (that is what a hint
+      // means), so the walk+classifier finding it proves the guard
+      // below is non-vacuous
+      import org.apache.spark.sql.functions._
+      val jan1 = SparkEntry.jan1
+      val panel = SparkEntry
+        .resampled(spark, sf, 300, jan1, SparkEntry.jan2, 600)
+        .withColumn("pos", ((col("bucket") - jan1) / 600 + 1).cast("int"))
+      val control = graft.ops.CorrPrune
+        .corrCandidates(panel, "user_id", "pos", "value",
+          dims = 144, bands = 8, bits = 5)
+        .join(broadcast(panel.select(col("user_id").as("i"), col("pos"),
+          col("value"))), Seq("i"))
+      assert(broadcastOffenders(control).nonEmpty,
+        "walk no longer reaches a hinted panel broadcast — " +
           "the guard below would be vacuous")
-      // a3f: the vector verify — zero panel-reaching broadcasts in the
-      // cluster shape; the only broadcasts left are the hinted
-      // hyperplane generator and the single-key per-series stats
-      val off = broadcastOffenders("a3f_corr_pruned_unbroadcast")
-      assert(off.isEmpty,
-        s"vector verify ships raw panel:\n${off.mkString("\n")}")
+      // the vector verify, direct (a3d; a3f is the same query) and
+      // through the selector (a3e) — zero panel-reaching broadcasts in
+      // the cluster shape; the only broadcasts left are the hinted
+      // hyperplane generator and single-key per-series relations
+      Seq("a3d_corr_pruned", "a3e_corr_auto_pruned").foreach { name =>
+        val off = broadcastOffenders(SparkEntry.queries(name)(spark, sf))
+        assert(off.isEmpty,
+          s"$name's vector verify ships raw panel:\n${off.mkString("\n")}")
+      }
     } finally {
       spark.conf.set(key, prev)
       // drop the cluster-shape caches so later tests rebuild under the
@@ -460,26 +473,25 @@ class PlanGuardSpec extends SparkTestBase {
     // wrapper) pins it to its Project. Counting is DISTINCT NORMALIZED
     // plan lines, not raw substring hits — a cached plan prints the
     // same Project twice (live node + the InMemoryRelation's stored
-    // copy); the shared graft.plans.PlanText.distinctSites (also used
-    // by tools/Profile). If a Spark upgrade or new Catalyst rule
-    // starts substituting
-    // non-deterministic aliases, the "fence" case here goes red
+    // copy); the shared graft.plans.PlanText.distinctSites. If a Spark
+    // upgrade or new Catalyst rule starts substituting
+    // non-deterministic aliases, the fenced case here goes red
     // LOUDLY instead of CORRECTNESS staying green at triple the cost.
     import org.apache.spark.sql.functions._
-    def kernelSites(barrier: String): Set[String] = {
+    def kernelSites(fenced: Boolean): Set[String] = {
       val jan1 = graft.SparkEntry.jan1
       val panel = graft.SparkEntry
         .resampled(spark, sf, 300, jan1, graft.SparkEntry.jan2, 600)
         .withColumn("pos", ((col("bucket") - jan1) / 600 + 1).cast("int"))
       val df = graft.ops.CorrPrune
         .candidateRhoVectors(panel, "user_id", "pos", "value",
-          dims = 144, bands = 8, bits = 5, barrier = barrier)
+          dims = 144, bands = 8, bits = 5, fenced = fenced)
         .select(col("i"), col("j"), round(col("rho"), 4).as("rho"))
         .where(col("rho") >= 0.5)
       graft.plans.PlanText.distinctSites(
         df.queryExecution.executedPlan.toString, "pearson_arrays")
     }
-    val fenced = kernelSites("fence")
+    val fenced = kernelSites(fenced = true)
     assert(fenced.size == 1,
       s"fenced kernel at ${fenced.size} plan sites (want exactly 1):\n" +
         fenced.mkString("\n"))
@@ -487,18 +499,20 @@ class PlanGuardSpec extends SparkTestBase {
     // inlines the rho alias into the pushed predicates. If this ever
     // reads 1, Catalyst stopped inlining and the fence is dead weight:
     // re-evaluate it rather than carry it on faith.
-    val bare = kernelSites("none")
+    val bare = kernelSites(fenced = false)
     assert(bare.size >= 2,
       s"unfenced kernel at ${bare.size} plan sites — alias inlining no " +
         s"longer multiplies the kernel; the fence may be removable:\n" +
         bare.mkString("\n"))
-    // and the shipped a3f query itself (fence default) stays at one site
-    val shipped = graft.plans.PlanText.distinctSites(
-      planOf(SparkEntry.queries("a3f_corr_pruned_unbroadcast")(spark, sf)),
-      "pearson_arrays")
-    assert(shipped.size == 1,
-      s"shipped a3f kernel at ${shipped.size} sites:\n" +
-        shipped.mkString("\n"))
+    // and the shipped pruned queries (fenced by default) stay at one
+    // site: a3d directly, a3e through panelRho's pruned branch
+    Seq("a3d_corr_pruned", "a3e_corr_auto_pruned").foreach { name =>
+      val shipped = graft.plans.PlanText.distinctSites(
+        planOf(SparkEntry.queries(name)(spark, sf)), "pearson_arrays")
+      assert(shipped.size == 1,
+        s"shipped $name kernel at ${shipped.size} sites:\n" +
+          shipped.mkString("\n"))
+    }
   }
 
   test("fencing is not a pushdown plug: predicates BELOW the fenced " +
