@@ -1354,6 +1354,14 @@ object SparkEntry {
       .as[Long].collect().sorted.toSeq
   }
 
+  /** 0-based index of series id `c` in the sorted universe `users`,
+    * join-free: array_position over the id seq is O(k) per row, so it
+    * suits pair-sized relations (pruned edges, a k-series pair set),
+    * not tick-sized ones.
+    */
+  private[graft] def vidOf(users: Seq[Long], c: Column): Column =
+    (array_position(typedLit(users), c) - 1).cast("int")
+
   /** The per-bucket k-wide vector assembly of [[widePanel]], factored
     * out so any long-form panel RELATION — resampleFfill's cached
     * output, or the bucketed lake table s15 materializes — feeds the
@@ -1531,14 +1539,11 @@ object SparkEntry {
         // sort then reads the cached edges instead of re-running the
         // pruned plan
         val survivors = graft.ops.Time.registerCached(rounded(rho).cache())
-        // vid mapping stays join-free: array_position over the sorted
-        // id seq is O(k) per row, paid only on the threshold-pruned
-        // edge set this tier exists to keep small
-        def vid(c: Column) =
-          (array_position(typedLit(users), c) - 1).cast("int")
+        // vid mapping paid only on the threshold-pruned edge set this
+        // tier exists to keep small
         survivors
-          .select(col("i"), col("j"), vid(col("i")).as("ii"),
-            vid(col("j")).as("jj"), col("rho"))
+          .select(col("i"), col("j"), vidOf(users, col("i")).as("ii"),
+            vidOf(users, col("j")).as("jj"), col("rho"))
       }
     (users, edges)
   }

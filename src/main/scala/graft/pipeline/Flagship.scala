@@ -2,7 +2,7 @@ package graft.pipeline
 
 import java.time.{DayOfWeek, LocalDate}
 import scala.util.{Failure, Success, Try}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.Catalog
 import graft.ops.{Exact, Time}
@@ -20,13 +20,11 @@ case class WindowResult(winStart: Long, winEnd: Long, ok: Boolean,
   * per window, with per-window failure tolerance (the reference swallows
   * any window error and continues — bare except at :125-126,169-170).
   *
-  * Spark-first shape: the day's panel is resampled and forward-filled
-  * ONCE as a lazy plan; each window is a bucket-range slice of it — the
-  * driver loop only steers window boundaries and sinks, all data movement
-  * stays in one cached plan. At 100 TB the windows would instead become a
-  * window-id column and one partitioned write (see the `e1_flagship`
-  * query, which is exactly that form); the loop here preserves the
-  * reference's one-file-per-window output contract.
+  * Spark-first shape: the session's panel is resampled and
+  * forward-filled ONCE, every window's matrix comes out of one
+  * window-keyed aggregate job, and the driver loop only steers the
+  * per-window sinks — the reference's one-file-per-window output
+  * contract ([[runWideAtWidth]]).
   */
 object Flagship {
 
@@ -94,7 +92,7 @@ object Flagship {
     * is then moved to its artifact path. FlagshipSpec grades the files
     * byte-for-byte against a span-wide window query.
     *
-    * Failure contract (never throws, like [[run]]):
+    * Failure contract (never throws, like [[runWideAtWidth]]):
     *  - a grid step that does not divide a day fails every day up front;
     *  - a failure of the shared pass (missing source, bad schema, write
     *    failure) fails every day;
@@ -202,11 +200,12 @@ object Flagship {
     * ([[Sinks.writeWideMatrixCsvDense]]: ids as header + index, unit
     * diagonal, empty cells for undefined pairs — exporter:163,227-235 —
     * assembled straight off each window's cells row, no explode/regroup
-    * in the loop). Contrast with [[run]], which recomputes each window
-    * through the per-slice pair join and writes the long pair form.
+    * in the loop).
     *
-    * Same never-throw contract as [[run]]: a failing window is recorded
-    * and skipped; a setup failure degrades to every window failed. Input
+    * Never throws (the reference swallows any window error and
+    * continues): a failing window is recorded and skipped; a setup
+    * failure degrades to every window failed; a window with no ticks is
+    * `ok = true, rows = 0`. Input
     * outside the aggregate's exact envelope is a setup failure: one
     * non-finite value or one |x| > ~9×10⁹ ANYWHERE in the session throws
     * in the aggregate's 1e-6 quantization inside the single
@@ -263,10 +262,10 @@ object Flagship {
       windows.map { case (ws, we) =>
         Try {
           val winCells = cells.where(col("win") === ws).select("cells")
-          // count on the cached cells is a cheap per-window probe; an
-          // empty window (structurally impossible for grid-aligned
-          // windows, but a caller can pass a wider range) must report
-          // rows = 0 like runDailyExport, not claim a k-wide matrix
+          // count on the cached cells is a cheap per-window probe; a
+          // window with no panel rows (a session with no ticks) must
+          // report rows = 0 like runDailyExport, not claim a k-wide
+          // matrix
           val n = winCells.count()
           val path = s"$outDir/corr_${ws}_$we"
           Sinks.writeWideMatrixCsvDense(winCells, users, path)
@@ -283,60 +282,5 @@ object Flagship {
       cells.unpersist()
       Time.unpersistPanels()
     }
-  }
-
-  /** Run the per-window correlation export over one trading session.
-    * Every window is wrapped in Try: a failing window is recorded and
-    * skipped, never failing the run (§2.11 of the survey — the
-    * reference's lenient per-window contract). Each window is written
-    * in the (i, j, rho) pair form; the reference's square matrix CSV
-    * comes from [[runWideAtWidth]].
-    */
-  def run(spark: SparkSession, sfDir: String, outDir: String,
-          openSec: Long, closeSec: Long, windowSec: Long,
-          freqSec: Long, maxUsers: Int): Seq[WindowResult] = {
-    val windows = sessionWindows(openSec, closeSec, windowSec)
-    // setup failure (missing source, bad schema) degrades to "every
-    // window failed", preserving the never-throw contract
-    val setup = Try {
-      val ticks = Catalog.load(spark, sfDir, "events")
-        .where(col("user_id") < maxUsers)
-      // resampleFfill caches + registers the filled panel itself — no
-      // second cache() here (it would be a CacheManager no-op plus a
-      // redundant unpersist to keep in sync)
-      Time.resampleFfill(spark, ticks, "user_id", "ts", "value",
-          openSec, closeSec, freqSec, Exact.davg(col("value")))
-    }
-    val filled = setup match {
-      case Failure(e) =>
-        return windows.map { case (ws, we) =>
-          WindowResult(ws, we, ok = false, 0, "",
-            String.valueOf(e.getMessage))
-        }
-      case Success(f) => f
-    }
-    try {
-      windows.map { case (ws, we) =>
-        Try {
-          val slice = filled.where(col("bucket") >= ws && col("bucket") < we)
-          val a = slice.select(col("bucket"), col("user_id").as("i"),
-            col("value").as("va"))
-          val b = slice.select(col("bucket"), col("user_id").as("j"),
-            col("value").as("vb"))
-          val m = a.join(b, Seq("bucket")).where(col("i") < col("j"))
-            .groupBy("i", "j")
-            .agg(round(graft.ops.Stats.pearson(col("va"), col("vb")), 6).as("rho"))
-            .orderBy("i", "j")
-          val path = s"$outDir/corr_${ws}_$we"
-          WindowResult(ws, we, ok = true, Sinks.writeWindowCsv(m, path),
-            path, "")
-        } match {
-          case Success(r) => r
-          case Failure(e) =>
-            WindowResult(ws, we, ok = false, 0, "",
-              String.valueOf(e.getMessage))
-        }
-      }
-    } finally Time.unpersistPanels() // releases the registered panel caches
   }
 }

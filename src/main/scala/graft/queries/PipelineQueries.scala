@@ -23,9 +23,9 @@ object PipelineQueries {
   // resample+ffill for one trading day, 2h tumbling windows anchored at
   // the 09:30 open with the last window clamped to the 16:00 close
   // (correlation_matrix_exporter.py:146-152), correlation matrix per
-  // window. The driver-loop/per-window-CSV form of the same computation
-  // is pipeline.Flagship.run (tested in FlagshipSpec); at scale THIS form
-  // wins — the windows are a derived column, one shuffle, one job.
+  // window. The windows are a derived column: one shuffle, one job. The
+  // per-window square-CSV export of the same matrices is
+  // pipeline.Flagship.runWideAtWidth (e1b's plan, tested in FlagshipSpec).
   private val qE1F = Q("e1_flagship",
     (s, d) => {
       val filled = SparkEntry.resampled(s, d, 8, open930, close1600, 300)
@@ -231,16 +231,24 @@ object PipelineQueries {
         col("value").as("va"))
       val b = filled.select(col("bucket"), col("user_id").as("j"),
         col("value").as("vb"))
-      val pairs = a.join(b, Seq("bucket")).where(col("i") < col("j"))
+      val users = SparkEntry.sortedUsers(filled)
+      // the pair set folded into the square writer's one cells row:
+      // ids become indexes into the sorted universe (the filled grid
+      // holds a row per bucket per user, so at k >= 2 every id appears
+      // in some pair)
+      val cells = a.join(b, Seq("bucket")).where(col("i") < col("j"))
         .groupBy("i", "j")
         .agg(round(graft.ops.Stats.pearson(col("va"), col("vb")), 6)
           .as("rho"))
+        .agg(collect_list(struct(SparkEntry.vidOf(users, col("i")).as("i"),
+          SparkEntry.vidOf(users, col("j")).as("j"), col("rho")))
+          .as("cells"))
       val out = graft.sources.Materialize.path(d, "s6_wide_matrix")
-      val ids = Sinks.writeWideMatrixCsv(pairs, "i", "j", "rho", out)
-      // schema'd read from the writer's returned column order (no
-      // inference pass; empty-safe) — the first (pandas-style
-      // empty-named) index column maps positionally to row_id
-      Sinks.readWideMatrixCsvLong(s, out, ids)
+      Sinks.writeWideMatrixCsvDense(cells, users, out)
+      // schema'd read from the known column order (no inference pass;
+      // empty-safe) — the first (pandas-style empty-named) index column
+      // maps positionally to row_id
+      Sinks.readWideMatrixCsvLong(s, out, users)
         .orderBy("i", "j")
     },
     Some(SparkEntry.ffillSqlCte(8, open930, close1600, 300) +
@@ -269,11 +277,9 @@ object PipelineQueries {
       val (users, panel) = SparkEntry.widePanel(s, d, 500, jan1, jan3, 600)
       val k = users.size
       val nBuckets = (jan3 - jan1) / 600
-      // dense write path: the UDAF's single cells row goes STRAIGHT to
-      // the square-CSV writer (ids are already known = users, i/j stay
-      // indexes) — the generic writer's explode → mirror union →
-      // regroup-by-row shuffle → sampling sort all disappear; rounding
-      // happens here so the file carries the graded 4-dp text
+      // the UDAF's single cells row goes STRAIGHT to the square-CSV
+      // writer (ids are already known = users, i/j stay indexes);
+      // rounding happens here so the file carries the graded 4-dp text
       val cells = panel
         .coalesce(graft.ops.Relational.boundedPartitions(nBuckets, 256))
         .agg(graft.functions.CorrMatrix.corrMatrix(k)(col("vals"))

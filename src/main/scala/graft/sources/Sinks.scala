@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** Write-path operators (SURVEY §2.1 S4/S6/S7): the reference's
   * year/month-partitioned gzip CSV layout and the one-CSV-per-window
@@ -231,144 +231,30 @@ object Sinks {
   def readParquetMerged(spark: SparkSession, paths: String*): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(paths: _*)
 
-  /** S6: one CSV file per window, window encoded in the path
-    * (correlation_matrix_exporter.py:227-235). Single-file output is the
-    * contract (a downstream pandas consumer), hence the coalesce(1) —
-    * documented as a deliberately non-parallel sink for small matrices,
-    * not a pattern for bulk data. Returns the row count written.
-    */
-  def writeWindowCsv(df: DataFrame, path: String): Long = {
-    val cached = df.cache()
-    try {
-      val n = cached.count()
-      cached.coalesce(1).write.mode("overwrite")
-        .option("header", "true").csv(path)
-      n
-    } finally cached.unpersist()
-  }
-
-  /** S6, wide layout: the reference's actual square correlation-matrix
-    * CSV — series ids as BOTH the header row and the index column, unit
-    * diagonal, one value cell per ordered pair (pandas
+  /** S6: the reference's square correlation-matrix CSV, one file per
+    * matrix — series ids as BOTH the header row and the index column,
+    * unit diagonal, one value cell per ordered pair (pandas
     * `data.corr().to_csv(fname)`: correlation_matrix_exporter.py:163,
-    * 227-235; README.md:43 shows the matrix form). Input is the long
-    * upper-triangle form (iCol < jCol, rhoCol); the full square is the
-    * mirrored union plus the diagonal, pivoted over the sorted id set.
-    * The id collect and the k×k pivot are dimension-sized (k series, a
-    * few hundred — same bound as the a3c panel); like
-    * [[writeWindowCsv]], single-file output is the downstream-pandas
-    * contract, not a bulk-data pattern. Returns the sorted ids (the
-    * column order, for read-back).
-    */
-  def writeWideMatrixCsv(pairs: DataFrame, iCol: String, jCol: String,
-                         rhoCol: String, path: String): Seq[Long] = {
-    val session = pairs.sparkSession
-    import session.implicits._
-    // Canonicalize + dedup: a malformed producer emitting the same
-    // pair twice — as (i, j) again, as its mirror (j, i), or as an
-    // explicit diagonal (i, i) — would otherwise silently misalign the
-    // dense fast path (a row can reach size == ids.size with a
-    // duplicated j and a missing id) or throw in the sparse path's
-    // map_from_entries after the internal mirror union. least/greatest
-    // folds mirrors onto the upper triangle (identity for well-formed
-    // input), the i < j filter drops producer diagonals (the writer
-    // owns the unit diagonal), and conflicting duplicates keep the
-    // DETERMINISTIC max(rho) — not dropDuplicates' arbitrary first, so
-    // a malformed producer yields stable artifact bytes — with the
-    // dropped-row count surfaced on stderr so the producer bug stays
-    // visible instead of masked (for well-formed input the aggregate
-    // is an identity and the warning never fires).
-    val ci = col(iCol).cast("long")
-    val cj = col(jCol).cast("long")
-    val pd = pairs.select(least(ci, cj).as("i"), greatest(ci, cj).as("j"),
-        col(rhoCol).cast("double").as("rho"))
-      .where(col("i") < col("j"))
-      .groupBy("i", "j")
-      .agg(max(col("rho")).as("rho"), count(lit(1)).as("dups"))
-      .cache()
-    val conflicted = pd.where(col("dups") > 1)
-      .agg(coalesce(sum(col("dups") - 1), lit(0L))).head().getLong(0)
-    if (conflicted > 0)
-      System.err.println(s"[sinks] writeWideMatrixCsv($path): dropped " +
-        s"$conflicted duplicate pair rows (kept max(rho) per pair) — " +
-        "malformed producer?")
-    val p = pd.select("i", "j", "rho")
-    try {
-      val ids = p.select(explode(array(col("i"), col("j"))).as("id"))
-        .distinct().orderBy("id").as[Long].collect().toSeq
-      val diag = ids.toDF("i")
-        .select(col("i"), col("i").as("j"), lit(1.0).as("rho"))
-      val full = p
-        .unionByName(p.select(col("j").as("i"), col("i").as("j"),
-          col("rho")))
-        .unionByName(diag)
-      // Assemble each matrix row as ONE string instead of a k+1-column
-      // pivot: at k=500 the wide-schema route (501-column pivot, then a
-      // 501-column CSV write) generates enormous codegen and per-row
-      // width overhead — measured ~2× slower than this narrow form,
-      // which keeps every plan column-count-constant (a map per row, a
-      // transform over the id list, one output string). Byte layout is
-      // identical: pandas-style empty index header cell, empty cells
-      // for undefined pairs, "NaN" text for NaN, Double.toString cells
-      // (the CSV writer's own double format).
-      // dense fast path: when a row carries every id (always true for
-      // UDAF-produced matrices, which emit ALL pairs incl. NaN), the
-      // j-sorted cell list IS the ids-ordered cell list — O(k log k)
-      // per row. The sparse fallback does a per-id map probe, which is
-      // O(k) PER LOOKUP on Spark's array-backed MapData (O(k²)/row) —
-      // acceptable only for the small sparse join-form matrices.
-      val entries = array_sort(collect_list(struct(col("j"),
-        when(col("rho").isNull, lit(""))
-          .otherwise(col("rho").cast("string")).as("cell"))))
-      val dense = transform(col("entries"), e => e.getField("cell"))
-      val probe = map_from_entries(transform(col("entries"),
-        e => struct(e.getField("j"), e.getField("cell"))))
-      val sparse = transform(typedLit(ids),
-        id => coalesce(element_at(probe, id), lit("")))
-      val cells = when(size(col("entries")) === ids.size, dense)
-        .otherwise(sparse)
-      val rows = full.groupBy("i")
-        .agg(entries.as("entries"))
-        .select(col("i").as("key"),
-          concat_ws(",", col("i").cast("string"), array_join(cells, ","))
-            .as("line"))
-      val header = session.range(1).select(
-        lit(Long.MinValue).as("key"),
-        lit("," + ids.mkString(",")).as("line"))
-      header.unionByName(rows)
-        .orderBy("key").select("line")
-        .coalesce(1).write.mode("overwrite").text(path)
-      // the artifact contract is .csv files (the reference's pandas
-      // consumer globs them); the text writer names parts .txt
-      renameParts(session, path, ".txt", ".csv")
-      ids
-    } finally { pd.unpersist(); () }
-  }
-
-  /** [[writeWideMatrixCsv]] specialized to the one-row UDAF output: the
-    * caller hands the single `cells` row (array of (i, j, rho) structs,
-    * i/j INDEXES into `ids`, i < j, rho already rounded) and the known
-    * id order, and the k+1 CSV lines are assembled straight off that
-    * array — no explode to k²/2 rows, no mirror union, no regroup
-    * shuffle, and no order-by sampling pass re-running the aggregate
-    * (the generic writer pays all four; measured 2-3× the whole write
-    * phase of s6b at k=500). Byte layout is identical to the generic
-    * writer: pandas-style empty index header cell, "" for undefined
+    * 227-235; README.md:43 shows the matrix form). The caller hands the
+    * single `cells` row (array of (i, j, rho) structs, i/j INDEXES into
+    * `ids`, i < j, rho already rounded) and the id order, and the k+1
+    * CSV lines are assembled straight off that array — no explode to
+    * k²/2 rows, no mirror union, no regroup shuffle, no sort. Layout:
+    * pandas-style empty index header cell, "" for undefined or absent
     * pairs, unit "1.0" diagonal, Spark's own double→string cell text
-    * (the rho→string cast runs INSIDE the plan so the formatting can
-    * never drift from the generic writer's).
+    * (the rho→string cast runs inside the plan).
     *
     * Scale shape: the matrix is dimension-sized (k² cells at the
     * documented k≈1-2k UDAF ceiling, ≤ a few MB), so one task
-    * assembling lines is the same single-file contract bound as the
-    * generic writer's coalesce(1) — never a bulk-data pattern.
+    * assembling lines is the single-file contract a downstream pandas
+    * consumer needs — never a bulk-data pattern.
     *
-    * Contract: `cells` must be the agg's ONE row (an ungrouped
-    * aggregate always yields exactly one, even over empty input, so
-    * the structural callers cannot violate this; a multi-row input
-    * would emit one matrix per row into the same file). A ZERO-row
-    * input (e.g. a per-window filter that matched nothing) writes an
-    * empty file — the reference's skip-empty-window contract
+    * Contract: `cells` must be ONE row (an ungrouped aggregate always
+    * yields exactly one, even over empty input, so the structural
+    * callers cannot violate this; a multi-row input would emit one
+    * matrix per row into the same file). A ZERO-row input (e.g. a
+    * per-window filter that matched nothing) writes an empty file — the
+    * reference's skip-empty-window contract
     * (correlation_matrix_exporter.py:125-126), not an error.
     */
   def writeWideMatrixCsvDense(cells: DataFrame, ids: Seq[Long],
@@ -416,13 +302,13 @@ object Sinks {
       }
   }
 
-  /** Read a square matrix CSV written by [[writeWideMatrixCsv]] back as
-    * the long upper-triangle (i, j, rho) form. `ids` is the writer's
-    * returned column order, declared as the read schema — no inference
+  /** Read a square matrix CSV written by [[writeWideMatrixCsvDense]]
+    * back as the long upper-triangle (i, j, rho) form. `ids` is the
+    * writer's column order, declared as the read schema — no inference
     * pass over a k+1-column CSV.
     *
-    * An empty id set (the writer saw zero pairs) short-circuits to an
-    * empty relation with the same shape: a dir with no data files can't
+    * An empty id set short-circuits to an empty relation with the same
+    * shape: a dir with no data files can't
     * infer a schema and `unpivot` rejects zero value columns, and the
     * reference's per-window contract is swallow-and-continue on empties
     * (correlation_matrix_exporter.py:125-126), never a crash.

@@ -53,6 +53,27 @@ object Streams {
       .parquet(s"$outDir/batch_id=$id")
   }
 
+  /** Drain a bounded stream: `Trigger.AvailableNow` in append mode,
+    * `sink` called once per micro-batch with the batch id. Blocks until
+    * the stream has consumed everything available at start; returns the
+    * number of micro-batches run.
+    */
+  private def drain(df: DataFrame, checkpointDir: String)
+                   (sink: (DataFrame, Long) => Unit): Long = {
+    var batches = 0L
+    df.writeStream
+      .trigger(Trigger.AvailableNow())
+      .outputMode("append")
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        batches += 1
+        sink(batch, id)
+      }
+      .start()
+      .awaitTermination()
+    batches
+  }
+
   /** Events-schema'd streaming source over a directory of parquet files
     * in the engine's *public* encoding (`ts` TimestampType) — i.e. files
     * the engine itself landed. Fixture-encoding quirks (nanos-as-long,
@@ -76,7 +97,6 @@ object Streams {
   def windowedMeans(spark: SparkSession, srcDir: String, outDir: String,
                     checkpointDir: String,
                     maxFilesPerTrigger: Option[Int] = None): Long = {
-    var batches = 0L
     val agg = eventsStream(spark, srcDir, maxFilesPerTrigger)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 minute"), col("user_id"))
@@ -84,17 +104,8 @@ object Streams {
       .select(col("window.start").as("bucket_start"), col("user_id"),
         col("avg_value"), col("n"),
         date_format(col("window.start"), "yyyy-MM-dd").as("date"))
-    val q = agg.writeStream
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        batches += 1
-        idempotentWrite(batch, outDir, id, partitionBy = Seq("date"))
-      }
-      .start()
-    q.awaitTermination()
-    batches
+    drain(agg, checkpointDir)(
+      idempotentWrite(_, outDir, _, partitionBy = Seq("date")))
   }
 
   /** The flagship's correlation matrices as a STREAM: per-`span`
@@ -172,15 +183,7 @@ object Streams {
     val corr = windowedCorrPlan(
       eventsStream(spark, srcDir, maxFilesPerTrigger), users,
       bucket, span, Some(watermark))
-    val q = corr.writeStream
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        idempotentWrite(batch, outDir, id)
-      }
-      .start()
-    q.awaitTermination()
+    drain(corr, checkpointDir)(idempotentWrite(_, outDir, _))
   }
 
   /** Events-shaped streaming view of a landed [[resampleFfillStream]]
@@ -216,15 +219,7 @@ object Streams {
       watermark: String = "1 hour"): Unit = {
     val corr = windowedCorrPlan(cellsAsEventsStream(spark, cellsDir),
       users, bucket, span, Some(watermark))
-    val q = corr.writeStream
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        idempotentWrite(batch, outDir, id)
-      }
-      .start()
-    q.awaitTermination()
+    drain(corr, checkpointDir)(idempotentWrite(_, outDir, _))
   }
 
   /** The shared logical chain of [[windowedCorr]] — also runnable on a
@@ -289,15 +284,7 @@ object Streams {
         unix_timestamp(col("session_window.start")).as("session_start"),
         unix_timestamp(col("session_window.end")).as("session_end"),
         col("n_events"))
-    val q = agg.writeStream
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        idempotentWrite(batch, outDir, id)
-      }
-      .start()
-    q.awaitTermination()
+    drain(agg, checkpointDir)(idempotentWrite(_, outDir, _))
   }
 
   /** Watermarked stream-stream interval join: 'click' events matched to
@@ -325,15 +312,7 @@ object Streams {
       .select(col("event_id_c"), col("event_id_v"), col("user_id_c"),
         unix_timestamp(col("ts_c")).as("click_sec"),
         unix_timestamp(col("ts_v")).as("view_sec"))
-    val q = joined.writeStream
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        idempotentWrite(batch, outDir, id)
-      }
-      .start()
-    q.awaitTermination()
+    drain(joined, checkpointDir)(idempotentWrite(_, outDir, _))
   }
 
   /** Streaming incremental near-dedup — the d8 pipeline as a
@@ -392,66 +371,60 @@ object Streams {
     val src = maxFilesPerTrigger
       .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
       .parquet(srcDir)
-    val q = src.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // signatures come from the SAME build as the batch lake tables
-        // (LlmQueries.hashedShingles/signatureTables), so a tuning
-        // change there cannot silently diverge stream from batch
-        val sh = graft.queries.LlmQueries.hashedShingles(batch).cache()
+    drain(src, checkpointDir) { (batch, id) =>
+      // signatures come from the SAME build as the batch lake tables
+      // (LlmQueries.hashedShingles/signatureTables), so a tuning
+      // change there cannot silently diverge stream from batch
+      val sh = graft.queries.LlmQueries.hashedShingles(batch).cache()
+      try {
+        val (dSets, dBands) =
+          graft.queries.LlmQueries.signatureTables(sh)
+        // the state tables must not double-carry docs that are also in
+        // the arriving batch (the spec replays the fixture's own top
+        // decile as the delta) — anti-join the batch ids out so the
+        // union is disjoint and per-pair match counts stay exact
+        val ids = broadcast(batch.select("doc_id"))
+        val cBands = spark.read.parquet(stBands)
+          .join(ids, Seq("doc_id"), "left_anti")
+        val cSets = spark.read.parquet(stSets)
+          .join(ids, Seq("doc_id"), "left_anti")
+        // the SPLIT probe (LlmQueries.deltaVerdictsSplit): corpus
+        // state relations go in un-unioned, so at width the
+        // set-attachment join never shuffles the corpus set table
+        // per batch — the union shape measured 174 MB (corpus-sized)
+        // per 2k-doc batch against a 110k-doc lake (SCALE.md's
+        // round-19 delta-probe width run); verdicts are provably
+        // identical (CapPlumbSpec pins split == single)
+        idempotentWrite(graft.queries.LlmQueries.deltaVerdictsSplit(
+            cBands, cSets, dBands, dSets, batch.select("doc_id"), th,
+            maxDf),
+          outDir, id)
+        // lake maintenance: this batch's signatures become corpus for
+        // every later micro-batch. Each table's append is guarded by
+        // that table's OWN contents (not its sibling's), so a crash
+        // between the two appends replays as a per-table no-op and a
+        // doc's signatures are never duplicated — a duplicate set row
+        // would double a pair's verified match count in deltaVerdicts.
+        // localCheckpoint breaks the read-X-while-appending-to-X
+        // dependency; released right after the appends so a
+        // long-running stream does not pin two relations per batch
+        val knownB = spark.read.parquet(stBands).select("doc_id")
+          .distinct()
+        val knownS = spark.read.parquet(stSets).select("doc_id")
+        val freshB = dBands.join(knownB, Seq("doc_id"), "left_anti")
+          .localCheckpoint()
+        val freshS = dSets.join(knownS, Seq("doc_id"), "left_anti")
+          .localCheckpoint()
         try {
-          val (dSets, dBands) =
-            graft.queries.LlmQueries.signatureTables(sh)
-          // the state tables must not double-carry docs that are also in
-          // the arriving batch (the spec replays the fixture's own top
-          // decile as the delta) — anti-join the batch ids out so the
-          // union is disjoint and per-pair match counts stay exact
-          val ids = broadcast(batch.select("doc_id"))
-          val cBands = spark.read.parquet(stBands)
-            .join(ids, Seq("doc_id"), "left_anti")
-          val cSets = spark.read.parquet(stSets)
-            .join(ids, Seq("doc_id"), "left_anti")
-          // the SPLIT probe (LlmQueries.deltaVerdictsSplit): corpus
-          // state relations go in un-unioned, so at width the
-          // set-attachment join never shuffles the corpus set table
-          // per batch — the union shape measured 174 MB (corpus-sized)
-          // per 2k-doc batch against a 110k-doc lake (SCALE.md's
-          // round-19 delta-probe width run); verdicts are provably
-          // identical (CapPlumbSpec pins split == single)
-          idempotentWrite(graft.queries.LlmQueries.deltaVerdictsSplit(
-              cBands, cSets, dBands, dSets, batch.select("doc_id"), th,
-              maxDf),
-            outDir, id)
-          // lake maintenance: this batch's signatures become corpus for
-          // every later micro-batch. Each table's append is guarded by
-          // that table's OWN contents (not its sibling's), so a crash
-          // between the two appends replays as a per-table no-op and a
-          // doc's signatures are never duplicated — a duplicate set row
-          // would double a pair's verified match count in deltaVerdicts.
-          // localCheckpoint breaks the read-X-while-appending-to-X
-          // dependency; released right after the appends so a
-          // long-running stream does not pin two relations per batch
-          val knownB = spark.read.parquet(stBands).select("doc_id")
-            .distinct()
-          val knownS = spark.read.parquet(stSets).select("doc_id")
-          val freshB = dBands.join(knownB, Seq("doc_id"), "left_anti")
-            .localCheckpoint()
-          val freshS = dSets.join(knownS, Seq("doc_id"), "left_anti")
-            .localCheckpoint()
-          try {
-            freshB.write.mode("append").parquet(stBands)
-            freshS.write.mode("append").parquet(stSets)
-          } finally {
-            freshB.unpersist()
-            freshS.unpersist()
-            ()
-          }
-        } finally { sh.unpersist(); () }
-        ()
-      }
-      .start()
-    q.awaitTermination()
+          freshB.write.mode("append").parquet(stBands)
+          freshS.write.mode("append").parquet(stSets)
+        } finally {
+          freshB.unpersist()
+          freshS.unpersist()
+          ()
+        }
+      } finally { sh.unpersist(); () }
+    }
   }
 
   /** One filled grid cell of [[resampleFfillStream]] — the streaming
@@ -633,15 +606,7 @@ object Streams {
     val cells = resampleFfillStreamPlan(
       eventsStream(spark, srcDir, maxFilesPerTrigger),
       startSec, endSec, stepSec, watermark)
-    val q = cells.toDF().writeStream
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        idempotentWrite(batch, outDir, id)
-      }
-      .start()
-    q.awaitTermination()
+    drain(cells.toDF(), checkpointDir)(idempotentWrite(_, outDir, _))
   }
 
   /** WATERMARK-BOUNDED streaming keep-first dedup — the continuous
@@ -669,15 +634,7 @@ object Streams {
       .withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark("event_id")
       .select(col("event_id"), col("user_id"), col("value"))
-    val q = deduped.writeStream
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        idempotentWrite(batch, outDir, id)
-      }
-      .start()
-    q.awaitTermination()
+    drain(deduped, checkpointDir)(idempotentWrite(_, outDir, _))
   }
 
   /** Streaming keep-first dedup on event_id: emits each key's first-seen
@@ -708,14 +665,6 @@ object Streams {
             rows.take(1)
           }
       }.toDF("event_id", "user_id", "value")
-    val q = deduped.writeStream
-      .trigger(Trigger.AvailableNow())
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        idempotentWrite(batch, outDir, id)
-      }
-      .start()
-    q.awaitTermination()
+    drain(deduped, checkpointDir)(idempotentWrite(_, outDir, _))
   }
 }

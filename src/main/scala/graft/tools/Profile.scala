@@ -2,7 +2,8 @@
 // per-query Profile*/TimeQuery one-offs).
 //
 // Timing mode — Bench's methodology (noop sink, warm pass, cache
-// cleared per run, min/median of 3) for any named SparkEntry query:
+// cleared per run, min/median of 3 rounds in rotated order) for any
+// named SparkEntry query:
 //   sbt "runMain graft.tools.Profile <sfDir> <query> [query...]"
 //
 // Phase mode — a named per-query phase decomposition, each phase timed
@@ -41,43 +42,33 @@ object Profile {
       names: Seq[String]): Unit = {
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown: ${unknown.mkString(", ")}")
-    // JVM-global JIT warmup: a fresh JVM's FIRST profiled query
-    // otherwise absorbs the whole-process compile slope (the e9
-    // lesson — steady state arrives after several executions, not
-    // one), so every flag adjudication had to re-run the list in
-    // reverse order to separate position from signal. Two extra
-    // untimed passes of the first name (plus its own warm pass below)
-    // put the lead query ~3 executions deep before its timed runs.
-    names.headOption.map(SparkEntry.queries).foreach { fn =>
-      // NonFatal only: a warmup OOM/VM error must propagate — a
-      // degraded JVM proceeding into the timed loop would report
-      // garbage as signal. A non-fatal warmup failure is noted (the
-      // per-query warm pass below reports the real error and skips).
-      try { noop(fn(spark, sfDir)); noop(fn(spark, sfDir)) }
-      catch { case scala.util.control.NonFatal(e) =>
-        println(s"[q] JVM warmup pass failed (continuing): ${e.getMessage}")
+    // one untimed warm pass per name; a failing query is reported and
+    // SKIPPED — the remaining names still profile (the timed rounds
+    // would otherwise rethrow the same error and lose the session)
+    val warmed = names.distinct.filter { name =>
+      try { noop(SparkEntry.queries(name)(spark, sfDir)); true }
+      catch { case e: Throwable =>
+        println(s"[q] $name FAILED, skipping: ${e.getMessage}")
+        false
       }
     }
-    names.foreach { name =>
-      val fn = SparkEntry.queries(name)
-      // a failing query is reported and SKIPPED — the remaining names
-      // still profile (the timed loop would otherwise rethrow the same
-      // error the warm pass just caught and lose the session)
-      val warmed =
-        try { noop(fn(spark, sfDir)); true }
-        catch { case e: Throwable =>
-          println(s"[q] $name FAILED, skipping: ${e.getMessage}")
-          false
-        }
-      if (warmed) {
-        val times = (1 to 3).map { _ =>
-          clear(spark)
-          val t0 = System.nanoTime()
-          noop(fn(spark, sfDir))
-          (System.nanoTime() - t0) / 1e9
-        }.sorted
-        println(f"[q] $name%-28s median ${times(1)}%.2f s  min ${times.head}%.2f s")
+    // three timed rounds, the name order rotated each round, so no
+    // query is always timed first — the lead slot absorbs the JVM's
+    // compile slope and reads slower than the same query run later
+    val times = scala.collection.mutable.Map.empty[String, Seq[Double]]
+      .withDefaultValue(Nil)
+    (0 until 3).foreach { round =>
+      val n = warmed.size
+      (0 until n).map(p => warmed((p + round) % n)).foreach { name =>
+        clear(spark)
+        val t0 = System.nanoTime()
+        noop(SparkEntry.queries(name)(spark, sfDir))
+        times(name) :+= (System.nanoTime() - t0) / 1e9
       }
+    }
+    warmed.foreach { name =>
+      val t = times(name).sorted
+      println(f"[q] $name%-28s median ${t(1)}%.2f s  min ${t.head}%.2f s")
     }
   }
 

@@ -36,25 +36,50 @@ class FlagshipSpec extends SparkTestBase {
     assert(Flagship.chunksDropTail(Seq.empty[Int], 3).isEmpty)
   }
 
+  /** The one matrix CSV under a window's output dir, as lines. */
+  private def matrixLines(dir: String): Seq[String] = {
+    val csv = new java.io.File(dir).listFiles()
+      .filter(_.getName.endsWith(".csv"))
+    assert(csv.length == 1, s"expected one csv under $dir")
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.readAllLines(csv.head.toPath).asScala.toSeq
+  }
+
   test("run exports one CSV per window and tolerates empty windows") {
     val out = scratchDir("graft_flag_")
     val open = graft.SparkEntry.sec("2024-01-02T09:30:00")
     val close = graft.SparkEntry.sec("2024-01-02T16:00:00")
-    val res = Flagship.run(spark, "/root/testdata/sf0.001", out,
+    val res = Flagship.runWideAtWidth(spark, "/root/testdata/sf0.001", out,
       open, close, windowSec = 7200, freqSec = 300, maxUsers = 5)
     assert(res.length == 4)
     assert(res.forall(_.ok), res.filterNot(_.ok).map(_.error).mkString("; "))
     assert(res.forall(r => r.winEnd <= close))
-    res.foreach { r =>
-      val files = new java.io.File(r.path).listFiles()
-      assert(files != null && files.exists(_.getName.endsWith(".csv")),
-        s"no csv under ${r.path}")
-    }
     // every window sees the same key set (the grid spans the session), so
-    // all windows export the same k*(k-1)/2 pair count, and at least one
-    // pair exists at sf0.001
+    // all windows export the same k×k matrix, k > 1 at sf0.001
     assert(res.map(_.rows).distinct.size == 1)
-    assert(res.head.rows > 0)
+    assert(res.head.rows > 1)
+    res.foreach(r => assert(matrixLines(r.path).size == r.rows + 1))
+
+    // a session before the fixture's first tick: every window is empty,
+    // recorded ok with zero rows, never a throw
+    val emptyOpen = graft.SparkEntry.sec("2023-12-29T09:30:00")
+    val empty = Flagship.runWideAtWidth(spark, "/root/testdata/sf0.001",
+      scratchDir("graft_flag_empty_"), emptyOpen, emptyOpen + 23400,
+      windowSec = 7200, freqSec = 300, maxUsers = 5)
+    assert(empty.length == 4)
+    assert(empty.forall(r => r.ok && r.rows == 0),
+      empty.map(r => s"${r.ok}/${r.rows}/${r.error}").mkString("; "))
+
+    // k = 1: of users 0 and 1 only user 1 ticks in this session (once,
+    // at 15:54), so its filled series is empty before that in every
+    // window, yet each window still exports the 1×1 unit matrix
+    val one = Flagship.runWideAtWidth(spark, "/root/testdata/sf0.001",
+      scratchDir("graft_flag_k1_"), open, close,
+      windowSec = 7200, freqSec = 300, maxUsers = 2)
+    assert(one.length == 4)
+    assert(one.forall(r => r.ok && r.rows == 1),
+      one.map(r => s"${r.ok}/${r.rows}/${r.error}").mkString("; "))
+    one.foreach(r => assert(matrixLines(r.path) == Seq(",1", "1,1.0")))
   }
 
   test("wide matrix CSV holds its layout at real width (k=150)") {
@@ -362,8 +387,8 @@ class FlagshipSpec extends SparkTestBase {
     val close = graft.SparkEntry.sec("2024-01-02T16:00:00")
     // nonexistent fixture dir: every window's read fails; the reference
     // contract is skip-and-continue, not abort
-    val res = Flagship.run(spark, "/nonexistent_fixture_dir", out,
-      open, close, windowSec = 7200, freqSec = 300, maxUsers = 5)
+    val res = Flagship.runWideAtWidth(spark, "/nonexistent_fixture_dir",
+      out, open, close, windowSec = 7200, freqSec = 300, maxUsers = 5)
     assert(res.length == 4)
     assert(res.forall(r => !r.ok && r.error.nonEmpty && r.rows == 0))
   }

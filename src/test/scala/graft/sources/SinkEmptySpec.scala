@@ -13,47 +13,50 @@ import org.apache.spark.sql.types._
   */
 class SinkEmptySpec extends SparkTestBase {
 
-  private def pairsDf(rows: Seq[(Long, Long, Double)]) = {
-    import spark.implicits._
-    rows.toDF("i", "j", "rho")
+  /** Write long-form (i, j, rho) pairs over the sorted universe `ids`
+    * through the square writer, then read the file back.
+    */
+  private def roundTrip(out: String, ids: Seq[Long],
+                        pairs: Seq[(Long, Long, Option[Double])]) = {
+    val cells = pairs.map { case (i, j, r) =>
+      (ids.indexOf(i), ids.indexOf(j), r)
+    }
+    Sinks.writeWideMatrixCsvDense(
+      WideMatrixWriterSpec.cellsRow(spark, cells), ids, out)
+    Sinks.readWideMatrixCsvLong(spark, out, ids)
   }
 
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    df.orderBy("i", "j").collect().toSeq.map(r => (r.getLong(0),
+      r.getLong(1), if (r.isNullAt(2)) None else Some(r.getDouble(2))))
+
   test("writeWideMatrixCsv on zero pairs: empty ids, empty-safe read") {
-    val out = scratchDir("graft_empty_wide_")
-    val ids = Sinks.writeWideMatrixCsv(
-      pairsDf(Nil).where(lit(false)), "i", "j", "rho", out)
-    assert(ids.isEmpty)
-    val back = Sinks.readWideMatrixCsvLong(spark, out, ids)
+    val back = roundTrip(scratchDir("graft_empty_wide_"), Nil, Nil)
     assert(back.schema.map(f => (f.name, f.dataType)) == Seq(
       ("i", LongType), ("j", LongType), ("rho", DoubleType)))
     assert(back.count() == 0)
+    // a zero-row cells input (a window filter that matched nothing)
+    // writes an empty file that reads back as zero pairs
+    val out = scratchDir("graft_empty_rows_")
+    Sinks.writeWideMatrixCsvDense(
+      WideMatrixWriterSpec.cellsRow(spark, Nil).where(lit(false)),
+      Seq(1L, 2L), out)
+    assert(Sinks.readWideMatrixCsvLong(spark, out, Seq(1L, 2L)).count() == 0)
   }
 
   test("readWideMatrixCsvLong round-trips a non-empty matrix") {
-    val out = scratchDir("graft_roundtrip_wide_")
-    val pairs = pairsDf(Seq((1L, 2L, 0.5), (1L, 3L, -0.25), (2L, 3L, 1.0)))
-    val ids = Sinks.writeWideMatrixCsv(pairs, "i", "j", "rho", out)
-    assert(ids == Seq(1L, 2L, 3L))
-    val back = Sinks.readWideMatrixCsvLong(spark, out, ids)
-      .orderBy("i", "j").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    assert(back == Seq((1L, 2L, 0.5), (1L, 3L, -0.25), (2L, 3L, 1.0)))
+    val pairs = Seq((1L, 2L, Some(0.5)), (1L, 3L, Some(-0.25)),
+      (2L, 3L, Some(1.0)))
+    val back = roundTrip(scratchDir("graft_roundtrip_wide_"),
+      Seq(1L, 2L, 3L), pairs)
+    assert(rows(back) == pairs)
   }
 
-  test("sparse matrix (missing pairs) takes the probe fallback: empty " +
-    "cells round-trip as null rho") {
-    // rows are NOT dense here: id 1's row carries j∈{1,2} but not 3, so
-    // the writer's size(entries)==k dense path must NOT fire — this is
-    // the only coverage of the sparse map-probe branch
+  test("absent pairs write empty cells that read back as null rho") {
     val out = scratchDir("graft_sparse_wide_")
-    val pairs = pairsDf(Seq((1L, 2L, 0.5), (2L, 3L, 1.0)))
-    val ids = Sinks.writeWideMatrixCsv(pairs, "i", "j", "rho", out)
-    assert(ids == Seq(1L, 2L, 3L))
-    val back = Sinks.readWideMatrixCsvLong(spark, out, ids)
-      .orderBy("i", "j").collect()
-      .map(r => (r.getLong(0), r.getLong(1),
-        if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toSeq
-    assert(back == Seq((1L, 2L, Some(0.5)), (1L, 3L, None),
+    val back = roundTrip(out, Seq(1L, 2L, 3L),
+      Seq((1L, 2L, Some(0.5)), (2L, 3L, Some(1.0))))
+    assert(rows(back) == Seq((1L, 2L, Some(0.5)), (1L, 3L, None),
       (2L, 3L, Some(1.0))))
   }
 
@@ -61,24 +64,23 @@ class SinkEmptySpec extends SparkTestBase {
     val rnd = new scala.util.Random(42)
     (1 to 5).foreach { trial =>
       val ids = rnd.shuffle((1L to 40L).toList).take(5 + rnd.nextInt(10))
+        .sorted
       val universe = for {
         i <- ids; j <- ids if i < j
       } yield (i, j)
       val kept = universe.filter(_ => rnd.nextDouble() < 0.6)
-        .map { case (i, j) => (i, j, math.rint(rnd.nextDouble() * 1e4) / 1e4) }
-      if (kept.nonEmpty) {
-        val out = scratchDir(s"graft_rand_wide_${trial}_")
-        val wIds = Sinks.writeWideMatrixCsv(pairsDf(kept), "i", "j", "rho",
-          out)
-        val present = kept.flatMap(p => Seq(p._1, p._2)).distinct.sorted
-        assert(wIds == present)
-        val back = Sinks.readWideMatrixCsvLong(spark, out, wIds)
-          .where(col("rho").isNotNull).collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-        assert(back == kept.toSet,
-          s"trial $trial: ${back.diff(kept.toSet).take(3)} vs " +
-            s"${kept.toSet.diff(back).take(3)}")
+        .map { case (i, j) =>
+          (i, j, Some(math.rint(rnd.nextDouble() * 1e4) / 1e4))
+        }
+      val back = rows(roundTrip(scratchDir(s"graft_rand_wide_${trial}_"),
+        ids, kept))
+      // every pair of the universe comes back, absent ones as null
+      val want = universe.map { case (i, j) =>
+        (i, j, kept.collectFirst { case (`i`, `j`, r) => r }.flatten)
       }
+      assert(back == want,
+        s"trial $trial: ${back.diff(want).take(3)} vs " +
+          s"${want.diff(back).take(3)}")
     }
   }
 

@@ -1,55 +1,58 @@
 package graft.sources
 
 import graft.SparkTestBase
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Byte-equivalence of the two square-CSV writers: for ANY upper-
-  * triangle cell subset, [[Sinks.writeWideMatrixCsvDense]] (one-row
-  * UDAF cells + known ids) must produce the IDENTICAL file bytes as
-  * the generic [[Sinks.writeWideMatrixCsv]] (long-form pairs) — the
-  * dense path's whole claim is "same artifact, fewer stages", and this
-  * pins it across the shapes that differ structurally: full matrices,
-  * sparse subsets (absent pairs → empty cells), null rhos, NaNs, and
-  * the k=1 edge.
+/** Byte layout of the square-CSV writer: for ANY upper-triangle cell
+  * subset, [[Sinks.writeWideMatrixCsvDense]] must write exactly the
+  * pandas `data.corr().to_csv()` text a test-local builder assembles —
+  * empty index header cell, ids as header row and index column, unit
+  * diagonal, symmetric cells, "" for null or absent pairs. Cell text
+  * comes from Spark's own `cast(double as string)`, so the spec pins
+  * the layout without hard-coding a number format. Shapes: full
+  * matrices, null rhos, NaNs, scientific notation, ids that appear in
+  * no pair, and seeded random subsets.
   */
 class WideMatrixWriterSpec extends SparkTestBase {
   import spark.implicits._
+  import WideMatrixWriterSpec.cellsRow
 
-  private def csvBytes(dir: String): String = {
+  private def csvText(dir: String): String = {
     val fs = new java.io.File(dir).listFiles()
       .filter(_.getName.endsWith(".csv"))
     assert(fs.length == 1, s"expected one csv in $dir")
     new String(java.nio.file.Files.readAllBytes(fs.head.toPath))
   }
 
-  /** Write the same cells through both writers; return (generic, dense)
-    * file contents. `cells` are (iIdx, jIdx, rho) with i < j indexes
-    * into `ids`.
+  /** The pandas layout of `cells` over `ids`, one "\n"-ended line per
+    * row, every number rendered by Spark's double→string cast.
     */
-  private def both(ids: Seq[Long],
-                   cells: Seq[(Int, Int, Option[Double])]): (String, String) = {
-    val gDir = scratchDir("graft_wm_generic_")
-    val dDir = scratchDir("graft_wm_dense_")
-    val longForm = cells.map { case (i, j, r) =>
-      (ids(i), ids(j), r.map(Double.box).orNull.asInstanceOf[java.lang.Double])
-    }.toDF("i", "j", "rho")
-    val gotIds = Sinks.writeWideMatrixCsv(longForm, "i", "j", "rho", gDir)
-    // the generic writer derives ids from the pairs it saw; the dense
-    // writer is handed the full universe — for shapes where some id
-    // appears in no pair the two columns differ BY CONTRACT, so only
-    // compare when the generic writer recovered the full universe
-    val denseInput = Seq(1).toDF("one").select(
-      typedLit(cells.map { case (i, j, r) => (i, j, r) })
-        .cast("array<struct<i:int,j:int,rho:double>>").as("cells"))
-    Sinks.writeWideMatrixCsvDense(denseInput, ids, dDir)
-    assume(gotIds == ids, "pair set does not cover the id universe")
-    (csvBytes(gDir), csvBytes(dDir))
+  private def pandasText(ids: Seq[Long],
+                         cells: Seq[(Int, Int, Option[Double])]): String = {
+    val text = (Some(1.0) +: cells.map(_._3)).toDF("v")
+      .select(col("v").cast("string")).as[String].collect()
+    val k = ids.size
+    val m = Array.fill(k, k)("")
+    (0 until k).foreach(d => m(d)(d) = text.head)
+    cells.zip(text.tail).foreach { case ((i, j, _), t) =>
+      val s = Option(t).getOrElse("")
+      m(i)(j) = s
+      m(j)(i) = s
+    }
+    val header = ("" +: ids.map(_.toString)).mkString(",")
+    val rows = ids.indices.map(r =>
+      (ids(r).toString +: m(r).toSeq).mkString(","))
+    (header +: rows).map(_ + "\n").mkString
   }
 
-  private def assertSame(ids: Seq[Long],
-                         cells: Seq[(Int, Int, Option[Double])]): Unit = {
-    val (g, d) = both(ids, cells)
-    assert(g == d, s"writer outputs differ:\nGENERIC:\n$g\nDENSE:\n$d")
+  private def assertLayout(ids: Seq[Long],
+                           cells: Seq[(Int, Int, Option[Double])]): Unit = {
+    val dir = scratchDir("graft_wm_")
+    Sinks.writeWideMatrixCsvDense(cellsRow(spark, cells), ids, dir)
+    val got = csvText(dir)
+    val want = pandasText(ids, cells)
+    assert(got == want, s"layout differs:\nWRITER:\n$got\nPANDAS:\n$want")
   }
 
   test("full matrix: every pair defined") {
@@ -57,68 +60,59 @@ class WideMatrixWriterSpec extends SparkTestBase {
     val cells = for {
       i <- 0 until 4; j <- (i + 1) until 4
     } yield (i, j, Some(math.round((i * 0.17 - j * 0.05) * 1e4) / 1e4))
-    assertSame(ids, cells)
+    assertLayout(ids, cells)
   }
 
   test("null rhos become empty cells identically") {
     val ids = Seq(1L, 2L, 5L)
-    assertSame(ids,
+    assertLayout(ids,
       Seq((0, 1, Some(0.25)), (0, 2, None), (1, 2, Some(-0.75))))
   }
 
   test("NaN rhos render as NaN text identically") {
     val ids = Seq(7L, 8L)
-    assertSame(ids, Seq((0, 1, Some(Double.NaN))))
+    assertLayout(ids, Seq((0, 1, Some(Double.NaN))))
   }
 
   test("scientific-notation magnitudes format identically") {
     val ids = Seq(1L, 2L, 3L)
-    assertSame(ids,
+    assertLayout(ids,
       Seq((0, 1, Some(1.0e-4)), (0, 2, Some(-3.0e-7)), (1, 2, Some(1.0))))
   }
 
-  test("generic writer degrades keep-one on mirrored/diagonal/repeated " +
-    "duplicates instead of throwing or misaligning") {
-    val dir = scratchDir("graft_wm_dup_")
-    val pairs = Seq((1L, 2L, 0.5), (2L, 1L, 0.3), (1L, 1L, 9.9),
-      (1L, 2L, 0.5)).toDF("i", "j", "rho")
-    val ids = Sinks.writeWideMatrixCsv(pairs, "i", "j", "rho", dir)
-    assert(ids == Seq(1L, 2L))
-    val back = Sinks.readWideMatrixCsvLong(spark, dir, ids).collect()
-    assert(back.length == 1)
-    val r = back.head
-    assert(r.getLong(0) == 1L && r.getLong(1) == 2L)
-    // keep-ONE of the conflicting duplicates (which one is unspecified)
-    assert(Set(0.3, 0.5).contains(r.getDouble(2)), r.toString)
-    // the producer's bogus (1,1,9.9) never reaches the diagonal
-    val lines = new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".csv")).head
-    val l1 = java.nio.file.Files.readAllLines(lines.toPath).get(1)
-    assert(l1.split(",", -1)(1) == "1.0", l1)
+  test("ids in no pair keep their row and column, empty off the diagonal") {
+    val ids = Seq(4L, 6L, 9L, 12L)
+    assertLayout(ids, Seq((1, 3, Some(0.5))))
+    assertLayout(ids, Nil)
+    assertLayout(Seq(5L), Nil)
   }
 
   test("seeded random shapes: 20 matrices, all byte-identical") {
     val rnd = new scala.util.Random(11)
     (1 to 20).foreach { _ =>
-      val k = 2 + rnd.nextInt(6)
+      val k = 1 + rnd.nextInt(7)
       val ids = Seq.fill(k)(rnd.nextLong().abs % 100000)
         .distinct.sorted
       val kk = ids.size
-      // every id must touch >= 1 pair or the generic writer's derived
-      // universe shrinks (contract difference, not a bug) — chain
-      // (i, i+1) guarantees coverage, then sprinkle random extras
-      val chain = (0 until kk - 1).map(i => (i, i + 1))
-      val extra = Seq.fill(rnd.nextInt(2 * kk))(
-        (rnd.nextInt(kk), rnd.nextInt(kk)))
-        .collect { case (a, b) if a != b => (math.min(a, b), math.max(a, b)) }
-      val cells = (chain ++ extra).distinct.map { case (i, j) =>
-        (i, j, rnd.nextInt(4) match {
-          case 0 => None
-          case 1 => Some(Double.NaN)
-          case _ => Some(math.round(rnd.nextGaussian() * 1e4) / 1e4)
-        })
-      }
-      if (kk >= 2) assertSame(ids, cells)
+      // a random pair subset: some ids may appear in no pair at all
+      val cells = (for {
+        i <- 0 until kk; j <- (i + 1) until kk if rnd.nextDouble() < 0.5
+      } yield (i, j, rnd.nextInt(4) match {
+        case 0 => None
+        case 1 => Some(Double.NaN)
+        case _ => Some(math.round(rnd.nextGaussian() * 1e4) / 1e4)
+      }))
+      assertLayout(ids, cells)
     }
   }
+}
+
+object WideMatrixWriterSpec {
+  /** The writer's one-row input: (i, j, rho) cells, i < j indexes into
+    * the id seq handed to the writer.
+    */
+  def cellsRow(spark: SparkSession,
+               cells: Seq[(Int, Int, Option[Double])]): DataFrame =
+    spark.range(1).select(typedLit(cells)
+      .cast("array<struct<i:int,j:int,rho:double>>").as("cells"))
 }
