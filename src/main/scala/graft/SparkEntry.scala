@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.ops.{Exact, Relational, Time}
+import graft.ops.{Corr, Exact, Relational, Time}
 import graft.ops.Exact.{cents, davg, dsum}
 import graft.queries.{CoverageQueries, CurationQueries, LlmQueries, MediaQueries, PipelineQueries, Q}
 
@@ -1294,25 +1294,18 @@ object SparkEntry {
   // pandas DataFrame.corr / SQL corr()).
   private val qA3 = Q("a3_corr_matrix",
     (s, d) => {
-      val filled = resampled(s, d, 10, jan1, jan8, 300)
-      val a = filled.select(col("bucket"), col("user_id").as("i"),
-        col("value").as("va"))
-      val b = filled.select(col("bucket"), col("user_id").as("j"),
-        col("value").as("vb"))
-      a.join(b, Seq("bucket")).where(col("i") < col("j"))
-        .groupBy("i", "j")
-        .agg(round(graft.ops.Stats.pearson(col("va"), col("vb")), 6).as("rho"))
+      Corr.pairJoin(resampled(s, d, 10, jan1, jan8, 300))
+        .withColumn("rho", round(col("rho"), 6))
         .transform(Q.sortedSmall(_, "i", "j"))
     },
     Some(ffillSqlCte(10, jan1, jan8, 300) + corrSqlTail()))
 
-  /** Shared oracle tail for the corr-matrix tiers (pair-join form —
-    * DuckDB's `corr` is itself pairwise-complete, so it oracles both).
-    */
-  /** The corr-matrix oracle tail over the `filled` CTE, with the
-    * rounding scale a real parameter — callers used to string-replace
-    * the rounded expression, which would silently no-op (grading 6 dp
-    * against a 4 dp result) if this snippet were ever reformatted.
+  /** The corr-matrix oracle tail over the `filled` CTE, shared by the
+    * pair-join and one-pass tiers (DuckDB's `corr` is itself
+    * pairwise-complete, so it oracles both). The rounding scale is a
+    * real parameter: a string-replaced rounded expression would silently
+    * no-op (grading 6 dp against a 4 dp result) if this snippet were
+    * ever reformatted.
     */
   private[graft] def corrSqlTail(scale: Int = 6): String =
     s""" SELECT a.user_id AS i, b.user_id AS j,
@@ -1320,24 +1313,6 @@ object SparkEntry {
         FROM filled a JOIN filled b
           ON a.bucket = b.bucket AND a.user_id < b.user_id
         GROUP BY 1, 2 ORDER BY i, j"""
-
-  /** The wide one-pass panel: (sorted distinct series ids, one k-wide
-    * Array[Double] row per bucket, NaN = missing) — the input shape of
-    * [[graft.functions.CorrMatrixAgg]]. Shared by the a3 one-pass tiers
-    * and the wide graph-edge builder (g4). The key set (k ids —
-    * dimension metadata, not data) is collected from the CACHED
-    * bucketed prefix, not from a second raw tick scan (which would
-    * dominate at the 100 TB posture and maintain the filter predicate
-    * twice) and not from the filled grid either — the metadata job
-    * should not pay the grid join + ffill window, which materialize
-    * inside the consumer's own first action instead.
-    */
-  private[graft] def widePanel(s: SparkSession, d: String, nUsers: Int,
-      a: Long, b: Long, step: Long): (Seq[Long], DataFrame) = {
-    val (bucketed, filled) = resampledParts(s, d, nUsers, a, b, step)
-    val users = sortedUsers(bucketed)
-    (users, panelOf(filled, users))
-  }
 
   /** Sorted distinct series ids of a long-form panel relation —
     * dimension metadata (k ids), collected from the panel itself (its
@@ -1354,15 +1329,7 @@ object SparkEntry {
       .as[Long].collect().sorted.toSeq
   }
 
-  /** 0-based index of series id `c` in the sorted universe `users`,
-    * join-free: array_position over the id seq is O(k) per row, so it
-    * suits pair-sized relations (pruned edges, a k-series pair set),
-    * not tick-sized ones.
-    */
-  private[graft] def vidOf(users: Seq[Long], c: Column): Column =
-    (array_position(typedLit(users), c) - 1).cast("int")
-
-  /** The per-bucket k-wide vector assembly of [[widePanel]], factored
+  /** The per-bucket k-wide vector assembly of [[Corr.widePanel]], factored
     * out so any long-form panel RELATION — resampleFfill's cached
     * output, or the bucketed lake table s15 materializes — feeds the
     * same chain. When the source table is bucketed by `bucket`, the
@@ -1423,144 +1390,14 @@ object SparkEntry {
     (entries, vals)
   }
 
-  /** The one-pass co-moment tier off an assembled wide panel: every
-    * pair's rho from ONE exact integer co-moment aggregate
-    * ([[graft.functions.CorrMatrixAgg]] — any merge order, same bits),
-    * ids and 0-based vids mapped join-free via
-    * `typedLit` over the sorted id seq. `maxParts` bounds the partial
-    * buffers the final merge sees (merge cost scales with partitions,
-    * not rows).
-    */
-  private[graft] def onePassEdges(panel: DataFrame, users: Seq[Long],
-      maxParts: Int): DataFrame =
-    panel
-      .coalesce(maxParts)
-      .agg(graft.functions.CorrMatrix.corrMatrix(users.size)(col("vals"))
-        .as("cells"))
-      .select(explode(col("cells")).as("c"))
-      .select(element_at(typedLit(users), col("c.i") + 1).as("i"),
-        element_at(typedLit(users), col("c.j") + 1).as("j"),
-        col("c.i").as("ii"), col("c.j").as("jj"),
-        col("c.rho").as("rho"))
-
-  /** Width ceiling for the one-pass co-moment tier: the UDAF's partial
-    * buffer is ~6k² longs (~12 MB at k=500, ~110 MB at
-    * k=1500); past that the buffer serialization/merge dominates and
-    * the LSH pair-pruned tier wins (SCALE.md's corr tier table).
-    */
-  private[graft] val OnePassMaxK = 1500
-
-  /** The shared correlation consumer of [[widePanel]], with the tier
-    * switch made automatic: correlation pairs over the [a, b) resampled
-    * panel, tier chosen by the measured cost model —
-    *
-    *   - k ≤ `onePassMaxK`: the one-pass co-moment UDAF (every pair,
-    *     exact; co-moment state crosses the one shuffle);
-    *   - k > `onePassMaxK`: the LSH pair-pruned tier
-    *     ([[graft.ops.CorrPrune]]) — `roundThenFilter` is REQUIRED
-    *     there as the caller's declaration that a thresholded result
-    *     is acceptable (an unthresholded full matrix at that width is
-    *     the pair-join tier, a deliberate non-goal of this entry
-    *     point). The emitted pair set is the LSH candidates (recall
-    *     governed by the band geometry below), each with its exact
-    *     Pearson from the vector verify
-    *     ([[graft.ops.CorrPrune.candidateRhoVectors]]).
-    *
-    * `roundThenFilter = Some((scale, t))` applies
-    * `round(rho, scale) >= t` INSIDE the selector, in exactly that
-    * order and in BOTH tiers, and emits the ROUNDED rho — so a
-    * caller's DuckDB oracle can mirror it verbatim, the result is
-    * identical on either side of the ceiling, and the pruned tier's
-    * vid mapping and downstream sort only ever see the
-    * threshold-survivor edges (the unfiltered candidate set never
-    * leaves the tier). The pruned branch also registers a cache on the
-    * filtered pre-vid survivors: its plan re-reads shared subtrees
-    * (the band-bucket self-join), where the one-pass branch is linear
-    * and a cache would only cost (both measured — Q.sortedSmall's
-    * scaladoc). With `roundThenFilter = None` (one-pass tier only)
-    * every pair is emitted with its exact unrounded rho.
-    *
-    * Output columns either way: `i`, `j` (series USER ids, i < j),
-    * `ii`, `jj` (0-based vids — the position in the sorted id set, the
-    * graph consumers' vertex index), `rho`. Both branches are
-    * join-free on the output path (the id/index maps are `typedLit`
-    * expressions over the dimension-sized sorted id seq), so the g4
-    * plan gate — no Inner join anywhere — holds through the selector.
-    *
-    * LSH geometry of the pruned tier: pinned to the fixture geometry,
-    * `A3dBands` × `A3dBits` = 8 bands × 5 bits (32 buckets), the one
-    * a3e's oracle regenerates. Random (uncorrelated) pairs collide in
-    * a band with probability 2^-bits, so expected noise candidates ≈
-    * bands·k²/2^(bits+1) ≈ k²/8 here — fine at the fixture k=300, but
-    * ~500k junk pairs for the verify at k=2000. At width `bits` must
-    * scale to ≈ log₂(k·bands) so noise stays O(k) and the verify cost
-    * tracks TRUE structure; SCALE.md's r16 vector-tier run
-    * (Correlation matrices) records the k=2000, bits=11 setting and
-    * its numbers.
-    */
-  private[graft] def panelRho(s: SparkSession, d: String, nUsers: Int,
-      a: Long, b: Long, step: Long,
-      roundThenFilter: Option[(Int, Double)] = None,
-      onePassMaxK: Int = OnePassMaxK): (Seq[Long], DataFrame) = {
-    val nBuckets = (b - a) / step
-    val (users, panel) = widePanel(s, d, nUsers, a, b, step)
-    val k = users.size
-    def rounded(df: DataFrame): DataFrame = roundThenFilter match {
-      case Some((scale, t)) =>
-        df.withColumn("rho", round(col("rho"), scale))
-          .where(col("rho") >= t)
-      case None => df
-    }
-    val edges =
-      if (k <= onePassMaxK)
-        rounded(onePassEdges(panel, users,
-          graft.ops.Relational.boundedPartitions(nBuckets, 256)))
-      else {
-        require(roundThenFilter.nonEmpty,
-          s"k=$k exceeds the one-pass ceiling $onePassMaxK and no " +
-            "threshold was given: the pruned tier needs one")
-        // the filled panel is cached by resampleFfill, so this second
-        // derivation reuses the same in-memory relation widePanel built
-        val p = resampled(s, d, nUsers, a, b, step)
-          .withColumn("pos", ((col("bucket") - a) / step + 1).cast("int"))
-        // the vector verify contracts the panel to one compact row per
-        // series and joins candidates against it — no panel broadcast
-        // in the cluster shape, where size-based broadcasts are gone
-        // and only hints remain (PlanGuardSpec pins it at
-        // autoBroadcastJoinThreshold=-1)
-        val rho = graft.ops.CorrPrune.candidateRhoVectors(p, "user_id",
-          "pos", "value", dims = nBuckets.toInt, bands = A3dBands,
-          bits = A3dBits)
-        // round-then-filter BELOW the vid map, then a registered cache
-        // on the handful of survivors: the candidate plan's band-bucket
-        // self-join re-reads shared subtrees, which the cache pays for
-        // once (2.2 s vs 5.4 s measured on a3d's identical core at
-        // sf0.1 — Q.sortedSmall's scaladoc), and a caller's total-order
-        // sort then reads the cached edges instead of re-running the
-        // pruned plan
-        val survivors = graft.ops.Time.registerCached(rounded(rho).cache())
-        // vid mapping paid only on the threshold-pruned edge set this
-        // tier exists to keep small
-        survivors
-          .select(col("i"), col("j"), vidOf(users, col("i")).as("ii"),
-            vidOf(users, col("j")).as("jj"), col("rho"))
-      }
-    (users, edges)
-  }
-
   // A3 tier iii (SURVEY §2.9/§7): the one-pass pairwise-complete co-moment
   // UDAF — exact integer co-moment state crosses the shuffle instead of
   // k² rows per bucket (see [[graft.functions.CorrMatrixAgg]]).
   private val qA3b = Q("a3b_corr_onepass",
     (s, d) => {
-      val (users, panel) = widePanel(s, d, 10, jan1, jan8, 300)
-      val k = users.size
-      panel.agg(graft.functions.CorrMatrix.corrMatrix(k)(col("vals"))
-          .as("cells"))
-        .select(explode(col("cells")).as("c"))
-        .select(element_at(typedLit(users), col("c.i") + 1).as("i"),
-          element_at(typedLit(users), col("c.j") + 1).as("j"),
-          round(col("c.rho"), 6).as("rho"))
+      val (users, panel) = Corr.widePanel(s, d, 10, jan1, jan8, 300)
+      Corr.cellRows(Corr.onePass(panel, users), users)
+        .select(col("i"), col("j"), round(col("rho"), 6).as("rho"))
         .orderBy("i", "j")
     },
     Some(ffillSqlCte(10, jan1, jan8, 300) + corrSqlTail()))
@@ -1573,15 +1410,13 @@ object SparkEntry {
   // buffer is O(k²) longs, which caps this tier near k≈1-2k series;
   // beyond that the pair-join tier with pair-pruning wins again — both
   // stay exposed.
-  // Goes through the automatic tier selector [[panelRho]]: at fixture
-  // widths (k ≤ 500) it resolves to the one-pass UDAF — the coalesce
-  // before the agg (merge cost scales with partitions, not rows) and
-  // the element_at id mapping live in the selector now. PlanGuardSpec
-  // pins both the narrow-side plan (co-moment aggregate, no pair join)
-  // and the forced wide-side plan (LSH bucket join).
+  // Goes through the automatic tier selector [[Corr.panelRho]]: at
+  // fixture widths (k ≤ 500) it resolves to the one-pass UDAF.
+  // PlanGuardSpec pins both the narrow-side plan (co-moment aggregate,
+  // no pair join) and the forced wide-side plan (LSH bucket join).
   private val qA3c = Q("a3c_corr_onepass_wide",
     (s, d) => {
-      val (_, edges) = panelRho(s, d, 500, jan1, jan3, 600)
+      val (_, edges) = Corr.panelRho(s, d, 500, jan1, jan3, 600)
       edges
         // 4 dp, not 6: with ~11k-125k pairs (sf0.01-sf0.1), two correct
         // engines accumulating
@@ -1603,27 +1438,18 @@ object SparkEntry {
   // series (Pearson = cosine of centered vectors; the sign test
   // n·Σs·xq − S·Σs is pure long arithmetic, so the DuckDB oracle
   // regenerates identical buckets), then the exact Pearson vector verify
-  // (CorrPrune.candidateRhoVectors: one pos-ordered vector per series,
-  // the pearson_arrays kernel per candidate pair, no panel broadcast)
+  // (Corr.pruned: one pos-ordered vector per series, the
+  // pearson_arrays kernel per candidate pair, no panel broadcast)
   // and the ρ ≥ 0.5 keep. 4-dp rounding before the threshold for the
   // same boundary-density reason as a3c.
-  private val A3dBands = 8
-  private val A3dBits = 5
   private val qA3d = Q("a3d_corr_pruned",
-    (s, d) => {
+    (s, d) =>
       // resampleFfill caches the filled panel; the pos projection on top
       // is trivial, so both consumers (bucketing + the per-series
       // vectors) read the cache
-      val panel = resampled(s, d, 300, jan1, jan2, 600)
-        .withColumn("pos",
-          ((col("bucket") - jan1) / 600 + 1).cast("int"))
-      graft.ops.CorrPrune
-        .candidateRhoVectors(panel, "user_id", "pos", "value",
-          dims = 144, bands = A3dBands, bits = A3dBits)
-        .select(col("i"), col("j"), round(col("rho"), 4).as("rho"))
-        .where(col("rho") >= 0.5)
-        .transform(Q.sortedSmall(_, "i", "j"))
-    },
+      Corr.pruned(resampled(s, d, 300, jan1, jan2, 600), jan1, 600,
+          dims = 144, roundThenFilter = (4, 0.5))
+        .transform(Q.sortedSmall(_, "i", "j")),
     a3dOracleSql)
 
   /** a3d's DuckDB mirror — shared with [[qA3e]] and [[qA3f]]: the
@@ -1646,8 +1472,8 @@ object SparkEntry {
           CASE WHEN (CAST(concat('0x',
               substr(md5(band || ':' || bit || ':' || p), 1, 15)) AS BIGINT)
               & 1) = 1 THEN 1 ELSE -1 END AS s
-        FROM (SELECT unnest(range($A3dBands)) AS band) bb
-        CROSS JOIN (SELECT unnest(range($A3dBits)) AS bit) tt
+        FROM (SELECT unnest(range(${Corr.A3dBands})) AS band) bb
+        CROSS JOIN (SELECT unnest(range(${Corr.A3dBits})) AS bit) tt
         CROSS JOIN (SELECT unnest(range(144)) AS p) pp),
       cproj AS (
         SELECT x.user_id, pl.band, pl.bit,
@@ -1674,16 +1500,16 @@ object SparkEntry {
   // A3 tier switch, wide side ON THE ORACLE GATE: the same pruned
   // search as a3d, reached through the automatic selector with the
   // one-pass ceiling forced below k — so the driver's correctness gate
-  // grades panelRho's wide branch end to end, not just its spec. The oracle
-  // is a3d's verbatim (the selector hands identical geometry to
-  // CorrPrune: 300 series, 144 grid positions, 8 bands × 5 bits, and
+  // grades Corr.panelRho's wide branch end to end, not just its spec.
+  // The oracle is a3d's verbatim (the selector hands identical geometry
+  // to Corr.pruned: 300 series, 144 grid positions, 8 bands × 5 bits, and
   // the round(rho,4) >= 0.5 keep now rides INSIDE the selector in the
   // oracle's exact round-then-filter order). sortedOnce on top: the
   // selector's pruned branch already caches its survivors, so the sort
   // reads a handful of cached edges.
   private val qA3e = Q("a3e_corr_auto_pruned",
     (s, d) => {
-      val (_, edges) = panelRho(s, d, 300, jan1, jan2, 600,
+      val (_, edges) = Corr.panelRho(s, d, 300, jan1, jan2, 600,
         roundThenFilter = Some((4, 0.5)), onePassMaxK = 1)
       edges.select("i", "j", "rho")
         .transform(Q.sortedOnce(_, "i", "j"))

@@ -5,7 +5,7 @@ import scala.util.{Failure, Success, Try}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.Catalog
-import graft.ops.{Exact, Time}
+import graft.ops.{Corr, Exact, Time}
 import graft.sources.Sinks
 
 /** One window's outcome in the export loop (reference exporter's
@@ -218,23 +218,16 @@ object Flagship {
     import org.apache.spark.sql.functions.{struct, transform}
     val windows = sessionWindows(openSec, closeSec, windowSec)
     val setup = Try {
-      val (users, panel) = graft.SparkEntry.widePanel(spark, sfDir,
+      val (users, panel) = Corr.widePanel(spark, sfDir,
         maxUsers, openSec, closeSec, freqSec)
-      val k = users.size
       val nBuckets = (closeSec - openSec) / freqSec
       // one row per window: the UDAF's cell ARRAY, kept un-exploded —
       // the per-window write below hands each row straight to the dense
-      // square-CSV writer (ids = the shared sorted universe), so the
-      // old explode → per-window id-collect → mirror-union → regroup
-      // path is gone from the loop entirely
-      val cells = panel
-        .coalesce(graft.ops.Relational.boundedPartitions(nBuckets, 256))
-        .withColumn("win",
-          lit(openSec) + ((col("bucket") - openSec) / windowSec)
-            .cast("long") * windowSec)
-        .groupBy("win")
-        .agg(graft.functions.CorrMatrix.corrMatrix(k)(col("vals"))
-          .as("cells"))
+      // square-CSV writer (ids = the shared sorted universe)
+      val win = lit(openSec) +
+        ((col("bucket") - openSec) / windowSec).cast("long") * windowSec
+      val cells = Corr.onePass(panel, users, Some(win.as("win")),
+          Some(graft.ops.Relational.boundedPartitions(nBuckets, 256)))
         .select(col("win"), transform(col("cells"), c =>
           struct(c.getField("i").as("i"), c.getField("j").as("j"),
             round(c.getField("rho"), 6).as("rho"))).as("cells"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.{Catalog, SparkEntry}
+import graft.ops.Corr
 import graft.ops.Exact.davg
 import graft.sources.Sinks
 
@@ -28,18 +29,11 @@ object PipelineQueries {
   // pipeline.Flagship.runWideAtWidth (e1b's plan, tested in FlagshipSpec).
   private val qE1F = Q("e1_flagship",
     (s, d) => {
-      val filled = SparkEntry.resampled(s, d, 8, open930, close1600, 300)
-      val a = filled.select(col("bucket"), col("user_id").as("i"),
-        col("value").as("va"))
-      val b = filled.select(col("bucket"), col("user_id").as("j"),
-        col("value").as("vb"))
-      a.join(b, Seq("bucket")).where(col("i") < col("j"))
-        .withColumn("win_start",
-          expr(s"$open930 + ((bucket - $open930) div 7200) * 7200"))
-        .withColumn("win_end",
-          least(col("win_start") + 7200, lit(close1600)))
-        .groupBy("win_start", "win_end", "i", "j")
-        .agg(round(graft.ops.Stats.pearson(col("va"), col("vb")), 6).as("rho"))
+      val winStart = expr(s"$open930 + ((bucket - $open930) div 7200) * 7200")
+      Corr.pairJoin(SparkEntry.resampled(s, d, 8, open930, close1600, 300),
+          winStart.as("win_start"),
+          least(winStart + 7200, lit(close1600)).as("win_end"))
+        .withColumn("rho", round(col("rho"), 6))
         .transform(Q.sortedSmall(_, "win_start", "i", "j"))
     },
     Some(SparkEntry.ffillSqlCte(8, open930, close1600, 300) +
@@ -82,8 +76,7 @@ object PipelineQueries {
       val jan1 = SparkEntry.jan1
       val jan3 = SparkEntry.jan3
       val winSec = 86400L
-      val (users, panel) = SparkEntry.widePanel(s, d, 500, jan1, jan3, 600)
-      val k = users.size
+      val (users, panel) = Corr.widePanel(s, d, 500, jan1, jan3, 600)
       // Partial-buffer bound: each partition holds windows×~12 MB of
       // integer co-moment state, so uncoalesced 32 partitions would
       // serialize ~770 MB into the merge — but the merge is pure 128-bit
@@ -97,17 +90,11 @@ object PipelineQueries {
       // BigInteger chain it replaced measured ~0.4 s of this query,
       // SCALE.md).
       val nBuckets = (jan3 - jan1) / 600
-      panel
-        .coalesce(graft.ops.Relational.boundedPartitions(nBuckets, 64))
-        .withColumn("win", ((col("bucket") - jan1) / winSec).cast("long"))
-        .groupBy("win")
-        .agg(graft.functions.CorrMatrix.corrMatrix(k)(col("vals"))
-          .as("cells"))
-        .select(col("win"), explode(col("cells")).as("c"))
-        .select(col("win"),
-          element_at(typedLit(users), col("c.i") + 1).as("i"),
-          element_at(typedLit(users), col("c.j") + 1).as("j"),
-          col("c.rho").as("rho"))
+      val cells = Corr.onePass(panel, users,
+        Some(((col("bucket") - jan1) / winSec).cast("long").as("win")),
+        Some(graft.ops.Relational.boundedPartitions(nBuckets, 64)))
+      Corr.cellRows(cells, users, col("win"))
+        .select("win", "i", "j", "rho")
         // sortedOnce: linear panel→UDAF→explode child, no reuse (Q.scala)
         .transform(Q.sortedOnce(_, "win", "i", "j"))
     },
@@ -227,21 +214,15 @@ object PipelineQueries {
   private val qS6w = Q("s6_wide_corr_roundtrip",
     (s, d) => {
       val filled = SparkEntry.resampled(s, d, 8, open930, close1600, 300)
-      val a = filled.select(col("bucket"), col("user_id").as("i"),
-        col("value").as("va"))
-      val b = filled.select(col("bucket"), col("user_id").as("j"),
-        col("value").as("vb"))
       val users = SparkEntry.sortedUsers(filled)
       // the pair set folded into the square writer's one cells row:
       // ids become indexes into the sorted universe (the filled grid
       // holds a row per bucket per user, so at k >= 2 every id appears
       // in some pair)
-      val cells = a.join(b, Seq("bucket")).where(col("i") < col("j"))
-        .groupBy("i", "j")
-        .agg(round(graft.ops.Stats.pearson(col("va"), col("vb")), 6)
-          .as("rho"))
-        .agg(collect_list(struct(SparkEntry.vidOf(users, col("i")).as("i"),
-          SparkEntry.vidOf(users, col("j")).as("j"), col("rho")))
+      val cells = Corr.pairJoin(filled)
+        .withColumn("rho", round(col("rho"), 6))
+        .agg(collect_list(struct(Corr.vidOf(users, col("i")).as("i"),
+          Corr.vidOf(users, col("j")).as("j"), col("rho")))
           .as("cells"))
       val out = graft.sources.Materialize.path(d, "s6_wide_matrix")
       Sinks.writeWideMatrixCsvDense(cells, users, out)
@@ -274,16 +255,13 @@ object PipelineQueries {
     (s, d) => {
       val jan1 = SparkEntry.jan1
       val jan3 = SparkEntry.jan3
-      val (users, panel) = SparkEntry.widePanel(s, d, 500, jan1, jan3, 600)
-      val k = users.size
+      val (users, panel) = Corr.widePanel(s, d, 500, jan1, jan3, 600)
       val nBuckets = (jan3 - jan1) / 600
       // the UDAF's single cells row goes STRAIGHT to the square-CSV
       // writer (ids are already known = users, i/j stay indexes);
       // rounding happens here so the file carries the graded 4-dp text
-      val cells = panel
-        .coalesce(graft.ops.Relational.boundedPartitions(nBuckets, 256))
-        .agg(graft.functions.CorrMatrix.corrMatrix(k)(col("vals"))
-          .as("cells"))
+      val cells = Corr.onePass(panel, users, maxParts =
+          Some(graft.ops.Relational.boundedPartitions(nBuckets, 256)))
         .select(transform(col("cells"), c =>
           struct(c.getField("i").as("i"), c.getField("j").as("j"),
             round(c.getField("rho"), 4).as("rho"))).as("cells"))
@@ -372,7 +350,7 @@ object PipelineQueries {
       }
       val users = SparkEntry.sortedUsers(filled)
       // The round-robin repartition's job is NOT update parallelism —
-      // onePassEdges' coalesce(boundedPartitions(288, 256)) = 1 runs
+      // the coalesce(boundedPartitions(288, 256)) = 1 below runs
       // the UDAF update single-task ON PURPOSE (A/B'd: maxParts=32
       // parallelizes the 36M-pair update but merges 32 × ~10 MB
       // co-moment buffers, 3.3 s vs 1.8 s; same trade the r11
@@ -383,10 +361,11 @@ object PipelineQueries {
       // The repartition is the stage barrier that keeps the data-sized
       // part parallel, and it moves only the ASSEMBLED matrix stream
       // (288 k-wide vector rows, ~1 MB), not the scanned ticks.
-      SparkEntry.onePassEdges(
-          SparkEntry.panelOf(filled, users)
-            .repartition(s.sparkContext.defaultParallelism), users,
-          graft.ops.Relational.boundedPartitions((jan3 - jan1) / 600, 256))
+      val panel = SparkEntry.panelOf(filled, users)
+        .repartition(s.sparkContext.defaultParallelism)
+      Corr.cellRows(Corr.onePass(panel, users, maxParts = Some(
+          graft.ops.Relational.boundedPartitions((jan3 - jan1) / 600, 256))),
+          users)
         .select(col("i"), col("j"), round(col("rho"), 4).as("rho"))
         .transform(Q.sortedOnce(_, "i", "j"))
     },
@@ -507,13 +486,9 @@ object PipelineQueries {
     (s, d) => {
       val (bucketed, filled) = SparkEntry.resampledParts(s, d, 10,
         SparkEntry.jan1, SparkEntry.jan8, 300)
-      val a = filled.select(col("bucket"), col("user_id").as("ui"),
-        col("value").as("va"))
-      val b = filled.select(col("bucket"), col("user_id").as("uj"),
-        col("value").as("vb"))
-      val pairs = a.join(b, Seq("bucket")).where(col("ui") < col("uj"))
-        .groupBy("ui", "uj")
-        .agg(round(graft.ops.Stats.pearson(col("va"), col("vb")), 6).as("weight"))
+      val pairs = Corr.pairJoin(filled)
+        .select(col("i").as("ui"), col("j").as("uj"),
+          round(col("rho"), 6).as("weight"))
         .where(col("weight") > 0)
       // vid lookup built from the collected series universe (the g3/g4
       // idiom — vertex ids are dimension metadata, same bound as
@@ -643,19 +618,16 @@ object PipelineQueries {
       // scale shape at every width). The UDAF's 0-based index into the
       // sorted vertex dimension IS the vid (tickers.index(src),
       // pyg_graphs.py:90-94), so the label→index join costs nothing.
-      val (users, panel) = SparkEntry.widePanel(s, d, 10, jan1, jan15, 300)
-      val k = users.size
-      val e = graft.ops.Time.registerCached(panel
-        .withColumn("win", expr(s"(bucket - $jan1) div $winSec"))
-        .groupBy("win")
-        .agg(graft.functions.CorrMatrix.corrMatrix(k)(col("vals"))
-          .as("cells"))
-        .select(col("win"), explode(col("cells")).as("c"))
-        .select(col("win"), col("c.i").cast("long").as("src"),
-          col("c.j").cast("long").as("dst"),
-          round(col("c.rho"), 6).as("w"))
-        .where(col("w") > 0)
-        .cache())
+      val (users, panel) = Corr.widePanel(s, d, 10, jan1, jan15, 300)
+      val cells = Corr.onePass(panel, users,
+        Some(expr(s"(bucket - $jan1) div $winSec").as("win")))
+      val e = graft.ops.Time.registerCached(
+        Corr.cellRows(cells, users, col("win"))
+          .select(col("win"), col("ii").cast("long").as("src"),
+            col("jj").cast("long").as("dst"),
+            round(col("rho"), 6).as("w"))
+          .where(col("w") > 0)
+          .cache())
       import s.implicits._
       val v = users.zipWithIndex
         .map { case (u, i) => (u, i.toLong) }.toDF("user_id", "vid")
@@ -808,7 +780,7 @@ object PipelineQueries {
       // deliver (LSH recall at rho ≈ 0 is near zero) — past the
       // ceiling the selector must refuse loudly rather than silently
       // truncate the edge set
-      val (_, edges) = SparkEntry.panelRho(s, d, 500, jan1, jan3, 600)
+      val (_, edges) = Corr.panelRho(s, d, 500, jan1, jan3, 600)
       // both edge directions from ONE pass over the cells: each kept
       // pair explodes to its two orientations inline, so the old
       // cache + self-union (which scanned the edge set twice and

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, Trigger}
 import graft.Catalog
+import graft.ops.Corr
 
 /** Structured Streaming surface (SURVEY §2.10). The reference is
   * batch-only; its closest streaming analog is the `taq_chunks.py` main
@@ -117,12 +118,12 @@ object Streams {
     *      (avg of simultaneous ticks — A1's dedup-mean);
     *   2. re-group by the same bucket window (via `window_time`):
     *      assemble the k-wide panel row, missing series as NaN — the
-    *      streaming [[graft.SparkEntry.widePanel]] row;
-    *   3. tumbling `span` windows over the panel rows: the one-pass
-    *      co-moment UDAF ([[graft.functions.CorrMatrixAgg]]) — the SAME
-    *      aggregate the batch tiers run, its exact integer buffer now
-    *      carried as streaming state (integer merges, so the batch
-    *      order cannot change a bit of the result).
+    *      streaming [[graft.ops.Corr.widePanel]] row;
+    *   3. tumbling `span` windows over the panel rows:
+    *      [[graft.ops.Corr.onePass]] keyed by the span window — the SAME
+    *      co-moment aggregate the batch tiers run, its exact integer
+    *      buffer now carried as streaming state (integer merges, so the
+    *      batch order cannot change a bit of the result).
     *
     * ONE deliberate semantic difference from the batch flagship: no
     * forward-fill. The batch panel ffills gaps before correlating
@@ -149,11 +150,11 @@ object Streams {
     * bucket cells + open panel rows + one O(k²) co-moment buffer per
     * open span, all evicted at watermark. The series universe `users`
     * is a broadcast-sized dimension fixed upstream, exactly like the
-    * batch widePanel's sorted id set.
+    * batch `Corr.widePanel`'s sorted id set.
     *
     * Output rows: (window_start epoch sec, i, j: series ids, rho).
     *
-    * Scale note: the panel-row assembly uses widePanel's dense
+    * Scale note: the panel-row assembly uses `Corr.widePanel`'s dense
     * sorted-entries fast path — when a bucket observed every series,
     * its user_id-sorted entry list is already in `users` order and the
     * row is O(k log k); buckets with MISSING series (the normal
@@ -229,7 +230,6 @@ object Streams {
   private[graft] def windowedCorrPlan(events: DataFrame, users: Seq[Long],
       bucket: String, span: String,
       watermark: Option[String]): DataFrame = {
-    val k = users.size
     val src = events.where(col("user_id").isin(users: _*))
     val marked = watermark.fold(src)(w => src.withWatermark("ts", w))
     val cells = marked
@@ -249,16 +249,11 @@ object Streams {
       .groupBy(window(window_time(col("window")), bucket).as("bw"))
       .agg(entries.as("es"))
       .select(col("bw"), vals(col("es")).as("vals"))
-    panel
-      .groupBy(window(window_time(col("bw")), span).as("hw"))
-      .agg(graft.functions.CorrMatrix.corrMatrix(k)(col("vals"))
-        .as("cells"))
-      .select(unix_timestamp(col("hw.start")).as("window_start"),
-        explode(col("cells")).as("c"))
-      .select(col("window_start"),
-        element_at(typedLit(users), col("c.i") + 1).as("i"),
-        element_at(typedLit(users), col("c.j") + 1).as("j"),
-        col("c.rho").as("rho"))
+    val spans = Corr.onePass(panel, users,
+      Some(window(window_time(col("bw")), span).as("hw")))
+    Corr.cellRows(spans, users,
+        unix_timestamp(col("hw.start")).as("window_start"))
+      .select("window_start", "i", "j", "rho")
   }
 
   /** Event-time sessionization: per-user sessions that close after

@@ -18,6 +18,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Catalog, Sessions, SparkEntry}
+import graft.ops.Corr
 
 object Profile {
 
@@ -95,17 +96,15 @@ object Profile {
   private def phasesA3d(s: SparkSession, d: String): Unit = {
     val jan1 = SparkEntry.jan1
     val jan3 = SparkEntry.sec("2024-01-03T00:00:00")
-    def panel = SparkEntry.resampled(s, d, 300, jan1, jan3, 600)
-      .withColumn("pos", ((col("bucket") - jan1) / 600 + 1).cast("int"))
-    phase(s, "panel")(panel.count())
+    def filled = SparkEntry.resampled(s, d, 300, jan1, jan3, 600)
+    phase(s, "panel")(filled.count())
     phase(s, "candidates") {
-      graft.ops.CorrPrune.corrCandidates(panel, "user_id", "pos",
-        "value", 288, 8, 5).count()
+      graft.ops.CorrPrune.corrCandidates(filled.withColumn("pos",
+          ((col("bucket") - jan1) / 600 + 1).cast("int")), "user_id", "pos",
+        "value", 288, Corr.A3dBands, Corr.A3dBits).count()
     }
-    phase(s, "candidates+verify") {
-      graft.ops.CorrPrune.candidateRhoVectors(panel, "user_id", "pos",
-        "value", 288, 8, 5)
-    }
+    phase(s, "candidates+verify+keep")(
+      Corr.pruned(filled, jan1, 600, 288, (4, 0.5)))
   }
 
   /** The a3e selector route vs the direct a3d query. */
@@ -113,12 +112,12 @@ object Profile {
     val jan1 = SparkEntry.jan1
     val jan2 = SparkEntry.jan2
     phase(s, "widePanel users only") {
-      val (users, _) = SparkEntry.widePanel(s, d, 300, jan1, jan2, 600)
+      val (users, _) = Corr.widePanel(s, d, 300, jan1, jan2, 600)
       println(s"[p]   k=${users.size}")
     }
     phase(s, "a3d full")(SparkEntry.queries("a3d_corr_pruned")(s, d))
     phase(s, "panelRho pruned edges") {
-      SparkEntry.panelRho(s, d, 300, jan1, jan2, 600,
+      Corr.panelRho(s, d, 300, jan1, jan2, 600,
         roundThenFilter = Some((4, 0.5)), onePassMaxK = 1)._2
     }
     phase(s, "a3e full")(
@@ -148,20 +147,26 @@ object Profile {
     phase(s, "d4 full")(SparkEntry.queries("d4_ngram_jaccard")(s, d))
   }
 
+  /** The one-pass tier's long-form edges at the a3c/s6b/s15 partition
+    * bound.
+    */
+  private def onePassEdges(panel: DataFrame, users: Seq[Long],
+      nBuckets: Long): DataFrame =
+    Corr.cellRows(Corr.onePass(panel, users, maxParts =
+      Some(graft.ops.Relational.boundedPartitions(nBuckets, 256))), users)
+
   /** s6b's chain: panel, UDAF, square-CSV write, read-back. */
   private def phasesS6b(s: SparkSession, d: String): Unit = {
     val jan1 = SparkEntry.jan1
     val jan3 = SparkEntry.sec("2024-01-03T00:00:00")
     phase(s, "resample+users collect") {
-      val (users, _) = SparkEntry.widePanel(s, d, 500, jan1, jan3, 600)
+      val (users, _) = Corr.widePanel(s, d, 500, jan1, jan3, 600)
       println(s"[p]   k=${users.size}")
     }
-    phase(s, "panel rows")(
-      SparkEntry.widePanel(s, d, 500, jan1, jan3, 600)._2)
+    phase(s, "panel rows")(Corr.widePanel(s, d, 500, jan1, jan3, 600)._2)
     phase(s, "panel+udaf edges") {
-      val (users, panel) = SparkEntry.widePanel(s, d, 500, jan1, jan3, 600)
-      SparkEntry.onePassEdges(panel, users,
-        graft.ops.Relational.boundedPartitions((jan3 - jan1) / 600, 256))
+      val (users, panel) = Corr.widePanel(s, d, 500, jan1, jan3, 600)
+      onePassEdges(panel, users, (jan3 - jan1) / 600)
     }
     phase(s, "a3c full")(
       SparkEntry.queries("a3c_corr_onepass_wide")(s, d))
@@ -184,8 +189,7 @@ object Profile {
     }
     phase(s, "panel+udaf edges") {
       val users = SparkEntry.sortedUsers(tbl)
-      SparkEntry.onePassEdges(SparkEntry.panelOf(tbl, users), users,
-        graft.ops.Relational.boundedPartitions((jan3 - jan1) / 600, 256))
+      onePassEdges(SparkEntry.panelOf(tbl, users), users, (jan3 - jan1) / 600)
     }
     phase(s, "s15 full")(
       SparkEntry.queries("s15_bucketed_panel")(s, d))

@@ -1,8 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.ops.Corr
 
-/** The automatic a3c↔a3d width-tier switch ([[SparkEntry.panelRho]]):
+/** The automatic a3c↔a3d width-tier switch ([[Corr.panelRho]]):
   * one entry point, tier chosen by k against the one-pass buffer
   * ceiling. Tested on BOTH sides of the threshold on the same fixture
   * panel — the narrow side must be the exact one-pass co-moment plan,
@@ -16,7 +17,7 @@ class PanelRhoSpec extends SparkTestBase {
   private val jan2 = SparkEntry.jan2
 
   test("below the ceiling: one-pass tier, complete pair set, vid map") {
-    val (users, edges) = SparkEntry.panelRho(spark, sf, 50, jan1, jan2, 600)
+    val (users, edges) = Corr.panelRho(spark, sf, 50, jan1, jan2, 600)
     val k = users.size
     val p = planOf(edges)
     assert(p.toLowerCase.contains("corrmatrixagg"), p)
@@ -39,8 +40,8 @@ class PanelRhoSpec extends SparkTestBase {
     // recall floor below vacuous (the spec asserts non-vacuity)
     val sf01 = "/root/testdata/sf0.01"
     val (users, exact) =
-      SparkEntry.panelRho(spark, sf01, 100, jan1, jan2, 600)
-    val (usersP, pruned) = SparkEntry.panelRho(spark, sf01, 100, jan1,
+      Corr.panelRho(spark, sf01, 100, jan1, jan2, 600)
+    val (usersP, pruned) = Corr.panelRho(spark, sf01, 100, jan1,
       jan2, 600, roundThenFilter = Some((4, 0.5)), onePassMaxK = 1)
     assert(users == usersP)
     val pl = planOf(pruned)
@@ -83,8 +84,8 @@ class PanelRhoSpec extends SparkTestBase {
 
   test("roundThenFilter is tier-independent: the one-pass branch " +
     "applies the same round-then-filter order") {
-    val (_, exact) = SparkEntry.panelRho(spark, sf, 50, jan1, jan2, 600)
-    val (_, filtered) = SparkEntry.panelRho(spark, sf, 50, jan1, jan2,
+    val (_, exact) = Corr.panelRho(spark, sf, 50, jan1, jan2, 600)
+    val (_, filtered) = Corr.panelRho(spark, sf, 50, jan1, jan2,
       600, roundThenFilter = Some((4, 0.5)))
     // still the one-pass plan (k well under the default ceiling)
     assert(planOf(filtered).toLowerCase.contains("corrmatrixagg"))
@@ -108,10 +109,10 @@ class PanelRhoSpec extends SparkTestBase {
     val sf01 = "/root/testdata/sf0.01"
     val dec8 = 1701993600L
     val (users, exact) =
-      SparkEntry.panelRho(spark, sf01, 150, dec8, jan2, 16L,
+      Corr.panelRho(spark, sf01, 150, dec8, jan2, 16L,
         roundThenFilter = Some((4, 0.5)))
     val (usersP, pruned) =
-      SparkEntry.panelRho(spark, sf01, 150, dec8, jan2, 16L,
+      Corr.panelRho(spark, sf01, 150, dec8, jan2, 16L,
         roundThenFilter = Some((4, 0.5)), onePassMaxK = 1)
     assert(users == usersP)
     assert(planOf(exact).toLowerCase.contains("corrmatrixagg"))
@@ -129,7 +130,7 @@ class PanelRhoSpec extends SparkTestBase {
 
   test("above the ceiling without a threshold refuses loudly") {
     val e = intercept[IllegalArgumentException] {
-      SparkEntry.panelRho(spark, sf, 50, jan1, jan2, 600,
+      Corr.panelRho(spark, sf, 50, jan1, jan2, 600,
         onePassMaxK = 1)
     }
     assert(e.getMessage.contains("one-pass ceiling"))

@@ -128,7 +128,7 @@ class FlagshipSpec extends SparkTestBase {
 
     // expected long form from the same public pieces (panel + UDAF),
     // computed independently of the export loop
-    val (users, panel) = graft.SparkEntry.widePanel(spark, d, 1000,
+    val (users, panel) = graft.ops.Corr.widePanel(spark, d, 1000,
       open, close, 600)
     val k = users.size
     val expected = panel
