@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Add, BloomFilterMightContain, Cast, Divide, Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType}
 import graft.functions.WinnowFingerprint
 
@@ -29,6 +30,11 @@ import graft.functions.WinnowFingerprint
   *    probe is codegen'd. False positives are the contract — callers
   *    that need exactness verify survivors with an exact join, which is
   *    the standard sketch-then-verify shape (see d9_bloom_decontaminate).
+  *  - `exact_micros6(v)`, `exact_micros_to_double(hi_sum, lo_sum)`,
+  *    `exact_round6(x)` — the micro-unit kernel behind
+  *    [[graft.ops.Exact]]'s `dsum`/`davg` ([[graft.functions.ExactMicros]]).
+  *    `exact_micros6` takes the session's ANSI setting when it is built,
+  *    as Spark's own cast does.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -178,6 +184,31 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         require(args.length == 1,
           "optimizer_fence(expr) takes exactly 1 argument")
         graft.functions.OptimizerFence(args(0))
+      }))
+    ext.injectFunction((
+      new FunctionIdentifier("exact_micros6"),
+      new ExpressionInfo(classOf[graft.functions.ExactMicros6].getName,
+        "exact_micros6"),
+      (args: Seq[Expression]) => {
+        require(args.length == 1, "exact_micros6(v) takes 1 argument")
+        graft.functions.ExactMicros6(args(0), SQLConf.get.ansiEnabled)
+      }))
+    ext.injectFunction((
+      new FunctionIdentifier("exact_micros_to_double"),
+      new ExpressionInfo(classOf[graft.functions.ExactMicrosToDouble].getName,
+        "exact_micros_to_double"),
+      (args: Seq[Expression]) => {
+        require(args.length == 2,
+          "exact_micros_to_double(hi_sum, lo_sum) takes 2 arguments")
+        graft.functions.ExactMicrosToDouble(args(0), args(1))
+      }))
+    ext.injectFunction((
+      new FunctionIdentifier("exact_round6"),
+      new ExpressionInfo(classOf[graft.functions.ExactRound6].getName,
+        "exact_round6"),
+      (args: Seq[Expression]) => {
+        require(args.length == 1, "exact_round6(x) takes 1 argument")
+        graft.functions.ExactRound6(args(0))
       }))
     ext.injectFunction((
       new FunctionIdentifier("bloom_build"),

@@ -563,7 +563,7 @@ object SparkEntry {
   // watermark past the grid end — every cell finalizes and the oracle
   // is the batch w1's ffill CTE verbatim, no prefix cut. Grading this
   // on the oracle is only possible because the stream's bucket mean
-  // replicates Exact.davg's decimal arithmetic bit-for-bit
+  // runs Exact.davg's micro-unit kernel, bit-for-bit the batch mean
   // (Streams.FfillState). Re-runs are idempotent: the staged source
   // and checkpoint are per-JVM, so a second drain moves nothing and
   // reads back the same cells.

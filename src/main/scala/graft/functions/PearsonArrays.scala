@@ -1,6 +1,6 @@
 package graft.functions
 
-import java.math.{BigDecimal => JBigDecimal, BigInteger, RoundingMode}
+import java.math.{BigDecimal => JBigDecimal, BigInteger}
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -19,10 +19,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * aggregate's when-guard nulls out; slots past the shorter array —
   * zip padding — are skipped the same way); each contributing value is
   * quantized with the aggregate's own `round(x·1e6, 0)` double
-  * semantics (`BigDecimal.valueOf(d).setScale(0, HALF_UP)`, the exact
-  * Spark `Round` implementation for doubles); the co-moments accumulate
-  * as EXACT 128-bit integers (Math.multiplyHigh + carry — the decimal
-  * path's exactness without its per-slot object churn); and the finish
+  * semantics (HALF_UP of `Double.toString(d)` at scale 0, the exact
+  * Spark `Round` implementation for doubles, on [[ExactMicros.halfUp]]);
+  * the co-moments accumulate as EXACT 128-bit integers
+  * (Math.multiplyHigh + carry — the decimal path's exactness without
+  * its per-slot object churn); and the finish
   * is the same `cov/√(vx·vy)` double expression behind the same
   * `n ≥ 2 ∧ vx > 0 ∧ vy > 0` guard, with each exact co-moment converted
   * by `BigDecimal.doubleValue` — the conversion `cast(decimal as
@@ -134,8 +135,11 @@ object PearsonArrays {
 
   /** Spark `round(x·1e6, 0)` for doubles, then the integral result as a
     * long — the aggregate form's exact quantization (`Round` for
-    * DoubleType is `BigDecimal.valueOf(d).setScale(0, HALF_UP)`; the
-    * follow-on cast to DECIMAL(38,0) is exact on an integral double).
+    * DoubleType is HALF_UP of `Double.toString` at scale 0; the follow-on
+    * cast to DECIMAL(38,0) is exact on an integral double). The rounding
+    * is [[ExactMicros.halfUp]] at scale 0, the kernel's one HALF_UP core:
+    * plain double arithmetic unless x·1e6 sits on or near a .5 tie or
+    * past 2⁴⁸, where the core falls back to `BigDecimal`.
     * Non-finite input and out-of-envelope magnitudes fail loudly here
     * (the aggregate form fails the same way at its ANSI cast — Spark's
     * `Round` passes NaN/Infinity through for doubles, and the decimal
@@ -148,8 +152,7 @@ object PearsonArrays {
       throw new ArithmeticException(
         s"pearson_arrays: non-finite input $x — outside the exact " +
           "envelope (the aggregate form fails at its ANSI decimal cast)")
-    val q = JBigDecimal.valueOf(scaled).setScale(0, RoundingMode.HALF_UP)
-      .doubleValue().toLong
+    val q = ExactMicros.halfUp(scaled, 0)
     if (q > MaxQuantized || q < -MaxQuantized)
       throw new ArithmeticException(
         s"pearson_arrays: input $x quantizes past 2^53, where the " +

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, Trigger}
 import graft.Catalog
+import graft.functions.ExactMicros
 import graft.ops.Corr
 
 /** Structured Streaming surface (SURVEY §2.10). The reference is
@@ -429,14 +430,19 @@ object Streams {
   case class FfillCell(bucket: Long, user_id: Long, value: Option[Double])
 
   /** Per-series carry-forward state of [[resampleFfillStream]]:
-    * open-bucket partial DECIMAL sums/counts (bounded by
-    * watermark/step in-flight buckets per key), the next grid bucket
-    * to emit, and the last observed bucket-mean to carry forward. The
-    * sums are java.math.BigDecimal so the emitted bucket mean can
-    * replicate the batch dedup-mean ([[graft.ops.Exact.davg]] —
-    * decimal(18,6) sum, double divide, HALF_UP 6 dp round) bit-for-bit
-    * — which is what lets the streamed grid be graded on the SAME
-    * DuckDB oracle as the batch w1 (the w16 gate row).
+    * open-bucket partial sums/counts (bounded by watermark/step
+    * in-flight buckets per key), the next grid bucket to emit, and the
+    * last observed bucket-mean to carry forward. Each sum is the exact
+    * scale-6 total of its ticks' micro-units
+    * ([[graft.functions.ExactMicros.micros6]], the batch
+    * [[graft.ops.Exact.davg]]'s per-tick kernel), held as a
+    * java.math.BigDecimal — the field types checkpoints were written
+    * with, so existing checkpoints still resume. A bucket whose ticks
+    * were all NaN/±Inf has a count but no sum: its mean is NULL, as in
+    * batch, and the fill carries the previous mean across it. That
+    * replicates the batch dedup-mean bit-for-bit — which is what lets
+    * the streamed grid be graded on the SAME DuckDB oracle as the batch
+    * w1 (the w16 gate row).
     */
   private[streaming] case class FfillState(
       pendSum: Map[Long, java.math.BigDecimal], pendCnt: Map[Long, Long],
@@ -444,13 +450,12 @@ object Streams {
 
   /** Exactly Spark's `round(try_divide(sum(value cast decimal(18,6))
     * cast double, count), 6)` — Exact.davg's arithmetic, re-played on
-    * the streamed partials: double→decimal via BigDecimal.valueOf
-    * (Double.toString semantics, Spark's Cast) with HALF_UP at scale
-    * 6, exact decimal sum, double division, HALF_UP 6 dp round.
+    * the streamed partials: the exact decimal sum's `doubleValue` (what
+    * `cast(decimal as double)` returns), double division, then the
+    * kernel's HALF_UP 6 dp round.
     */
   private def davgOf(sum: java.math.BigDecimal, n: Long): Double =
-    java.math.BigDecimal.valueOf(sum.doubleValue() / n)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+    ExactMicros.round6(sum.doubleValue() / n)
 
   /** Advance one series' filled grid to the watermark: ingest this
     * batch's ticks into open-bucket partials, then emit every grid
@@ -468,7 +473,8 @@ object Streams {
   private def ffillAdvance(u: Long,
       rows: Iterator[(Long, java.sql.Timestamp, Double)],
       state: GroupState[FfillState],
-      startSec: Long, endSec: Long, stepSec: Long): Iterator[FfillCell] = {
+      startSec: Long, endSec: Long, stepSec: Long,
+      ansi: Boolean): Iterator[FfillCell] = {
     val wmSec = state.getCurrentWatermarkMs() / 1000L
     val hadState = state.exists
     val st = state.getOption.getOrElse(
@@ -484,10 +490,14 @@ object Streams {
       // and the final cell would stay open forever)
       val b = startSec + ((sec - startSec) / stepSec) * stepSec
       if (sec < endSec && b >= st.nextBucket) {
-        val vd = java.math.BigDecimal.valueOf(v)
-          .setScale(6, java.math.RoundingMode.HALF_UP)
-        pendSum = pendSum.updated(b,
-          pendSum.getOrElse(b, java.math.BigDecimal.ZERO).add(vd))
+        // a NaN/±Inf tick is a NULL addend that still counts, as in
+        // batch; |v| ≥ 1e12 fails (under ANSI) as the batch cast does
+        val q = ExactMicros.micros6(v, ansi)
+        if (q != ExactMicros.NullMicros)
+          pendSum = pendSum.updated(b,
+            pendSum.getOrElse(b, java.math.BigDecimal.ZERO)
+              .add(new java.math.BigDecimal(
+                java.math.BigInteger.valueOf(q), 6)))
         pendCnt = pendCnt.updated(b, pendCnt.getOrElse(b, 0L) + 1L)
       }
     }
@@ -511,7 +521,7 @@ object Streams {
     var last = st.lastValue
     while (bkt <= frontier) {
       pendCnt.get(bkt).foreach { n =>
-        last = Some(davgOf(pendSum(bkt), n))
+        pendSum.get(bkt).foreach(sum => last = Some(davgOf(sum, n)))
         pendSum -= bkt
         pendCnt -= bkt
       }
@@ -553,6 +563,7 @@ object Streams {
       s"grid start $startSec is not aligned to step $stepSec")
     val spark = events.sparkSession
     import spark.implicits._
+    val ansi = spark.conf.get("spark.sql.ansi.enabled").toBoolean
     events
       // lower bound only: a pre-start tick would mis-bucket (integer
       // division toward zero), but ticks PAST the grid end stay in the
@@ -567,7 +578,7 @@ object Streams {
         org.apache.spark.sql.streaming.OutputMode.Append(),
         GroupStateTimeout.EventTimeTimeout()) {
         (u, rows, state) =>
-          ffillAdvance(u, rows, state, startSec, endSec, stepSec)
+          ffillAdvance(u, rows, state, startSec, endSec, stepSec, ansi)
       }
   }
 

@@ -73,7 +73,7 @@ object PlanAudit {
     sb.append("at 100 TB, not just one that passes.\n")
     headline.foreach { name =>
       sb.append(s"\n## $name\n\n```\n")
-      sb.append(formatted(SparkEntry.queries(name)(spark, sfDir)))
+      sb.append(formatted(spark, SparkEntry.queries(name)(spark, sfDir)))
       sb.append("```\n")
     }
     Files.writeString(Paths.get(out), sb.toString)
@@ -86,16 +86,23 @@ object PlanAudit {
     Files.createDirectories(outDir)
     names.foreach { name =>
       Files.writeString(outDir.resolve(s"${name}_$suffix.txt"),
-        formatted(SparkEntry.queries(name)(spark, sfDir)))
+        formatted(spark, SparkEntry.queries(name)(spark, sfDir)))
       println(s"[plan-audit] wrote ${name}_$suffix.txt")
     }
   }
 
   /** explain("formatted") with the per-process scratch root normalized,
     * so Location lines are stable across regenerations and real plan
-    * deltas diff cleanly.
+    * deltas diff cleanly. The caches the query built are then dropped
+    * (as Verify and Bench do between queries), so the next query plans
+    * against the tables, not against this one's cached relations — a
+    * query's plan is the same in a long audit as audited alone.
     */
-  private def formatted(df: DataFrame): String =
-    df.queryExecution.explainString(FormattedMode)
+  private def formatted(spark: SparkSession, df: DataFrame): String =
+    try df.queryExecution.explainString(FormattedMode)
       .replace(graft.sources.Materialize.root, "<scratch>")
+    finally {
+      graft.ops.Time.unpersistPanels()
+      spark.catalog.clearCache()
+    }
 }

@@ -422,6 +422,43 @@ class StreamsSpec extends StreamRecipes {
     assert(after.size == 12, s"cell count changed: ${after.size}")
   }
 
+  test("resampleFfillStream: a NaN tick is a NULL addend that still " +
+    "counts, as in batch — [x, NaN] and NaN-only buckets equal " +
+    "resampleFfill") {
+    val in = tmp("graft_ffill_nan_in_")
+    val base = 1700006400L
+    val step = 600L
+    val end = base + 3600L // 6-bucket grid
+    val nan = Double.NaN
+    stageFile(in, "d0.parquet", base * 1000, Seq(
+      evRow(1L, base + 10, 3L, 1.5), evRow(2L, base + 20, 3L, nan), // [x, NaN]
+      evRow(3L, base + 610, 3L, nan), // NaN only, after a mean: carried over
+      evRow(4L, base + 1210, 3L, 2.25),
+      evRow(5L, base + 610, 4L, nan), // NaN only, before any mean: NULL
+      evRow(6L, base + 1810, 4L, 4.0)))
+    // a post-grid tick of another series drives the watermark past the
+    // grid end; it never enters the grid
+    stageFile(in, "d1.parquet", base * 1000 + 1000,
+      Seq(evRow(99L, end + 120, 8L, 5.0)))
+    val out = tmp("graft_ffill_nan_out_")
+    val ck = tmp("graft_ffill_nan_ck_")
+    Streams.resampleFfillStream(spark, in, out, ck, base, end, step,
+      watermark = "1 minute")
+    def cells(df: org.apache.spark.sql.DataFrame) =
+      df.select("bucket", "user_id", "value").collect().map(r =>
+        (r.getLong(0), r.getLong(1),
+          if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toSet
+    val ev = spark.read.schema(graft.Catalog.schemas("events")).parquet(in)
+    val batch = cells(graft.ops.Time.resampleFfill(spark, ev, "user_id",
+      "ts", "value", base, end, step, graft.ops.Exact.davg(col("value"))))
+    def series(u: Long, vs: Option[Double]*) =
+      vs.zipWithIndex.map { case (v, k) => (base + k * step, u, v) }
+    assert(batch == (series(3L, Some(0.75), Some(0.75), Some(2.25),
+      Some(2.25), Some(2.25), Some(2.25)) ++
+      series(4L, None, None, None, Some(4.0), Some(4.0), Some(4.0))).toSet)
+    assert(cells(spark.read.parquet(out)) == batch)
+  }
+
   test("filled continuous corr: ffill stream chained into " +
     "windowedCorrFromCells equals the batch FILLED chain") {
     checkFilledCorrChain()
