@@ -63,8 +63,9 @@ object Bench {
     * inflate the one reading ≥2× the sweep floor deterministically,
     * which is exactly why the same lines came back suspect in every
     * sweep and no retime could heal them: the detector was reading
-    * allocator state and calling it load. CanaryProbe measured the
-    * residue's shape — first reading after t10/g1 0.43-0.46 s, third
+    * allocator state and calling it load. The residue's measured shape
+    * (SCALE.md, round 15's canary adjudication in the measurement
+    * notes) — first reading after t10/g1 0.43-0.46 s, third
     * ~0.14 s, while ambient load elevates ALL readings — so the min of
     * three is immune to the residue yet still catches every sustained
     * spike that could actually have contaminated a multi-second 3-run
@@ -72,9 +73,9 @@ object Bench {
     * Costs ~0.5-1 s per query — the price of a contamination signal
     * that means what it claims.
     */
-  /** One GC'd micro-canary reading — shared with
-    * [[graft.tools.CanaryProbe]], which calibrates this exact workload
-    * (a probe measuring a different job would calibrate nothing).
+  /** One GC'd micro-canary reading: the workload whose post-query decay
+    * SCALE.md's measurement notes (round 15's canary adjudication)
+    * calibrated.
     */
   private[graft] def microCanaryReading(
       spark: org.apache.spark.sql.SparkSession): Double = {

@@ -12,10 +12,10 @@ import org.apache.spark.sql.functions.udaf
 case class CorrCell(i: Int, j: Int, rho: Option[Double])
 
 /** One-pass pairwise-complete Pearson correlation matrix aggregate — the
-  * engine's replacement for the O(k²)-shuffle self-join tier of the
-  * flagship query (reference `data.corr()`,
-  * TAQpipeline/correlation_matrix_exporter.py:163,209), and the matrix
-  * twin of the [[PearsonArrays]] kernel.
+  * engine's one full-matrix kernel (reference `data.corr()`,
+  * TAQpipeline/correlation_matrix_exporter.py:163,209) behind every
+  * `graft.ops.Corr.onePass` consumer, in place of an O(k²)-row bucket
+  * self-join, and the matrix twin of the [[PearsonArrays]] kernel.
   *
   * Input: one k-wide `Array[Double]` panel row per time bucket, NaN =
   * missing (a primitive array: the O(k²) loop indexes it millions of
@@ -57,8 +57,8 @@ case class CorrCell(i: Int, j: Int, rho: Option[Double])
   *
   * Scale shape: the panel is shuffled once (groupBy bucket to form
   * rows); map-side partials of ~12 longs per pair (~12 MB at k=500)
-  * cross the merge — co-moment state, not the k² rows per bucket of
-  * the self-join tier. The O(k²) buffer caps this tier near k≈1-2000;
+  * cross the merge — co-moment state, not the k² rows per bucket a
+  * self-join would shuffle. The O(k²) buffer caps this tier near k≈1-2000;
   * beyond that the LSH pair-pruned tier wins.
   */
 class CorrMatrixAgg(k: Int)

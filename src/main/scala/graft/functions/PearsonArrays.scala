@@ -9,36 +9,31 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Pairwise-complete Pearson over TWO POSITION-ALIGNED double arrays as
-  * a native Catalyst expression — the scalar twin of the
-  * [[graft.ops.Stats.pearson]] aggregate, for consumers that hold both
+  * a native Catalyst expression — the scalar twin of the one-pass
+  * [[CorrMatrixAgg]] matrix aggregate, for consumers that hold both
   * series of a pair in array columns (the pruned-corr vector verify,
   * where each candidate pair carries its two series vectors).
   *
-  * Arithmetic is IDENTICAL to the aggregate form, slot by slot: a slot
-  * contributes iff both sides are non-null (exactly the rows the
-  * aggregate's when-guard nulls out; slots past the shorter array —
-  * zip padding — are skipped the same way); each contributing value is
-  * quantized with the aggregate's own `round(x·1e6, 0)` double
-  * semantics (HALF_UP of `Double.toString(d)` at scale 0, the exact
-  * Spark `Round` implementation for doubles, on [[ExactMicros.halfUp]]);
-  * the co-moments accumulate as EXACT 128-bit integers
-  * (Math.multiplyHigh + carry — the decimal path's exactness without
-  * its per-slot object churn); and the finish
-  * is the same `cov/√(vx·vy)` double expression behind the same
-  * `n ≥ 2 ∧ vx > 0 ∧ vy > 0` guard, with each exact co-moment converted
-  * by `BigDecimal.doubleValue` — the conversion `cast(decimal as
-  * double)` performs. Within [[graft.ops.Stats.pearson]]'s documented
-  * 38-digit envelope the two forms are bit-identical (pinned by
-  * CorrPruneSpec and the a3f oracle), and NEITHER can silently
-  * diverge outside it: the aggregate fails loudly under ANSI at its
-  * cast/sum overflow, while this kernel throws at its own boundaries —
-  * non-finite input, a quantized magnitude past 2^53 (where the
+  * Semantics, slot by slot: a slot contributes iff both sides are
+  * non-null (slots past the shorter array — zip padding — are skipped
+  * the same way); each contributing value is quantized with
+  * `round(x·1e6, 0)` double semantics (HALF_UP of `Double.toString(d)`
+  * at scale 0, the exact Spark `Round` implementation for doubles, on
+  * [[ExactMicros.halfUp]]); the co-moments accumulate as EXACT 128-bit
+  * integers (Math.multiplyHigh + carry — a decimal sum's exactness
+  * without its per-slot object churn); and the finish is the
+  * `cov/√(vx·vy)` double expression behind the `n ≥ 2 ∧ vx > 0 ∧
+  * vy > 0` guard, with each exact co-moment converted by
+  * `BigDecimal.doubleValue` — the conversion `cast(decimal as double)`
+  * performs. So it is bit-identical to the same formula written as a
+  * DECIMAL(38,0) Catalyst aggregate over a bucket self-join (the test
+  * tree's `PearsonReference`, pinned by PearsonArraysSpec and
+  * CorrPruneSpec), and to [[CorrMatrixAgg]]'s cells (CorrMatrixExactSpec).
+  * Envelope: it never diverges silently — it throws on non-finite
+  * input, on a quantized magnitude past 2^53 (|x| > ~9×10⁹, where the
   * double round-trip stops being lossless, so exactness would be a
-  * lie), or a 128-bit co-moment overflow (add128 traps signed wrap;
-  * reachable only at ~10⁶⁺ maximal-magnitude slots, far past where
-  * the aggregate already failed). Everything the aggregate's envelope
-  * admits at realistic slot counts, this kernel admits and computes
-  * with the same exact 128-bit sums and BigInteger finish.
+  * lie), and on a 128-bit co-moment overflow (add128 traps signed wrap;
+  * reachable only at ~10⁶⁺ maximal-magnitude slots).
   *
   * Why a custom expression: built-ins can only correlate two array
   * columns by exploding candidate·dims slots into rows, and EVERY
@@ -88,13 +83,10 @@ object PearsonArrays {
   /** Quantized-magnitude ceiling: 2^53 — the EXACTNESS boundary, not a
     * wrap-safety margin (add128 traps its own overflow). Past 2^53 the
     * `doubleValue().toLong` round-trip below is lossy (a double cannot
-    * hold every integer), so the kernel could no longer claim the
-    * aggregate's exact arithmetic — it rejects loudly instead. This
-    * admits everything [[graft.ops.Stats.pearson]]'s envelope admits at
-    * any realistic slot count (the aggregate's 38-digit sums overflow
-    * under ANSI far below n·(2^53)² anyway); only |x| > ~9×10⁹
-    * pre-quantize is refused, where the aggregate still computes for
-    * tiny n but this kernel could only do so inexactly.
+    * hold every integer), so the kernel could no longer claim exact
+    * arithmetic — it rejects loudly instead: |x| > ~9×10⁹ pre-quantize
+    * is refused. (A DECIMAL(38,0) form would compute there for tiny n,
+    * but its 38-digit sums overflow far below n·(2^53)² anyway.)
     */
   private val MaxQuantized = 1L << 53
 
@@ -134,14 +126,14 @@ object PearsonArrays {
   }
 
   /** Spark `round(x·1e6, 0)` for doubles, then the integral result as a
-    * long — the aggregate form's exact quantization (`Round` for
+    * long — the decimal reference form's exact quantization (`Round` for
     * DoubleType is HALF_UP of `Double.toString` at scale 0; the follow-on
     * cast to DECIMAL(38,0) is exact on an integral double). The rounding
     * is [[ExactMicros.halfUp]] at scale 0, the kernel's one HALF_UP core:
     * plain double arithmetic unless x·1e6 sits on or near a .5 tie or
     * past 2⁴⁸, where the core falls back to `BigDecimal`.
     * Non-finite input and out-of-envelope magnitudes fail loudly here
-    * (the aggregate form fails the same way at its ANSI cast — Spark's
+    * (the decimal form fails the same way at its ANSI cast — Spark's
     * `Round` passes NaN/Infinity through for doubles, and the decimal
     * cast then throws): silent saturation via `toLong`, or an add128
     * wrap from admitted-but-huge values, can never happen.
@@ -151,7 +143,7 @@ object PearsonArrays {
     if (!java.lang.Double.isFinite(scaled))
       throw new ArithmeticException(
         s"pearson_arrays: non-finite input $x — outside the exact " +
-          "envelope (the aggregate form fails at its ANSI decimal cast)")
+          "envelope (a decimal cast fails there too under ANSI)")
     val q = ExactMicros.halfUp(scaled, 0)
     if (q > MaxQuantized || q < -MaxQuantized)
       throw new ArithmeticException(
@@ -162,8 +154,8 @@ object PearsonArrays {
   }
 
   /** One primitive pass over the aligned pair; null when fewer than two
-    * complete slots or either variance is exactly zero — the aggregate
-    * form's guard, on the same exact integers.
+    * complete slots or either variance is exactly zero — the decimal
+    * reference form's guard, on the same exact integers.
     */
   def rho(a: ArrayData, b: ArrayData): java.lang.Double = {
     val n = math.min(a.numElements(), b.numElements())
@@ -325,8 +317,9 @@ object PearsonArrays {
     * relies on (its `CAST(CAST(v AS VARCHAR) AS DOUBLE)` is the same
     * correctly-rounded integer→double conversion). Null when either
     * variance is exactly zero (constant side) — undefined, as the
-    * aggregate's guard. Callers ensure cnt ≥ 2. [[finishRhoSlots]] is
-    * the allocation-free fast form of the same chain.
+    * decimal reference form's guard. Callers ensure cnt ≥ 2.
+    * [[finishRhoSlots]] is the allocation-free fast form of the same
+    * chain.
     */
   private[functions] def finishRho(cnt: Long, sxB: BigInteger,
       syB: BigInteger, sxxB: BigInteger, syyB: BigInteger,
@@ -337,7 +330,7 @@ object PearsonArrays {
     if (vxB.signum <= 0 || vyB.signum <= 0) return null
     // BigDecimal.doubleValue is the correctly-rounded conversion that
     // cast(decimal as double) performs — keep it for bit parity with
-    // the aggregate form
+    // the decimal reference form
     val cov = new JBigDecimal(
       nB.multiply(sxyB).subtract(sxB.multiply(syB))).doubleValue()
     val vx = new JBigDecimal(vxB).doubleValue()

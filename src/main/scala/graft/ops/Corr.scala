@@ -12,12 +12,14 @@ import graft.functions.CorrMatrix
   *     over an assembled k-wide panel ([[graft.functions.CorrMatrixAgg]]
   *     — any merge order, same bits), optionally keyed (per window);
   *   - [[pruned]]: the LSH pair-pruned search ([[CorrPrune]]) for panels
-  *     past the one-pass buffer ceiling, thresholded;
-  *   - [[pairJoin]]: the bucket-keyed self-join with the [[Stats.pearson]]
-  *     aggregate — the small-k contrast tier.
+  *     past the one-pass buffer ceiling, thresholded.
   *
-  * Callers keep their own grading: key column, rounding and sort stay at
-  * the call site. [[panelRho]] picks between the first two by width.
+  * Both kernels share one exactness contract: values quantize with
+  * [[graft.functions.PearsonArrays.quantize]] (a non-finite value or
+  * |x| > ~9×10⁹ throws), co-moments are exact 128-bit integers and the
+  * finish is one double chain. Callers keep their own grading: key
+  * column, rounding and sort stay at the call site. [[panelRho]] picks
+  * between the two tiers by width.
   */
 object Corr {
 
@@ -60,10 +62,10 @@ object Corr {
 
   /** 0-based index of series id `c` in the sorted universe `users`,
     * join-free: array_position over the id seq is O(k) per row, so it
-    * suits pair-sized relations (pruned edges, a k-series pair set),
+    * suits pair-sized relations (the pruned branch's survivor edges),
     * not tick-sized ones.
     */
-  def vidOf(users: Seq[Long], c: Column): Column =
+  private def vidOf(users: Seq[Long], c: Column): Column =
     (array_position(typedLit(users), c) - 1).cast("int")
 
   /** The one-pass tier: `coalesce(maxParts)` (the partial buffers the
@@ -116,23 +118,6 @@ object Corr {
     edges.withColumn("rho", round(col("rho"), scale)).where(col("rho") >= t)
   }
 
-  /** The pair-join tier over a long panel (`bucket`, `user_id`,
-    * `value`): the panel joined with itself on bucket (i < j), grouped
-    * by `keys` (expressions over the joined row, e.g. a window of
-    * `bucket`) and the pair, each group's pairwise-complete
-    * [[Stats.pearson]]. Output: the keys, `i`, `j`, unrounded `rho`.
-    * Shuffles k² rows per bucket — the small-k tier.
-    */
-  def pairJoin(filled: DataFrame, keys: Column*): DataFrame = {
-    val a = filled.select(col("bucket"), col("user_id").as("i"),
-      col("value").as("va"))
-    val b = filled.select(col("bucket"), col("user_id").as("j"),
-      col("value").as("vb"))
-    a.join(b, Seq("bucket")).where(col("i") < col("j"))
-      .groupBy(keys ++ Seq(col("i"), col("j")): _*)
-      .agg(Stats.pearson(col("va"), col("vb")).as("rho"))
-  }
-
   /** Correlation pairs over the [a, b) resampled panel of the first
     * `nUsers` series, tier chosen by the measured cost model —
     *
@@ -140,8 +125,8 @@ object Corr {
     *     state crosses the one shuffle);
     *   - k > `onePassMaxK`: [[pruned]] — `roundThenFilter` is REQUIRED
     *     there as the caller's declaration that a thresholded result is
-    *     acceptable (an unthresholded full matrix at that width is the
-    *     pair-join tier, a deliberate non-goal of this selector).
+    *     acceptable (an unthresholded full matrix past the one-pass
+    *     ceiling is a deliberate non-goal of this selector).
     *
     * k is known only after the sorted id collect, so this route runs
     * that metadata job before either tier; [[pruned]] called directly

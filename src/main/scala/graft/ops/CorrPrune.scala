@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * (band, bucket); [[candidateRhoVectors]] then verifies each with the
   * exact pairwise-complete Pearson of the
   * [[graft.functions.PearsonArrays]] kernel (bit-identical to the
-  * [[Stats.pearson]] aggregate), so emitted pairs are exact and only
+  * one-pass matrix aggregate's cells), so emitted pairs are exact and only
   * recall is probabilistic (1 − (1 − p^bits)^bands with p = 1 − θ/π — at
   * ρ ≥ 0.9, θ ≤ 26° and a handful of bands already give ≥ 0.99; choose
   * bands/bits for the target threshold).
@@ -133,8 +133,9 @@ object CorrPrune {
     * candidate-sized relations and k vector rows, never the cell-level
     * panel, and nothing panel-sized is broadcast), and the pair's exact
     * rho comes from ONE call of the [[graft.functions.PearsonArrays]]
-    * kernel — bit-identical to the [[Stats.pearson]] aggregate over the
-    * position join, null slots skipped pairwise, with no slot ever
+    * kernel — bit-identical to an exact decimal Pearson aggregate over
+    * the position join (CorrPruneSpec's reference), null slots skipped
+    * pairwise, with no slot ever
     * inflated into a row (every explode/HOF shape measured µs-scale per
     * slot; the kernel is a JIT-compiled primitive loop).
     *

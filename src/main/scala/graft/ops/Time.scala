@@ -171,9 +171,9 @@ object Time {
     *  - the BUCKETED panel feeds the key-universe collect of wide
     *    consumers and the fill derivation; uncached, Spark scans +
     *    aggregates the tick table twice;
-    *  - the FILLED panel is scanned from two sides by every correlation
-    *    consumer (the i/j pair join); uncached, each side re-runs the
-    *    fill.
+    *  - the FILLED panel is scanned twice by the pruned correlation
+    *    tier (LSH bucketing and the per-series vectors); uncached, each
+    *    scan re-runs the fill.
     * Both cached relations are dimension-sized (≤ grid buckets × keys
     * rows, never tick-sized — this holds at 100 TB of ticks) and are
     * registered for the same lifecycle release.

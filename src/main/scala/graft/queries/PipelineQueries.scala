@@ -24,17 +24,23 @@ object PipelineQueries {
   // resample+ffill for one trading day, 2h tumbling windows anchored at
   // the 09:30 open with the last window clamped to the 16:00 close
   // (correlation_matrix_exporter.py:146-152), correlation matrix per
-  // window. The windows are a derived column: one shuffle, one job. The
-  // per-window square-CSV export of the same matrices is
+  // window. The window is the one-pass aggregate's group key, so every
+  // window's matrix comes from one co-moment aggregate over one panel
+  // shuffle. The per-window square-CSV export of the same matrices is
   // pipeline.Flagship.runWideAtWidth (e1b's plan, tested in FlagshipSpec).
+  // Envelope: a non-finite value or |x| > ~9×10⁹ throws (the one-pass
+  // contract, CorrMatrixAgg).
   private val qE1F = Q("e1_flagship",
     (s, d) => {
       val winStart = expr(s"$open930 + ((bucket - $open930) div 7200) * 7200")
-      Corr.pairJoin(SparkEntry.resampled(s, d, 8, open930, close1600, 300),
-          winStart.as("win_start"),
-          least(winStart + 7200, lit(close1600)).as("win_end"))
-        .withColumn("rho", round(col("rho"), 6))
-        .transform(Q.sortedSmall(_, "win_start", "i", "j"))
+      val (users, panel) = Corr.widePanel(s, d, 8, open930, close1600, 300)
+      Corr.cellRows(Corr.onePass(panel, users, Some(winStart.as("win_start"))),
+          users, col("win_start"))
+        .select(col("win_start"),
+          least(col("win_start") + 7200, lit(close1600)).as("win_end"),
+          col("i"), col("j"), round(col("rho"), 6).as("rho"))
+        // linear panel → UDAF → explode chain: nothing to cache
+        .transform(Q.sortedOnce(_, "win_start", "i", "j"))
     },
     Some(SparkEntry.ffillSqlCte(8, open930, close1600, 300) +
       s""" SELECT $open930 + ((a.bucket - $open930)//7200)*7200 AS win_start,
@@ -55,7 +61,7 @@ object PipelineQueries {
   // one-pass co-moment UDAF keyed BY WINDOW computes every window's
   // full matrix from a single resample shuffle: per window the state is
   // one ~6k²-long buffer (co-moments, not data, cross the
-  // merge — ~12 MB at k=500), where e1's pair-join form would shuffle
+  // merge — ~12 MB at k=500), where a bucket self-join would shuffle
   // windows·buckets·k²/2 rows. Daily windows over two days; every
   // undefined (NaN) pair is graded too.
   //
@@ -210,20 +216,17 @@ object PipelineQueries {
   // hash-compared against the oracle computing the same correlations
   // straight from the ticks. A green row proves the square layout
   // loses nothing: header/index alignment, cell order, and the 6-dp
-  // double text round-trip are all on the graded path.
+  // double text round-trip are all on the graded path. Envelope: the
+  // one-pass contract (a non-finite value or |x| > ~9×10⁹ throws).
   private val qS6w = Q("s6_wide_corr_roundtrip",
     (s, d) => {
-      val filled = SparkEntry.resampled(s, d, 8, open930, close1600, 300)
-      val users = SparkEntry.sortedUsers(filled)
-      // the pair set folded into the square writer's one cells row:
-      // ids become indexes into the sorted universe (the filled grid
-      // holds a row per bucket per user, so at k >= 2 every id appears
-      // in some pair)
-      val cells = Corr.pairJoin(filled)
-        .withColumn("rho", round(col("rho"), 6))
-        .agg(collect_list(struct(Corr.vidOf(users, col("i")).as("i"),
-          Corr.vidOf(users, col("j")).as("j"), col("rho")))
-          .as("cells"))
+      val (users, panel) = Corr.widePanel(s, d, 8, open930, close1600, 300)
+      // the one-pass aggregate's single cells row is the square writer's
+      // input; rho rounds to the graded 6 dp inside the array
+      val cells = Corr.onePass(panel, users)
+        .select(transform(col("cells"), c =>
+          struct(c.getField("i").as("i"), c.getField("j").as("j"),
+            round(c.getField("rho"), 6).as("rho"))).as("cells"))
       val out = graft.sources.Materialize.path(d, "s6_wide_matrix")
       Sinks.writeWideMatrixCsvDense(cells, users, out)
       // schema'd read from the known column order (no inference pass;
@@ -479,14 +482,14 @@ object PipelineQueries {
   // threshold rho > 0 -> label->index vertex join (row_number over the
   // sorted vertex dimension) -> directed edge list both ways
   // (pyg_graphs.py:90-94: edges from adj_df > 0, tickers.index(src)).
-  // This is the small-k pair-join tier (k=10 here); the same edge list
-  // at the reference's real width runs through the one-pass co-moment
-  // aggregate instead — see qG4 below.
+  // The pairs come from the one-pass co-moment aggregate (k=10 here;
+  // a non-finite value or |x| > ~9×10⁹ throws); the same edge list at
+  // the reference's real width goes through the tier selector — qG4.
   private val qG1 = Q("g1_edges",
     (s, d) => {
-      val (bucketed, filled) = SparkEntry.resampledParts(s, d, 10,
+      val (users, panel) = Corr.widePanel(s, d, 10,
         SparkEntry.jan1, SparkEntry.jan8, 300)
-      val pairs = Corr.pairJoin(filled)
+      val pairs = Corr.cellRows(Corr.onePass(panel, users), users)
         .select(col("i").as("ui"), col("j").as("uj"),
           round(col("rho"), 6).as("weight"))
         .where(col("weight") > 0)
@@ -499,7 +502,7 @@ object PipelineQueries {
       // stays the data-sized form (c7's epoch shuffle). Measured at
       // sf0.1: 2.03 → 1.36 s median.
       import s.implicits._
-      val v = SparkEntry.sortedUsers(bucketed).zipWithIndex
+      val v = users.zipWithIndex
         .map { case (u, i) => (u, i.toLong) }.toDF("user_id", "vid")
       // cached: the union consumes e in BOTH edge directions — uncached,
       // the whole corr + vertex-join tree runs twice
@@ -612,10 +615,8 @@ object PipelineQueries {
       val types = Seq("click", "error", "purchase", "signup", "view")
       // per-window edges from the window-keyed one-pass co-moment UDAF
       // (g4's tier): ONE resample shuffle feeds a k-wide panel row per
-      // bucket and co-moment state crosses the merge — never the
-      // per-bucket k² pair self-join (g1 remains the documented small-k
-      // pair-join CONTRAST; this, the composed sample builder, runs the
-      // scale shape at every width). The UDAF's 0-based index into the
+      // bucket and co-moment state crosses the merge — never a
+      // per-bucket k² pair self-join. The UDAF's 0-based index into the
       // sorted vertex dimension IS the vid (tickers.index(src),
       // pyg_graphs.py:90-94), so the label→index join costs nothing.
       val (users, panel) = Corr.widePanel(s, d, 10, jan1, jan15, 300)

@@ -16,7 +16,7 @@ import graft.{Sessions, SparkEntry}
 
 object PlanAudit {
   val headline = Seq(
-    "w1_resample_ffill", "a3_corr_matrix", "a3b_corr_onepass",
+    "w1_resample_ffill", "a3b_corr_onepass",
     "j1_interval_join", "j3_broadcast_lookup", "j5_asof_join",
     "d2_minhash_lsh", "d4_ngram_jaccard", "d5_embedding_neardup",
     "e1_cosine_topk", "e2_ann_lsh", "e3_ann_recall", "e4_ivf_ann",

@@ -1,14 +1,16 @@
 package graft.functions
 
-import graft.SparkTestBase
+import graft.{PearsonReference, SparkTestBase}
 import graft.ops.Stats
 import org.apache.spark.sql.functions._
 
 /** Direct pins for the [[PearsonArrays]] kernel — the scaladoc's
-  * bit-identity claim against the [[Stats.pearson]] aggregate, checked
-  * with `==` on the raw doubles (no tolerance: the kernel's 128-bit
-  * integer co-moments and BigInteger→double finish must reproduce the
-  * decimal aggregate's exact value, not approximate it).
+  * bit-identity claim against the [[PearsonReference.pearson]] decimal
+  * aggregate (the former `Stats.pearson`, which the test names still
+  * call it), checked with `==` on the raw doubles (no tolerance: the
+  * kernel's 128-bit integer co-moments and BigInteger→double finish
+  * must reproduce the decimal aggregate's exact value, not approximate
+  * it).
   */
 class PearsonArraysSpec extends SparkTestBase {
   import spark.implicits._
@@ -28,7 +30,7 @@ class PearsonArraysSpec extends SparkTestBase {
     val k = if (kernel.isNullAt(0)) None else Some(kernel.getDouble(0))
     val rows = xs.zipAll(ys, None, None).map { case (x, y) => (x, y) }
     val agg = rows.toDF("x", "y")
-      .agg(Stats.pearson(col("x"), col("y")).as("rho"))
+      .agg(PearsonReference.pearson(col("x"), col("y")).as("rho"))
       .head()
     val a = if (agg.isNullAt(0)) None else Some(agg.getDouble(0))
     (k, a)

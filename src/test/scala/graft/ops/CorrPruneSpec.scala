@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.SparkTestBase
+import graft.{PearsonReference, SparkTestBase}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -39,14 +39,14 @@ class CorrPruneSpec extends SparkTestBase {
     val b = panel.select(col("key").as("j"), col("pos"), col("value").as("vb"))
     a.join(b, Seq("pos")).where(col("i") < col("j"))
       .groupBy("i", "j")
-      .agg(Stats.pearson(col("va"), col("vb")).as("rho"))
+      .agg(PearsonReference.pearson(col("va"), col("vb")).as("rho"))
       .where(col("rho") >= threshold)
       .select("i", "j").as[(Long, Long)].collect().toSet
   }
 
   // The position-join reference for the vector verify: the exact
-  // Stats.pearson aggregate over the per-pos inner join of the two
-  // series, restricted to corrCandidates. Undefined rho is not a
+  // PearsonReference.pearson aggregate over the per-pos inner join of
+  // the two series, restricted to corrCandidates. Undefined rho is not a
   // result: a zero-overlap pair forms no group, a constant-side pair a
   // null-rho one, and both emit no row.
   private def positionJoinRho(p: DataFrame, dims: Int, bands: Int,
@@ -57,7 +57,7 @@ class CorrPruneSpec extends SparkTestBase {
     CorrPrune.corrCandidates(p, "key", "pos", "value", dims, bands, bits)
       .join(a, Seq("i")).join(b, Seq("j", "pos"))
       .groupBy("i", "j")
-      .agg(Stats.pearson(col("va"), col("vb")).as("rho"))
+      .agg(PearsonReference.pearson(col("va"), col("vb")).as("rho"))
       .where(col("rho").isNotNull)
   }
 

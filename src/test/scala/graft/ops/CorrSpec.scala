@@ -6,12 +6,13 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
-import graft.{SparkEntry, SparkTestBase}
+import graft.{PearsonReference, SparkEntry, SparkTestBase}
 
 /** [[Corr]]'s window-keyed one-pass entry is bit-for-bit independent of
   * how its input is partitioned and of which other windows share the
-  * job — the property every per-window consumer (e1b, g3, the flagship
-  * export, the streaming corr) relies on. The fixture panel has a
+  * job — the property every per-window consumer (e1, e1b, g3, the
+  * flagship export, the streaming corr) relies on — and bit-for-bit
+  * equal to the decimal [[graft.PearsonReference]] pair join. The fixture panel has a
   * no-tick window (the grid day before the first sf0.001 tick: every
   * value missing) and an all-NaN series (an id with no ticks at all).
   */
@@ -104,6 +105,28 @@ class CorrSpec extends SparkTestBase with BeforeAndAfterAll {
       val alone = bits(Corr.onePass(
         p.where(winOf(col("bucket")) === w), users))
       assert(alone == Map(-1L -> cells), s"window $w")
+    }
+  }
+
+  test("window-keyed cells equal the decimal reference pair join bit " +
+    "for bit; the pairs it never forms (all-NaN series) are undefined") {
+    val (users, ref) = reference
+    val joined = PearsonReference.pairJoin(
+        SparkEntry.resampled(spark, sf, 20, a, b, 600),
+        winOf(col("bucket")).as("win"))
+      .collect().map { r =>
+        (r.getLong(0), r.getLong(1), r.getLong(2)) ->
+          (if (r.isNullAt(3)) None
+          else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(3))))
+      }.toMap
+    assert(joined.values.exists(_.nonEmpty), "no defined reference rho")
+    val cells = for ((w, cs) <- ref.toSeq; (i, j, rho) <- cs)
+      yield (w, users(i), users(j)) -> rho
+    val (formed, unformed) = cells.partition(c => joined.contains(c._1))
+    assert(formed.toMap == joined)
+    assert(unformed.nonEmpty)
+    unformed.foreach { case (pair @ (_, _, j), rho) =>
+      assert(j == noTicks && rho.isEmpty, s"unformed pair $pair -> $rho")
     }
   }
 

@@ -1,16 +1,34 @@
 package graft.pipeline
 
-import graft.SparkTestBase
-import graft.ops.{Exact, Stats, Time}
+import graft.{PearsonReference, SparkEntry, SparkTestBase}
+import graft.ops.{Corr, Exact, Time}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** End-to-end goldens with hand-computed constants (SURVEY §5 item 4):
   * tiny synthetic tick series through the full resample→ffill→corr chain.
+  * Each constant grades the engine path (the one-pass co-moment
+  * aggregate behind [[Corr.onePass]]) and the decimal reference
+  * ([[PearsonReference]]) alike.
   */
 class GoldenSpec extends SparkTestBase {
   import spark.implicits._
 
   private def ts(s: Long) = new java.sql.Timestamp(s * 1000L)
+
+  /** (i, j) → rho rounded to 6 dp (None = undefined), by path name. */
+  private def rhoBothWays(filled: DataFrame)
+      : Seq[(String, Map[(Long, Long), Option[Double]])] = {
+    val users = SparkEntry.sortedUsers(filled)
+    val engine = Corr.cellRows(
+      Corr.onePass(SparkEntry.panelOf(filled, users), users), users)
+    val reference = PearsonReference.pairJoin(filled)
+    Seq("engine" -> engine, "reference" -> reference).map { case (n, df) =>
+      n -> df.select(col("i"), col("j"), round(col("rho"), 6)).collect()
+        .map(r => (r.getLong(0), r.getLong(1)) ->
+          (if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toMap
+    }
+  }
 
   test("E1 chain golden: perfectly correlated and anti-correlated series") {
     // user 1 rises 10,20,30; user 2 rises 1,2,3 (rho=+1 with 1);
@@ -22,19 +40,11 @@ class GoldenSpec extends SparkTestBase {
     ).toDF("ts", "user_id", "value")
     val filled = Time.resampleFfill(spark, ticks, "user_id", "ts", "value",
       0, 180, 60, Exact.davg(col("value")))
-    val a = filled.select(col("bucket"), col("user_id").as("i"),
-      col("value").as("va"))
-    val b = filled.select(col("bucket"), col("user_id").as("j"),
-      col("value").as("vb"))
-    val rho = a.join(b, Seq("bucket")).where(col("i") < col("j"))
-      .groupBy("i", "j")
-      .agg(round(Stats.pearson(col("va"), col("vb")), 6).as("rho"))
-      .orderBy("i", "j")
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2)))
-      .toMap
-    assert(rho((1L, 2L)) == 1.0)
-    assert(rho((1L, 3L)) == -1.0)
-    assert(rho((2L, 3L)) == -1.0)
+    rhoBothWays(filled).foreach { case (path, rho) =>
+      assert(rho((1L, 2L)).contains(1.0), path)
+      assert(rho((1L, 3L)).contains(-1.0), path)
+      assert(rho((2L, 3L)).contains(-1.0), path)
+    }
   }
 
   test("E1 chain golden: constant series correlates as NULL, not +-1") {
@@ -44,22 +54,8 @@ class GoldenSpec extends SparkTestBase {
     ).toDF("ts", "user_id", "value")
     val filled = Time.resampleFfill(spark, ticks, "user_id", "ts", "value",
       0, 120, 60, Exact.davg(col("value")))
-    val a = filled.select(col("bucket"), col("user_id").as("i"),
-      col("value").as("va"))
-    val b = filled.select(col("bucket"), col("user_id").as("j"),
-      col("value").as("vb"))
-    val out = a.join(b, Seq("bucket")).where(col("i") < col("j"))
-      .groupBy("i", "j")
-      .agg(Stats.pearson(col("va"), col("vb")).as("rho"))
-      .collect()
-    assert(out.length == 1 && out(0).isNullAt(2))
-  }
-
-  test("one-pass aggregator agrees with the pair-join tier on fixtures") {
-    val e = graft.SparkEntry.queries
-    val pair = e("a3_corr_matrix")(spark, "/root/testdata/sf0.001")
-    val onepass = e("a3b_corr_onepass")(spark, "/root/testdata/sf0.001")
-    assert(pair.exceptAll(onepass).isEmpty &&
-      onepass.exceptAll(pair).isEmpty)
+    rhoBothWays(filled).foreach { case (path, rho) =>
+      assert(rho == Map((1L, 2L) -> None), path)
+    }
   }
 }

@@ -47,7 +47,7 @@ AUDITS = {
     "a3c_corr_onepass_wide": ("filled", "price", [], 4),
     # k=300 one-day grid - also a3e/a3f (all pairs: superset of LSH cands)
     "a3d_corr_pruned": ("filled", "price", [], 4),
-    # k=10 [jan1, jan8) @300s - also a3/g1/g3's small-k tier
+    # k=10 [jan1, jan8) @300s - also a3 (the same query) and g1's grid
     "a3b_corr_onepass": ("filled", "price", [], 6),
     # g4's own grid at 4dp
     "g4_wide_edges": ("filled", "price", [], 4),
